@@ -102,10 +102,10 @@ def _foreign_jvms(own: set[int] = frozenset()) -> list[int]:
     ]
 
 
-def _cpu_calibration() -> float:
-    """Seconds for a fixed single-thread numpy workload (deterministic
-    input, ~0.5 s on a 2024-class core). A host-speed fingerprint:
-    bench totals should be compared across rounds relative to this."""
+def _calib_workload() -> float:
+    """The fixed single-thread numpy loop both calibrations run
+    (deterministic input; numpy dot releases the GIL). Returns the
+    loop's seconds, input construction excluded."""
     import numpy as np
 
     a = np.arange(1_000_000, dtype=np.float64) % 97
@@ -115,13 +115,19 @@ def _cpu_calibration() -> float:
     for _ in range(60):
         acc += float(a @ b)
         a = (a + b) % 97
-    _ = acc
-    return round(time.perf_counter() - t0, 4)
+    return time.perf_counter() - t0
+
+
+def _cpu_calibration() -> float:
+    """Seconds for the calibration workload on one thread (~0.5 s on
+    a 2024-class core). A host-speed fingerprint: bench totals should
+    be compared across rounds relative to this."""
+    return round(_calib_workload(), 4)
 
 
 def _cpu_calibration_parallel() -> float:
-    """Wall seconds for every core running the single-thread workload
-    at once (numpy dot releases the GIL, so threads suffice). On a
+    """Wall seconds for every core running the calibration workload
+    at once (threads suffice: the dot releases the GIL). On a
     healthy exclusive host this ~equals the single-thread figure; a
     larger ratio means parallel throughput is degraded (hypervisor
     steal, frequency capping under all-core load, a noisy neighbor) —
@@ -130,22 +136,10 @@ def _cpu_calibration_parallel() -> float:
     cannot see because it only holds one core."""
     from concurrent.futures import ThreadPoolExecutor
 
-    import numpy as np
-
     n = os.cpu_count() or 1
-
-    def one(_: int) -> float:
-        a = np.arange(1_000_000, dtype=np.float64) % 97
-        b = (a * 31.0 + 7.0) % 89
-        acc = 0.0
-        for _ in range(60):
-            acc += float(a @ b)
-            a = (a + b) % 97
-        return acc
-
     t0 = time.perf_counter()
     with ThreadPoolExecutor(max_workers=n) as ex:
-        list(ex.map(one, range(n)))
+        list(ex.map(lambda _: _calib_workload(), range(n)))
     return round(time.perf_counter() - t0, 4)
 
 
@@ -160,61 +154,6 @@ def _cpu_calibration_parallel() -> float:
 # a new machine class must re-establish the band via
 # SG_PAR_HEALTHY_MAX before its par_band fields mean anything.
 PAR_BAND_HEALTHY_MAX_SEC = 5.0
-
-
-# Healthy-band factor for the in-process Arrow-assembly micro ratio
-# (r14). The r14 evening session isolated a SECOND host-degradation
-# axis the pure-CPU parallel calibration cannot see: a window that
-# stalls syscall/scheduler wakeups (26% system time, 59% idle with 32
-# active tasks; executor run 7003 s vs CPU 182 s) made every
-# JVM<->Python-boundary stage 3-40x slower on byte-identical plans
-# while par_band read HEALTHY. blocks.py's kernel-vs-Arrow micro
-# ratio DOES move with that axis (24.8 measured in the stalled
-# window vs the committed idle reference 11.0, spread 10.5-11.4), so
-# each attempt also measures it and a ratio above ref * this factor
-# classifies the window degraded, retried like a par-degraded one.
-# Only meaningful when the host class matches the committed
-# fingerprint (elsewhere the band reads "unknown" and never blocks).
-ARROW_HEALTHY_MAX_FACTOR = 1.5
-
-
-def arrow_band(ratio: float, ref: float | None) -> str:
-    """Self-describing verdict for the Python-boundary window axis,
-    pure so tests can pin it. ``ref`` None means the running host is
-    a different class than the committed fingerprint (or the
-    fingerprint is unreadable) — the band is then ``unknown``: it
-    neither triggers retries nor penalizes attempt selection."""
-    if ref is None or not (ratio == ratio):  # NaN-safe
-        return "unknown"
-    factor = float(
-        os.environ.get("SG_ARROW_HEALTHY_MAX_FACTOR", ARROW_HEALTHY_MAX_FACTOR)
-    )
-    return "healthy" if ratio <= ref * factor else "degraded"
-
-
-def _arrow_window() -> tuple[float, str]:
-    """(measured micro ratio, band) for this attempt's window. The
-    committed reference applies only when the single-thread host
-    fingerprint matches the committed class (same rule as
-    blocks._micro_ratio_ref); calibration must never block the
-    bench, so any failure reads (nan, unknown)."""
-    try:
-        import json as _json
-
-        from go_integ_spark.functions import blocks
-
-        with open(blocks._CALIB_FINGERPRINT_PATH) as f:
-            fp = _json.load(f)
-        ref = float(fp["micro_ratio_ref"])
-        anchor = float(fp["host_cpu_calib_sec"])
-        tol = float(fp["tolerance"])
-        now = blocks._host_cpu_fingerprint()
-        ratio = blocks._micro_ratio()
-        if not (anchor / tol <= now <= anchor * tol):
-            return (round(ratio, 2), "unknown")
-        return (round(ratio, 2), arrow_band(ratio, ref))
-    except Exception:
-        return (float("nan"), "unknown")
 
 
 def par_band(par_calib_sec: float) -> str:
@@ -412,9 +351,7 @@ MAX_ATTEMPTS = 3
 
 def select_attempt(attempts: list[dict]) -> dict:
     """The attempt the committed artifact records, pure so tests can
-    pin it: uncontended beats contended, then the fewest degraded
-    window axes (par band, and the r14 Arrow/syscall band when the
-    host class is fingerprinted — "unknown" does not penalize);
+    pin it: uncontended beats contended, then a healthy par band;
     ties broken by the faster total. A degraded window only INFLATES
     wall time, so among comparable attempts the fastest is the
     least-disturbed measurement."""
@@ -422,8 +359,7 @@ def select_attempt(attempts: list[dict]) -> dict:
         attempts,
         key=lambda a: (
             int(a["contended"]),
-            int(a["par_band"] != "healthy")
-            + int(a.get("arrow_band") == "degraded"),
+            int(a["par_band"] != "healthy"),
             min(a["totals"]),
         ),
     )
@@ -618,24 +554,16 @@ def main() -> None:
     own: set[int] = set()
     for i in range(MAX_ATTEMPTS):
         par_i = _cpu_calibration_parallel()
-        arrow_i, arrow_band_i = _arrow_window()
         attempt = _one_attempt(sf_dir, ncpus, own)
         attempt["par_calib_sec"] = par_i
         attempt["par_band"] = par_band(par_i)
-        attempt["arrow_ratio"] = arrow_i
-        attempt["arrow_band"] = arrow_band_i
         attempts.append(attempt)
-        if (
-            not attempt["contended"]
-            and attempt["par_band"] == "healthy"
-            and arrow_band_i != "degraded"
-        ):
+        if not attempt["contended"] and attempt["par_band"] == "healthy":
             break
         print(
             f"# attempt {i + 1}/{MAX_ATTEMPTS} "
             f"{'CONTENDED' if attempt['contended'] else 'DEGRADED'} "
             f"(pass totals {attempt['totals']}, par {par_i:.2f}, "
-            f"arrow {arrow_i} [{arrow_band_i}], "
             f"{attempt['contention']}) — "
             + ("retrying" if i + 1 < MAX_ATTEMPTS else "giving up"),
             file=sys.stderr,
@@ -651,10 +579,7 @@ def main() -> None:
             "point (trend_point: false); re-run solo",
             file=sys.stderr,
         )
-    elif (
-        final["par_band"] == "degraded"
-        or final.get("arrow_band") == "degraded"
-    ):
+    elif final["par_band"] == "degraded":
         print(
             "# all attempts in a DEGRADED window — value recorded, "
             "compare value_normalized across rounds",
@@ -691,10 +616,6 @@ def main() -> None:
         "trend_point": not contended,
         "attempts": len(attempts),
         "attempt_par_calib_secs": [a["par_calib_sec"] for a in attempts],
-        # r14 Python-boundary window axis (see ARROW_HEALTHY_MAX_FACTOR)
-        "arrow_ratio": final["arrow_ratio"],
-        "arrow_band": final["arrow_band"],
-        "attempt_arrow_ratios": [a["arrow_ratio"] for a in attempts],
         "pass_totals": final["totals"],
     }
     # recorded pass's one-time costs as top-level fields too, for

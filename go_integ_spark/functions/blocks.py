@@ -29,8 +29,6 @@ kernel here is fold-exact per block.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # Upper bound on block-scoring partitions: a runaway block count
@@ -109,8 +107,8 @@ BLOCK_OVERHEAD = 50_000.0
 # UNITS (re-derived r13): a "pair-unit" is one SCORED pair — fold
 # kernel + per-probe ranking/extraction — measured ~430 ns in-task,
 # NOT the pure tiled fold's ~100 ns. r12 divided by the pure-fold
-# rate and got ~3e3; replaying its own backward-stage calibration
-# data (20k rows + 2.7e6 pairs per 6.7 s task) against the
+# rate and got ~3e3; replaying its own backward-stage measurements
+# (20k rows + 2.7e6 pairs per 6.7 s task) against the
 # inclusive pair time gives row_time = (6.7 - 2.7e6*430ns)/20k
 # ~ 277 us => ~644 pair-units/row. The 4.7x overpricing made
 # row-dominated bins real-cheap and pair-dominated bins real-
@@ -120,89 +118,12 @@ BLOCK_OVERHEAD = 50_000.0
 # same defect at smaller magnitude.
 ROW_COST = 650.0
 
-# Self-calibration reference (r13, VERDICT r12 item 4). ROW_COST's
-# 3e3 was calibrated END-TO-END on one host/payload: it prices the
-# whole per-row linear path (shuffle write+read of the replicated
-# ~520 B payload, Python-worker Arrow IPC, cogroup split, object
-# stack), most of which no driver-side micro-benchmark can see — the
-# micro-measurable slice (Arrow IPC round-trip + object stack vs the
-# tiled fold kernel) puts the kernel at only ~19 pairs per
-# row-equivalent on the calibration host. So the runtime calibration
-# tracks the RATIO: time both micro-workloads at first use and scale
-# the empirical anchor by (micro_ratio_now / micro_ratio_ref),
-# assuming the unmeasurable overhead shifts with the measurable
-# Arrow/pandas path (both are single-core Python/memcpy work) rather
-# than with the BLAS-shaped kernel. On the calibration host class
-# this returns ~3e3; a host with relatively slower Python/Arrow
-# raises it. d is held at the reference 64: pair and row cost are
-# both ~linear in payload width, so the ratio is ~width-invariant.
-# Clamped to [ROW_COST/3, ROW_COST*4] — the anchor stays the source
-# of truth, calibration only corrects hardware drift; any failure
-# falls back to the constant. SG_ROW_COST overrides everything.
-# Fallback reference for the min-of-3 timing method on an IDLE
-# calibration host (2026-08-17, three reads 10.5/11.4/11.1; the
-# r12-era 19.4 was the old sum-of-reps method under partial load and
-# over-scaled the anchor ~1.8x on loaded sessions). The OPERATIVE
-# reference comes from the committed calib_fingerprint.json via
-# _micro_ratio_ref(), which also automates the documented
-# re-measure-on-host-class-change step (VERDICT r13 item 8); this
-# constant only backstops a missing/corrupt fingerprint file.
-_MICRO_RATIO_REF = 11.0
-_row_cost_cache: float | None = None
-
-_CALIB_FINGERPRINT_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "calib_fingerprint.json"
-)
-
-
-def _host_cpu_fingerprint() -> float:
-    """Seconds for the fixed single-thread numpy workload — the SAME
-    host-class fingerprint bench.py's _cpu_calibration records with
-    every committed bench artifact, duplicated here because the
-    package cannot import the repo-root harness script. Keep the two
-    in lockstep: the committed fingerprint file's host_cpu_calib_sec
-    was measured with this workload."""
-    import time
-
-    import numpy as np
-
-    a = np.arange(1_000_000, dtype=np.float64) % 97
-    b = (a * 31.0 + 7.0) % 89
-    t0 = time.perf_counter()
-    acc = 0.0
-    for _ in range(60):
-        acc += float(a @ b)
-        a = (a + b) % 97
-    _ = acc
-    return time.perf_counter() - t0
-
-
-def _micro_ratio_ref() -> float:
-    """The kernel-vs-Arrow ratio reference for THIS host class.
-
-    The committed fingerprint file pins (host class, idle min-of-3
-    reference) together: when the current host's single-thread
-    fingerprint falls inside the file's tolerance band the committed
-    reference applies, and the ratio scaling in calibrated_row_cost
-    corrects within-class drift (load, frequency caps). A host
-    OUTSIDE the band is a different class — the committed reference
-    was never measured there, so the reference is re-derived
-    in-process with the same min-of-3 method (the manual
-    're-measure whenever the host class changes' step from r13,
-    automated). On a foreign class this anchors the row cost at
-    ROW_COST at re-derivation time and lets subsequent load drift
-    scale from there."""
-    import json as _json
-
-    with open(_CALIB_FINGERPRINT_PATH) as f:
-        fp = _json.load(f)
-    ref = float(fp["micro_ratio_ref"])
-    anchor = float(fp["host_cpu_calib_sec"])
-    tol = float(fp["tolerance"])
-    now = _host_cpu_fingerprint()
-    if anchor / tol <= now <= anchor * tol:
-        return ref
-    return _micro_ratio()
+# ROW_COST and BLOCK_PAIR_CAP are plain constants: plan_grid_bins is a
+# pure function of its cell sizes, so one input gives one plan in any
+# process on any host. (r13-r14 scaled ROW_COST by a host micro-timing
+# at first use; fresh processes on one idle host priced rows at
+# 594-1072 and packed different bins. The pair sets never moved —
+# they are split-invariant, see grid_block_cogroup's RESULT CONTRACT.)
 
 # Per-block kernel-pair ceiling (r13). Kernel work measured ~430 ns
 # per pair on the scoring hot path (fold + per-probe ranking, healthy
@@ -210,88 +131,8 @@ def _micro_ratio_ref() -> float:
 # order as a typical row-dominated task, so a mis-priced pair/row
 # ratio can no longer stack 200x of real work behind a "uniform"
 # planned cost. Raising it trades straggler risk for less side
-# replication; SG_BLOCK_PAIR_CAP overrides for probes.
+# replication.
 BLOCK_PAIR_CAP = 8_000_000.0
-
-
-def block_pair_cap() -> float:
-    env = os.environ.get("SG_BLOCK_PAIR_CAP")
-    return float(env) if env is not None else BLOCK_PAIR_CAP
-
-
-def _micro_ratio() -> float:
-    """Kernel pairs/s over Arrow-assembly rows/s, both single-core
-    micro-timed (~0.3 s total, once per process)."""
-    import time
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    from go_integ_spark.functions.vector import fold_cosine_block
-
-    rng = np.random.default_rng(7)
-    d, m = 64, 512
-    vecs = pd.Series([rng.standard_normal(d) for _ in range(m)])
-    norms = pd.Series(np.ones(m))
-    fold_cosine_block(vecs, norms, vecs, norms)  # warm
-    # min-of-3 on each side: a loaded machine (e.g. calibrating while
-    # a probe runs) inflates single timings asymmetrically; the min
-    # approximates the uncontended cost on both sides so the RATIO
-    # stays load-insensitive
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        fold_cosine_block(vecs, norms, vecs, norms)
-        best = min(best, time.perf_counter() - t0)
-    pairs_per_sec = m * m / best
-
-    k = 20_000
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(k, dtype=np.int64),
-            "e": [rng.standard_normal(d) for _ in range(k)],
-        }
-    )
-    tbl = pa.Table.from_pandas(pdf)
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, tbl.schema) as w:
-        w.write_table(tbl)
-    buf = sink.getvalue()
-
-    def roundtrip() -> None:
-        df = pa.ipc.open_stream(buf).read_all().to_pandas()
-        np.stack([np.asarray(x, dtype=np.float64) for x in df["e"]])
-
-    roundtrip()  # warm
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        roundtrip()
-        best = min(best, time.perf_counter() - t0)
-    rows_per_sec = k / best
-    return pairs_per_sec / rows_per_sec
-
-
-def calibrated_row_cost() -> float:
-    """ROW_COST adjusted for this host's measured kernel-vs-Arrow
-    throughput ratio; memoized so every plan in a process prices
-    identically (results are split-invariant either way — only bin
-    shapes move). See _MICRO_RATIO_REF."""
-    global _row_cost_cache
-    if _row_cost_cache is not None:
-        return _row_cost_cache
-    env = os.environ.get("SG_ROW_COST")
-    if env is not None:
-        _row_cost_cache = float(env)
-        return _row_cost_cache
-    try:
-        rc = ROW_COST * _micro_ratio() / _micro_ratio_ref()
-        rc = min(ROW_COST * 4, max(ROW_COST / 3, rc))
-    except Exception:  # pragma: no cover - calibration must never block planning
-        rc = ROW_COST
-    _row_cost_cache = rc
-    return rc
 
 
 def plan_grid_bins(
@@ -313,10 +154,8 @@ def plan_grid_bins(
     and the cap^2 single-block bound. Returns (split_rows [(key...,
     n_cs, n_ps)], bin_rows [(key..., csplit, psplit, bin_id)],
     n_bins)."""
-    row_cost = calibrated_row_cost()
     split_rows: list[tuple] = []
     blocks: list[tuple] = []
-    pair_cap = block_pair_cap()
     costs: list[float] = []
     for kv, n_m, n_p in cells:
         if n_m == 0 or n_p == 0:
@@ -330,10 +169,10 @@ def plan_grid_bins(
         # probe's planned bins were uniform to 1.3x while measured
         # kernel time spread 200x (a 5.7k x 8.1k block ran 19.7 s
         # against a row-dominated median bin's 0.09 s; observed task
-        # skew 31-38x, reproduced twice, par-calib healthy; the r12
+        # skew 31-38x, reproduced twice, healthy host window; the r12
         # "forward-stage 13.4x host stall" was this same defect).
         # Bounding mc*pc directly makes the packing robust to ANY
-        # cost-constant error: no single block can exceed ~pair_cap
+        # cost-constant error: no single block can exceed ~BLOCK_PAIR_CAP
         # of kernel work. Each split increment replicates the OTHER
         # side once more (probes x nc member-splits, members x np_
         # probe-splits), so grow the split whose replication is
@@ -351,7 +190,7 @@ def plan_grid_bins(
         # SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json,
         # scripts/probe_bitext_geometry.py. Keep the corner greedy:
         # it never replicates the bigger side while the cap allows.
-        while (n_m / nc) * (n_p / np_) > pair_cap:
+        while (n_m / nc) * (n_p / np_) > BLOCK_PAIR_CAP:
             if n_p <= n_m:
                 nc += 1
             else:
@@ -361,12 +200,12 @@ def plan_grid_bins(
         for cs in range(nc):
             for ps in range(np_):
                 blocks.append(kv + (cs, ps))
-                costs.append(mc * pc + row_cost * (mc + pc) + overhead)
+                costs.append(mc * pc + ROW_COST * (mc + pc) + overhead)
     if not blocks:
         return [], [], 0
     # capacity's single-block bound gets the same row term, so a
     # maximal block still fits one bin exactly
-    max_block = float(min(cap * cap, pair_cap)) + row_cost * 2 * cap
+    max_block = float(min(cap * cap, BLOCK_PAIR_CAP)) + ROW_COST * 2 * cap
     capacity = max(
         min(max_block, sum(costs) / max(4 * base_partitions, 64)),
         4 * overhead,

@@ -45,8 +45,6 @@ JVM expression it replaced.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1093,7 +1091,7 @@ def dedup_embedding_cosine_strict(spark: SparkSession, sf_dir: str) -> DataFrame
 CC_MAX_ITERS = 32
 
 
-def _checkpoint_fresh_stats(df: DataFrame, eager: bool = True) -> DataFrame:
+def _checkpoint_fresh_stats(df: DataFrame) -> DataFrame:
     """localCheckpoint + plan-statistics reset, for ITERATIVE
     self-join loops.
 
@@ -1114,14 +1112,8 @@ def _checkpoint_fresh_stats(df: DataFrame, eager: bool = True) -> DataFrame:
     Falls back to the plain localCheckpoint if the internal
     constructor ever disappears — correctness is unaffected either
     way, only iteration-planning cost.
-
-    ``eager=False`` truncates lineage without scheduling its own
-    materialization job: the checkpoint RDD computes and caches the
-    first time a downstream job touches it (the CC delta path rides
-    its per-node best into the round's existing stepped-checkpoint
-    job instead of paying a third job per round).
     """
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint()
     try:
         jdf = ck._jdf
         spark = ck.sparkSession
@@ -1157,97 +1149,33 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     # O(rounds) edge-list shuffles for the one the repartition pays
     # once. InMemoryTableScan preserves the child's outputPartitioning,
     # so each round then shuffles only the small labels side. The
-    # `labels` distinct on src reuses the same exchange. Toggle is for
-    # the committed 1000x A/B probe only (scripts/probe_cc_ab.py).
-    both = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    if os.environ.get("CC_EDGE_REPART", "1") != "0":
-        spark = edges.sparkSession
-        both = both.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "src"
+    # `labels` distinct on src reuses the same exchange (1000x A/B:
+    # SMOKE_r12_1000x_cc_ab*.json).
+    spark = edges.sparkSession
+    both = (
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(
+            edges.select(
+                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
+            )
         )
-    both = both.persist()
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "src")
+        .persist()
+    )
     labels = (
         both.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .persist()
     )
-    # Delta propagation (r13, VERDICT r12 item 2) — implemented,
-    # A/B'd at 100x and 1000x, and REJECTED as the default. Labels
-    # only ever DECREASE (every assignment is a least()), so an
-    # accumulated per-node neighbor-min (`nbr_best`, N rows) merged
-    # with each round's contributions from CHANGED sources only is
-    # value-identical to recomputing the min over all sources — but
-    # the measured economics are upside-down for mutual-kNN graphs
-    # (E/N ~ 7-10): label propagation does most of its changing in
-    # the first few rounds, so the edge-side shuffle only shrinks in
-    # the late CHEAP rounds, while the nodes-sized full-outer merge
-    # (+ its lineage checkpoint) is paid EVERY round. Committed
-    # evidence (SMOKE_r13_1000x_cc_delta.json, drift-cancelling arm
-    # order, label signatures identical): 1000x delta 190/142/206 s
-    # vs full-recompute 133/131/117 s; 100x parity at best. Kept
-    # behind CC_DELTA=1 for graphs where deltas collapse after round
-    # one (very dense near-dup cliques); the default is the
-    # full-recompute hop, whose per-round join cost the CC_HASHJOIN
-    # arm below attacks instead. Byte-identity of labels and round
-    # counts under the toggle is pinned in tests/test_round13_ops.py.
-    delta_mode = os.environ.get("CC_DELTA", "0") != "0"
-    # Per-round hop join strategy — probed and REJECTED (r13): the
-    # "SMJ re-sorts the edge list every round" hypothesis was wrong.
-    # The nodes-sized sides (labels/neighbor_min/parents, ~32 MB at
-    # 1000x) sit under the 64 MB autoBroadcastJoinThreshold, so AQE
-    # already converts every per-round join to a runtime BROADCAST
-    # hash join — the edge side streams through its cached
-    # partitioning with no sort and no exchange. Forcing SHUFFLE_HASH
-    # instead (CC_HASHJOIN=1) fights that conversion and nearly
-    # DOUBLED the per-run stage count and wall at the 100x A/B
-    # (103.6/160.8 s on vs 58.9/62.3 s off, labels identical). Kept
-    # as an off-by-default arm so the negative result stays
-    # reproducible.
-    hash_hint = os.environ.get("CC_HASHJOIN", "0") != "0"
-
-    def _build(df: DataFrame) -> DataFrame:
-        return df.hint("SHUFFLE_HASH") if hash_hint else df
-
-    delta = labels  # round 1: every node's initial label contributes
-    nbr_best: DataFrame | None = None
+    # Rejected (r13): delta propagation, SMOKE_r13_1000x_cc_delta.json.
+    # Rejected (r13): SHUFFLE_HASH hop joins, 100x 103.6/160.8 s vs 58.9/62.3 s.
     for _ in range(max_iters):
-        if delta_mode:
-            d = _build(delta)
-            new_mins = (
-                both.join(d, both.src == d.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("label").alias("nbr"))
-            )
-            if nbr_best is None:
-                merged = new_mins
-            else:
-                merged = (
-                    nbr_best.withColumnRenamed("nbr", "nbr_prev")
-                    .join(new_mins, "node", "full")
-                    .select(
-                        "node", F.least("nbr_prev", "nbr").alias("nbr")
-                    )
-                )
-            # Lazy checkpoint: merged references the previous
-            # nbr_best, so the plan would otherwise grow per round;
-            # eager=False materializes it INSIDE the round's stepped
-            # job (a third per-round job measurably lost the 100x
-            # A/B) while still truncating lineage and caching the
-            # N-row RDD for the next round's merge.
-            nbr_best = _checkpoint_fresh_stats(merged, eager=False)
-            neighbor_min = nbr_best
-        else:
-            lab = _build(labels)
-            neighbor_min = (
-                both.join(lab, both.src == lab.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("label").alias("nbr"))
-            )
+        neighbor_min = (
+            both.join(labels, both.src == labels.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("nbr"))
+        )
         # Carry the previous label through the step so the convergence
         # count reuses this join instead of paying a second one.
         # localCheckpoint (not persist): each step references `labels`
@@ -1259,7 +1187,7 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         # cuts each round's plan back to a leaf; on a real cluster
         # with executor churn this would be a reliable checkpoint to
         # durable storage instead.
-        hopped = labels.join(_build(neighbor_min), "node", "left").select(
+        hopped = labels.join(neighbor_min, "node", "left").select(
             "node",
             F.col("label").alias("old_label"),
             F.least("label", F.coalesce("nbr", "label")).alias("label"),
@@ -1277,10 +1205,8 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         # materialization schedule several extra AQE stages — so the
         # single jump is strictly faster at every scale tried.)
         hopped = hopped.persist()
-        parents = _build(
-            hopped.select(
-                F.col("node").alias("pnode"), F.col("label").alias("plabel")
-            )
+        parents = hopped.select(
+            F.col("node").alias("pnode"), F.col("label").alias("plabel")
         )
         stepped = _checkpoint_fresh_stats(
             hopped.join(
@@ -1295,11 +1221,6 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         hopped.unpersist()
         labels.unpersist()
         labels = stepped
-        # next round's contributions: only sources whose label moved
-        # this round (their previous value is already in nbr_best)
-        delta = stepped.filter(F.col("old_label") != F.col("label")).select(
-            "node", "label"
-        )
         if changed == 0:
             break
     both.unpersist()  # final labels are persisted + materialized by the count

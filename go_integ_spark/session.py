@@ -10,7 +10,9 @@ UTC-naive).
 
 from __future__ import annotations
 
+import math
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -37,20 +39,31 @@ def ensure_engine_contract(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Spark's size suffixes (JavaUtils.byteStringAs) as powers of 1024
+# over MiB; a bare spark.driver.memory number is MiB.
+_MEM_POW = {"k": -1, "m": 0, "g": 1, "t": 2}
+
+
 def _mem_gb(mem: str) -> float:
-    """Parse a JVM memory string ("48g", "512m", "8192k") to GiB.
-    Unparseable values resolve to 0.0 (pretouch stays off)."""
-    m = mem.strip().lower()
-    try:
-        if m.endswith("g"):
-            return float(m[:-1])
-        if m.endswith("m"):
-            return float(m[:-1]) / 1024.0
-        if m.endswith("k"):
-            return float(m[:-1]) / (1024.0 * 1024.0)
-        return float(m) / (1024.0**3)
-    except ValueError:
+    """Parse a Spark memory string ("48g", "48gb", "512M", "1tb") to
+    GiB the way Spark reads spark.driver.memory: whole numbers, any
+    suffix case. Unparseable values resolve to 0.0 (pretouch stays
+    off)."""
+    m = re.fullmatch(r"(\d+)(?:([kmgt])b?)?", mem.strip().lower())
+    if m is None:
         return 0.0
+    return int(m[1]) * 1024.0 ** _MEM_POW[m[2] or "m"] / 1024.0
+
+
+def jvm_mem(mem: str) -> str:
+    """``mem`` in a form HotSpot's -Xmx/-Xms accept. In local mode
+    Spark's launcher passes spark.driver.memory to -Xmx verbatim, and
+    the JVM rejects two-letter suffixes ("48gb") and reads a bare
+    number as bytes; those become whole MiB. JVM-valid and
+    unparseable strings pass through unchanged."""
+    if re.fullmatch(r"\d+[kmgt]", mem.strip().lower()) or not _mem_gb(mem):
+        return mem
+    return f"{math.ceil(_mem_gb(mem) * 1024)}m"
 
 
 def pretouch_enabled(mem: str, env: str | None) -> bool:
@@ -77,6 +90,20 @@ def pretouch_enabled(mem: str, env: str | None) -> bool:
     return _mem_gb(mem) >= 16.0
 
 
+def driver_java_options(
+    user_opts: str | None, mem: str, pretouch: bool
+) -> str | None:
+    """spark.driver.extraJavaOptions for get_spark: the caller's
+    options, with the heap pre-commit flags appended when ``pretouch``
+    is on. The key holds one string, so setting the flags and the
+    caller's options as two config() calls would silently drop
+    whichever came first."""
+    if not pretouch:
+        return user_opts
+    flags = f"-Xms{jvm_mem(mem)} -XX:+AlwaysPreTouch"
+    return f"{user_opts} {flags}" if user_opts else flags
+
+
 def get_spark(
     app_name: str = "go_integ_spark",
     master: str | None = None,
@@ -84,6 +111,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     master = master or f"local[{cpus}]"
     # Local mode: shuffle partitions ~ cores. On a real cluster this is
     # left to AQE (coalescePartitions) with a high initial value.
@@ -125,17 +153,20 @@ def get_spark(
             "spark.io.compression.codec",
             os.environ.get("SG_IO_CODEC", "zstd"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", jvm_mem(mem))
         .config("spark.ui.enabled", "false")
     )
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    if pretouch_enabled(mem, os.environ.get("SG_PRETOUCH")):
-        # Only effective when this call launches the gateway JVM
-        # (first session of the process) — exactly the fresh-JVM case
-        # the first-wave page-fault cost belongs to.
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", f"-Xms{mem} -XX:+AlwaysPreTouch"
-        )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Pretouch only takes effect when this call launches the gateway
+    # JVM (first session of the process) — exactly the fresh-JVM case
+    # the first-wave page-fault cost belongs to.
+    opts = driver_java_options(
+        conf.get("spark.driver.extraJavaOptions"),
+        mem,
+        pretouch_enabled(mem, os.environ.get("SG_PRETOUCH")),
+    )
+    if opts is not None:
+        conf["spark.driver.extraJavaOptions"] = opts
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

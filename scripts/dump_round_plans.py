@@ -1,12 +1,13 @@
-"""Dump per-query ``explain("formatted")`` files for the r14
-optimization round's evidence directory.
+"""Dump per-query ``explain("formatted")`` files for an optimization
+round's evidence directory.
 
-    python scripts/dump_r14_plans.py before [name ...]
-    python scripts/dump_r14_plans.py after  [name ...]
+    python scripts/dump_round_plans.py <round> before [name ...]
+    python scripts/dump_round_plans.py <round> after  [name ...]
 
 With no names: every bench=True headline query. Writes
-``plans/r14/<query>_<suffix>.txt`` — the committed before/after plan
-evidence OPTIMIZATION_r14.md's claims are checked against.
+``plans/<round>/<query>_<suffix>.txt`` (e.g. ``plans/r14/``) — the
+committed before/after plan evidence an OPTIMIZATION_<round>.md's
+claims are checked against.
 """
 
 from __future__ import annotations
@@ -21,19 +22,19 @@ from go_integ_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
-        sys.exit("usage: dump_r14_plans.py before|after [query ...]")
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit("usage: dump_round_plans.py <round> before|after [query ...]")
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_all()
     if not names:
         names = [n for n, spec in registry.items() if spec.bench]
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump_r14_plans")
+    spark = get_spark(app_name="dump_round_plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         spec = registry[name]

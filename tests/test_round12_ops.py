@@ -106,21 +106,18 @@ class TestGridCellSizes:
 
 
 class TestCCEdgeRepartInvariance:
-    def test_components_identical_both_arms(self, spark, monkeypatch):
-        """CC_EDGE_REPART only changes the edge list's physical
-        partitioning; the labels must be byte-identical."""
+    def test_components_identical_both_arms(self, spark):
+        """The `src`-repartitioned edge list changes only physical
+        partitioning (1000x A/B: SMOKE_r12_1000x_cc_ab*.json); the
+        labels stay pinned to the golden components. The 30..36 chain
+        needs several rounds and pointer jumps."""
         from go_integ_spark.operators.dedup import connected_components
 
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
-            "doc_a bigint, doc_b bigint",
-        )
-        monkeypatch.setenv("CC_EDGE_REPART", "0")
-        off = sorted(map(tuple, connected_components(edges).collect()))
-        monkeypatch.setenv("CC_EDGE_REPART", "1")
-        on = sorted(map(tuple, connected_components(edges).collect()))
-        assert off == on
-        assert off == [
+        rows = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
+        rows += [(i, i + 1) for i in range(30, 36)]
+        edges = spark.createDataFrame(rows, "doc_a bigint, doc_b bigint")
+        got = sorted(map(tuple, connected_components(edges).collect()))
+        assert got == [
             (1, 1),
             (2, 1),
             (3, 1),
@@ -130,4 +127,4 @@ class TestCCEdgeRepartInvariance:
             (21, 20),
             (22, 20),
             (23, 20),
-        ]
+        ] + [(n, 30) for n in range(30, 37)]

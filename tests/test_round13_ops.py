@@ -1,6 +1,6 @@
-"""Round-13 pins: CC delta propagation invariance, the bounded alias
-search, self-calibrating ROW_COST, the bench par_band verdict, and
-the stall-robust probe skew eligibility rule."""
+"""Round-13 pins: the bounded alias search, the per-block pair cap,
+the bench par_band verdict, and the stall-robust probe skew
+eligibility rule."""
 
 from __future__ import annotations
 
@@ -20,36 +20,6 @@ sys.path.insert(
 def spark():
     s = get_spark(master="local[4]", shuffle_partitions=8)
     yield s
-
-
-class TestCCDeltaInvariance:
-    def test_components_identical_both_arms(self, spark, monkeypatch):
-        """CC_DELTA replays each round's neighbor-min from an
-        accumulated per-node best plus changed-source contributions;
-        labels must be byte-identical to the full recompute — the
-        equality rests on label monotonicity (every assignment is a
-        least()), so a chain graph (multi-round, pointer jumps) and a
-        clique both pin it."""
-        from go_integ_spark.operators.dedup import connected_components
-
-        # chain of 6 (forces several rounds + path halving), a
-        # triangle, an isolated pair
-        rows = [(i, i + 1) for i in range(30, 36)] + [
-            (1, 2),
-            (2, 3),
-            (3, 1),
-            (50, 51),
-        ]
-        edges = spark.createDataFrame(rows, "doc_a bigint, doc_b bigint")
-        monkeypatch.setenv("CC_DELTA", "0")
-        off = sorted(map(tuple, connected_components(edges).collect()))
-        monkeypatch.setenv("CC_DELTA", "1")
-        on = sorted(map(tuple, connected_components(edges).collect()))
-        assert off == on
-        comp = dict(on)
-        assert {comp[n] for n in range(30, 37)} == {30}
-        assert {comp[n] for n in (1, 2, 3)} == {1}
-        assert comp[50] == 50 and comp[51] == 50
 
 
 class TestAliasSearchBounded:
@@ -74,53 +44,6 @@ class TestAliasSearchBounded:
             assert aliases is not None
             parts = {_murmur3_int(a) % n_parts for a in aliases}
             assert len(parts) == n_bins
-
-
-class TestRowCostCalibration:
-    def test_env_override_and_clamp(self, monkeypatch):
-        from go_integ_spark.functions import blocks
-
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        monkeypatch.setenv("SG_ROW_COST", "1234.5")
-        assert blocks.calibrated_row_cost() == 1234.5
-        # calibration path: clamped to [ROW_COST/3, ROW_COST*4] so a
-        # broken micro-timing can never run the packer off the anchor
-        monkeypatch.delenv("SG_ROW_COST")
-        # pin the reference: this test exercises the CLAMP, and since
-        # r14 the reference is fingerprint-sourced (and re-derived via
-        # _micro_ratio on a foreign host class, which would otherwise
-        # see the same monkeypatched value)
-        monkeypatch.setattr(blocks, "_micro_ratio_ref", lambda: 11.0)
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        monkeypatch.setattr(blocks, "_micro_ratio", lambda: 1e9)
-        assert blocks.calibrated_row_cost() == blocks.ROW_COST * 4
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        monkeypatch.setattr(blocks, "_micro_ratio", lambda: 0.0)
-        assert blocks.calibrated_row_cost() == blocks.ROW_COST / 3
-
-    def test_micro_calibration_lands_near_anchor_on_this_host(
-        self, monkeypatch
-    ):
-        """On the calibration host class the runtime value must sit
-        within 2x of the empirical 3e3 anchor (VERDICT r12 item 4's
-        done-bar); the clamp guarantees 4x worst-case anywhere."""
-        from go_integ_spark.functions import blocks
-
-        monkeypatch.delenv("SG_ROW_COST", raising=False)
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        rc = blocks.calibrated_row_cost()
-        assert blocks.ROW_COST / 2 <= rc <= blocks.ROW_COST * 2
-
-    def test_calibration_failure_falls_back(self, monkeypatch):
-        from go_integ_spark.functions import blocks
-
-        def boom():
-            raise RuntimeError("no numpy today")
-
-        monkeypatch.delenv("SG_ROW_COST", raising=False)
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        monkeypatch.setattr(blocks, "_micro_ratio", boom)
-        assert blocks.calibrated_row_cost() == blocks.ROW_COST
 
 
 class TestParBand:
@@ -262,27 +185,6 @@ def test_contamination_embedding_strict_on_planted_corpus(spark, tmp_path):
     assert sum(brute.values()) >= 8, "corpus must contain contaminated evals"
 
 
-class TestCCHashJoinInvariance:
-    def test_components_identical_both_arms(self, spark, monkeypatch):
-        """CC_HASHJOIN only swaps the per-round hop/jump join
-        strategy (shuffled-hash build on the nodes-sized side vs
-        sort-merge); the labels must be byte-identical."""
-        from go_integ_spark.operators.dedup import connected_components
-
-        rows = [(i, i + 1) for i in range(30, 36)] + [
-            (1, 2),
-            (2, 3),
-            (3, 1),
-            (50, 51),
-        ]
-        edges = spark.createDataFrame(rows, "doc_a bigint, doc_b bigint")
-        monkeypatch.setenv("CC_HASHJOIN", "0")
-        off = sorted(map(tuple, connected_components(edges).collect()))
-        monkeypatch.setenv("CC_HASHJOIN", "1")
-        on = sorted(map(tuple, connected_components(edges).collect()))
-        assert off == on and len(off) == 12
-
-
 class TestBlockPairCap:
     def test_no_block_exceeds_pair_cap(self, monkeypatch):
         """r13: the planner must bound every block's kernel pairs at
@@ -292,8 +194,7 @@ class TestBlockPairCap:
         dimension still admitted cap x cap = 67M-pair blocks."""
         from go_integ_spark.functions import blocks
 
-        monkeypatch.setenv("SG_ROW_COST", "3000")
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
+        monkeypatch.setattr(blocks, "ROW_COST", 3000.0)
         cells = [
             (("en", 1), 5673, 166515),  # the probe's hottest cell
             (("de", 2), 7767, 83040),
@@ -307,8 +208,8 @@ class TestBlockPairCap:
         for kv, n_m, n_p in cells:
             nc, np_ = splits[kv]
             assert (n_m / nc) * (n_p / np_) <= blocks.BLOCK_PAIR_CAP, kv
-        # and the env override widens it
-        monkeypatch.setenv("SG_BLOCK_PAIR_CAP", "1e12")
+        # and a wider cap lets the cap x cap block through again
+        monkeypatch.setattr(blocks, "BLOCK_PAIR_CAP", 1e12)
         s2, _, _ = blocks.plan_grid_bins(cells, 8192, 256)
         sp2 = {tuple(s[:-2]): (s[-2], s[-1]) for s in s2}
         assert sp2[("zh", 4)] == (1, 1)  # one cap x cap block again

@@ -43,41 +43,6 @@ def test_select_attempt_ties_break_on_faster_total():
     assert bench.select_attempt([d_slow, d_fast]) is d_fast
 
 
-class TestArrowWindowBand:
-    """r14: the Python-boundary (syscall/scheduler) degradation axis.
-    A window can stall JVM<->Python wakeups 3-40x while the pure-CPU
-    par calibration reads healthy; the in-process Arrow micro ratio
-    detects it (24.8 measured in the stalled window vs the committed
-    idle reference 11.0)."""
-
-    def test_band_thresholds(self, monkeypatch):
-        monkeypatch.delenv("SG_ARROW_HEALTHY_MAX_FACTOR", raising=False)
-        assert bench.arrow_band(11.0, 11.0) == "healthy"
-        assert bench.arrow_band(16.4, 11.0) == "healthy"  # <= ref*1.5
-        assert bench.arrow_band(24.8, 11.0) == "degraded"
-        # foreign host class / unreadable fingerprint: never blocks
-        assert bench.arrow_band(24.8, None) == "unknown"
-        assert bench.arrow_band(float("nan"), 11.0) == "unknown"
-
-    def test_select_attempt_penalizes_arrow_degraded(self):
-        stalled = {**_att(20.0), "arrow_band": "degraded"}
-        clean = {**_att(30.0), "arrow_band": "healthy"}
-        assert bench.select_attempt([stalled, clean]) is clean
-        # unknown (unfingerprinted host) does NOT penalize
-        unknown = {**_att(30.0), "arrow_band": "unknown"}
-        assert bench.select_attempt([stalled, unknown]) is unknown
-        # legacy attempts without the key still select (no crash)
-        assert bench.select_attempt([_att(30.0), _att(29.0)])["totals"] == [
-            29.0
-        ]
-
-    def test_arrow_window_measures_on_this_host(self):
-        ratio, band = bench._arrow_window()
-        assert band in ("healthy", "degraded", "unknown")
-        if band != "unknown":
-            assert ratio > 0
-
-
 def test_session_io_codec_default_and_override(monkeypatch):
     """r14 codec ship (guide §2.3/§9): zstd is the session default —
     A/B'd at the 1000x kNN probe, scoring-exchange shuffle -18.9%
@@ -170,13 +135,12 @@ class TestGreedySplitGeometryKept:
     def test_big_side_not_replicated_on_cap_bound_cells(self, monkeypatch):
         from go_integ_spark.functions import blocks
 
-        monkeypatch.setenv("SG_ROW_COST", "650")
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
+        monkeypatch.setattr(blocks, "ROW_COST", 650.0)
         # the 1000x multilang probe's two hot cells: probes >> members
         cells = [(("en",), 5673, 166515), (("de",), 7767, 83040)]
         split_rows, _, _ = blocks.plan_grid_bins(cells, 8192, 256)
         splits = {s[0]: (s[-2], s[-1]) for s in split_rows}
-        pair_cap = blocks.block_pair_cap()
+        pair_cap = blocks.BLOCK_PAIR_CAP
         for kv, n_m, n_p in cells:
             nc, np_ = splits[kv[0]]
             assert (n_m / nc) * (n_p / np_) <= pair_cap  # cap holds
@@ -185,8 +149,7 @@ class TestGreedySplitGeometryKept:
     def test_uncapped_cells_keep_minimum_splits(self, monkeypatch):
         from go_integ_spark.functions import blocks
 
-        monkeypatch.setenv("SG_ROW_COST", "650")
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
+        monkeypatch.setattr(blocks, "ROW_COST", 650.0)
         split_rows, _, _ = blocks.plan_grid_bins(
             [((1,), 182, 40), ((2,), 100, 1_000_000)], 8192, 256
         )
@@ -195,59 +158,6 @@ class TestGreedySplitGeometryKept:
         # pair-light probe-heavy cell: dimension cap only, no member
         # replication beyond it
         assert splits[2] == (1, -(-1_000_000 // 8192))
-
-
-class TestMicroRatioRefFingerprint:
-    """VERDICT r13 item 8: the grid cost model's calibration reference
-    is sourced from the committed fingerprint file, and a host-class
-    change re-derives it automatically (min-of-3) instead of the
-    former manual doc step."""
-
-    def test_ref_comes_from_committed_fingerprint_on_matching_host(
-        self, monkeypatch
-    ):
-        import json
-
-        from go_integ_spark.functions import blocks
-
-        with open(blocks._CALIB_FINGERPRINT_PATH) as f:
-            fp = json.load(f)
-        monkeypatch.setattr(
-            blocks, "_host_cpu_fingerprint", lambda: fp["host_cpu_calib_sec"]
-        )
-        monkeypatch.setattr(
-            blocks,
-            "_micro_ratio",
-            lambda: (_ for _ in ()).throw(AssertionError("must not re-derive")),
-        )
-        assert blocks._micro_ratio_ref() == fp["micro_ratio_ref"]
-
-    def test_foreign_host_class_rederives_reference(self, monkeypatch):
-        import json
-
-        from go_integ_spark.functions import blocks
-
-        with open(blocks._CALIB_FINGERPRINT_PATH) as f:
-            fp = json.load(f)
-        foreign = fp["host_cpu_calib_sec"] * fp["tolerance"] * 2
-        monkeypatch.setattr(blocks, "_host_cpu_fingerprint", lambda: foreign)
-        monkeypatch.setattr(blocks, "_micro_ratio", lambda: 42.5)
-        assert blocks._micro_ratio_ref() == 42.5
-
-    def test_missing_fingerprint_file_falls_back_to_anchor(
-        self, monkeypatch
-    ):
-        from go_integ_spark.functions import blocks
-
-        monkeypatch.setattr(
-            blocks, "_CALIB_FINGERPRINT_PATH", "/nonexistent/fp.json"
-        )
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
-        monkeypatch.delenv("SG_ROW_COST", raising=False)
-        # _micro_ratio_ref raises -> calibrated_row_cost's guard
-        # returns the anchor constant, never blocking planning
-        assert blocks.calibrated_row_cost() == blocks.ROW_COST
-        monkeypatch.setattr(blocks, "_row_cost_cache", None)
 
 
 class TestCachedPersistToken:
@@ -319,6 +229,9 @@ class TestPretouchRegime:
 
         assert pretouch_enabled("48g", None) is True
         assert pretouch_enabled("16g", None) is True
+        # Spark's two-letter and terabyte suffixes, any case
+        for mem in ("48gb", "48GB", "1t", "1tb", "1T", "16384mb"):
+            assert pretouch_enabled(mem, None) is True, mem
 
     def test_env_overrides_both_ways(self):
         from go_integ_spark.session import pretouch_enabled
@@ -332,3 +245,34 @@ class TestPretouchRegime:
         assert _mem_gb("weird") == 0.0
         assert pretouch_enabled("weird", None) is False
         assert _mem_gb("16384m") == 16.0
+        assert _mem_gb("48gb") == _mem_gb("48G") == 48.0
+        assert _mem_gb("1tb") == _mem_gb("1t") == 1024.0
+        assert _mem_gb("8388608kb") == 8.0
+        assert _mem_gb("16384") == 16.0  # bare number is MiB, as in Spark
+        assert _mem_gb("1.5g") == 0.0  # Spark rejects fractions too
+
+    def test_jvm_mem_normalizes_spark_only_forms(self):
+        """Spark's launcher hands spark.driver.memory to -Xmx as is;
+        forms HotSpot rejects become whole MiB, valid ones stay."""
+        from go_integ_spark.session import jvm_mem
+
+        assert jvm_mem("8g") == "8g"
+        assert jvm_mem("1T") == "1T"
+        assert jvm_mem("48gb") == "49152m"
+        assert jvm_mem("16384") == "16384m"
+        assert jvm_mem("weird") == "weird"
+
+    def test_driver_java_options_merge(self):
+        """A caller's extraJavaOptions keep their flags and gain the
+        pretouch ones; with pretouch off they pass through as is."""
+        from go_integ_spark.session import driver_java_options
+
+        user = "-Djava.io.tmpdir=/x -XX:+PerfDisableSharedMem"
+        assert driver_java_options(user, "8g", False) == user
+        assert driver_java_options(None, "8g", False) is None
+        assert driver_java_options(user, "48g", True) == (
+            f"{user} -Xms48g -XX:+AlwaysPreTouch"
+        )
+        assert driver_java_options(None, "48gb", True) == (
+            "-Xms49152m -XX:+AlwaysPreTouch"
+        )
