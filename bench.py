@@ -34,10 +34,10 @@ bogus trend points in rounds 3, 5 and 7, and the rule for each):
   run and ``cpu_calib_end_sec`` after it; compare
   ``value / cpu_calib_sec`` across rounds, and distrust a run whose
   start/end calibs disagree (frequency shifted mid-run).
-  ``cpu_calib_par_sec`` runs the same workload on every core at
-  once: a par/single ratio well above the host's norm means degraded
-  all-core throughput (steal, capping, noisy neighbor) that the
-  single-thread probe cannot see.
+
+The bench is one measured attempt: a contended run is flagged
+(``contended: true``, ``trend_point: false``) for a solo re-run, not
+retried in place.
 """
 
 from __future__ import annotations
@@ -102,10 +102,11 @@ def _foreign_jvms(own: set[int] = frozenset()) -> list[int]:
     ]
 
 
-def _calib_workload() -> float:
-    """The fixed single-thread numpy loop both calibrations run
-    (deterministic input; numpy dot releases the GIL). Returns the
-    loop's seconds, input construction excluded."""
+def _cpu_calibration() -> float:
+    """Seconds for a fixed single-thread numpy loop (deterministic
+    input, construction excluded; ~0.5 s on a 2024-class core). A
+    host-speed fingerprint: bench totals should be compared across
+    rounds relative to this."""
     import numpy as np
 
     a = np.arange(1_000_000, dtype=np.float64) % 97
@@ -115,59 +116,7 @@ def _calib_workload() -> float:
     for _ in range(60):
         acc += float(a @ b)
         a = (a + b) % 97
-    return time.perf_counter() - t0
-
-
-def _cpu_calibration() -> float:
-    """Seconds for the calibration workload on one thread (~0.5 s on
-    a 2024-class core). A host-speed fingerprint: bench totals should
-    be compared across rounds relative to this."""
-    return round(_calib_workload(), 4)
-
-
-def _cpu_calibration_parallel() -> float:
-    """Wall seconds for every core running the calibration workload
-    at once (threads suffice: the dot releases the GIL). On a
-    healthy exclusive host this ~equals the single-thread figure; a
-    larger ratio means parallel throughput is degraded (hypervisor
-    steal, frequency capping under all-core load, a noisy neighbor) —
-    the failure mode round 6's intra-day 24 s -> 47 s swings on
-    identical code traced to, which the single-thread fingerprint
-    cannot see because it only holds one core."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    n = os.cpu_count() or 1
-    t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=n) as ex:
-        list(ex.map(lambda _: _calib_workload(), range(n)))
     return round(time.perf_counter() - t0, 4)
-
-
-# Healthy-band ceiling for cpu_calib_par_sec on THIS fleet's host
-# class (r13, VERDICT r12 item 6). Observed across rounds 8-12 on
-# these 32-vCPU boxes: healthy sessions measure 3.5-4.6 s; the
-# degraded windows (hypervisor steal + all-core frequency caps)
-# measure 8.5-14.2 s. 5.0 splits the two observed clusters with
-# margin on the healthy side, so anything in the unobserved 5-8.5 s
-# gap conservatively reads degraded. HOST-CLASS-DEPENDENT by
-# construction (BASELINE.md records r7's healthy host at par 6.4) —
-# a new machine class must re-establish the band via
-# SG_PAR_HEALTHY_MAX before its par_band fields mean anything.
-PAR_BAND_HEALTHY_MAX_SEC = 5.0
-
-
-def par_band(par_calib_sec: float) -> str:
-    """Self-describing host-health verdict for a committed artifact
-    (VERDICT r12 item 6): the r12 official bench was measured at
-    par-calib 8.51 yet read ``contended: false`` (the two-pass
-    agreement rule is about SHARING tenants, not a degraded
-    hypervisor), so the number needed BASELINE.md exegesis to read.
-    ``degraded`` does NOT invalidate the wall — it marks it a weak
-    trend point whose normalized value is the comparable figure."""
-    ceiling = float(
-        os.environ.get("SG_PAR_HEALTHY_MAX", PAR_BAND_HEALTHY_MAX_SEC)
-    )
-    return "healthy" if par_calib_sec <= ceiling else "degraded"
 
 
 def classify_run(
@@ -234,7 +183,7 @@ def _fresh_session(app_name: str, sf_dir: str, ncpus: int):
     # offset/commit-log classes and the streaming codegen
     # infrastructure are all first-touched here instead of billing
     # ~1.4-3 s of session-level class-loading to whichever streaming
-    # headline query runs first (r14 probe scripts/probe_plan_warmup.py:
+    # headline query runs first (r14 probe:
     # streaming_session_window's cold-warm delta 2.7/4.9 s without this
     # warm vs 1.3/1.8 s with it, ABAB arms). The warm plan is a plain
     # hash-aggregate over a throwaway 3-row source — a DIFFERENT shape
@@ -342,29 +291,6 @@ def _run_pass(spark, registry, bench_queries, sf_dir) -> dict[str, float]:
     return timings
 
 
-# A contended attempt is never good enough for the committed round
-# artifact (VERDICT r8: a flagged 14.2 s was recorded as BENCH_r08's
-# headline and read as a fantasy trend point) — retry the WHOLE
-# measurement up to this many times and keep the first clean one.
-MAX_ATTEMPTS = 3
-
-
-def select_attempt(attempts: list[dict]) -> dict:
-    """The attempt the committed artifact records, pure so tests can
-    pin it: uncontended beats contended, then a healthy par band;
-    ties broken by the faster total. A degraded window only INFLATES
-    wall time, so among comparable attempts the fastest is the
-    least-disturbed measurement."""
-    return min(
-        attempts,
-        key=lambda a: (
-            int(a["contended"]),
-            int(a["par_band"] != "healthy"),
-            min(a["totals"]),
-        ),
-    )
-
-
 def _ordered_bench_queries(registry) -> list[str]:
     bench_queries = [name for name, spec in registry.items() if spec.bench]
     # Bill the shared shingle-set build to its natural owner:
@@ -469,20 +395,16 @@ def _poll_and_drain(proc, observe=None, poll_sleep: float = 1.0):
     return b"".join(chunks), own
 
 
-def _one_attempt(sf_dir: str, ncpus: int, own: set[int] | None = None) -> dict:
-    """One full measurement attempt: pass 1, the conditional second
-    pass (BASELINE.md two-run rule), and the contended verdict. Each
-    pass is its own subprocess, so both are the same cold
-    measurement. Returns every pass's per-query timings so the
-    committed JSON is machine-readable trend evidence, not just a
-    headline total.
-
-    ``own`` carries the observed-own JVM pid set ACROSS attempts
-    (mutated in place): a just-exited pass's JVM reparented to init
-    would otherwise be counted foreign at the next attempt's
-    jvms_start sample and burn all retries on an idle host."""
-    if own is None:
-        own = set()
+def _measure(sf_dir: str, ncpus: int) -> dict:
+    """The measurement: pass 1, the conditional second pass
+    (BASELINE.md two-run rule), and the contended verdict. Each pass
+    is its own subprocess, so both are the same cold measurement.
+    Returns every pass's per-query timings so the committed JSON is
+    machine-readable trend evidence, not just a headline total.
+    ``own`` collects the java pids seen as ours while a pass ran, so
+    pass 1's JVM lingering after its python parent exits is never
+    read as a foreign tenant by the later samples."""
+    own: set[int] = set()
     jvms_start = _foreign_jvms(own)
     load1_start = os.getloadavg()[0]
     start_flagged = bool(jvms_start) or load1_start > 0.15 * ncpus
@@ -498,7 +420,7 @@ def _one_attempt(sf_dir: str, ncpus: int, own: set[int] | None = None) -> dict:
         # Auto second pass (BASELINE.md two-run rule): a second cold
         # subprocess, then report the faster pass. >25% total
         # disagreement means the host is actively contended — flag
-        # the attempt either way.
+        # the run either way.
         print(
             f"# start flagged (foreign JVMs start={jvms_start} "
             f"mid={jvms_mid}, load1_start {load1_start:.1f} on {ncpus} "
@@ -537,55 +459,14 @@ def main() -> None:
     cpu_calib = _cpu_calibration()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    # Retry-into-a-healthy-window (VERDICT r13 item 1): the r13 round's
-    # official number was a par_band=degraded artifact because the
-    # retry loop only knew about CONTENTION (a sharing tenant), not a
-    # degraded hypervisor window — every verified plan win was
-    # invisible in the driver's ground truth. The parallel calibration
-    # now runs immediately BEFORE each attempt so par_band describes
-    # that attempt's window, a degraded attempt retries exactly like a
-    # contended one (bounded, with a longer sleep — steal windows decay
-    # slower than a JVM exiting), and the recorded attempt is the best
-    # clean one: healthy+uncontended first, then uncontended, then the
-    # last attempt. If every retry was degraded the value is still
-    # emitted, with ``value_normalized`` (value / cpu_calib_sec, the
-    # BASELINE.md cross-host comparison figure) for trend consumers.
-    attempts = []
-    own: set[int] = set()
-    for i in range(MAX_ATTEMPTS):
-        par_i = _cpu_calibration_parallel()
-        attempt = _one_attempt(sf_dir, ncpus, own)
-        attempt["par_calib_sec"] = par_i
-        attempt["par_band"] = par_band(par_i)
-        attempts.append(attempt)
-        if not attempt["contended"] and attempt["par_band"] == "healthy":
-            break
-        print(
-            f"# attempt {i + 1}/{MAX_ATTEMPTS} "
-            f"{'CONTENDED' if attempt['contended'] else 'DEGRADED'} "
-            f"(pass totals {attempt['totals']}, par {par_i:.2f}, "
-            f"{attempt['contention']}) — "
-            + ("retrying" if i + 1 < MAX_ATTEMPTS else "giving up"),
-            file=sys.stderr,
-        )
-        if i + 1 < MAX_ATTEMPTS:
-            time.sleep(5 if attempt["contended"] else 20)
-
-    final = select_attempt(attempts)
+    final = _measure(sf_dir, ncpus)
     contended = final["contended"]
     if contended:
         print(
-            "# ALL ATTEMPTS CONTENDED — this output is NOT a trend "
-            "point (trend_point: false); re-run solo",
+            "# CONTENDED — this output is NOT a trend point "
+            "(trend_point: false); re-run solo",
             file=sys.stderr,
         )
-    elif final["par_band"] == "degraded":
-        print(
-            "# all attempts in a DEGRADED window — value recorded, "
-            "compare value_normalized across rounds",
-            file=sys.stderr,
-        )
-    cpu_calib_par = final["par_calib_sec"]
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     cpu_calib_end = _cpu_calibration()
     # COMPACT final stdout line. Round 11's committed BENCH_r11.json
@@ -593,8 +474,8 @@ def main() -> None:
     # passes x 20 pass_queries + pass_one_time) past the driver's
     # stdout tail-capture window, truncating the headline fields. The
     # stdout line now carries ONLY what a cross-round trend consumer
-    # needs (metric/value/queries/sf/calib x3/contended/trend_point/
-    # attempts/pass_totals); the per-pass repeat evidence moves to the
+    # needs (metric/value/queries/sf/calib x2/contended/trend_point/
+    # pass_totals); the per-pass repeat evidence moves to the
     # committed sidecar BENCH_DETAIL_last.json next to this file.
     out = {
         "metric": "headline_queries_total_sec",
@@ -603,19 +484,11 @@ def main() -> None:
         "queries": final["timings"],
         "sf": float(sf),
         "cpu_calib_sec": cpu_calib,
-        "cpu_calib_par_sec": cpu_calib_par,
         "cpu_calib_end_sec": cpu_calib_end,
-        "par_band": final["par_band"],
-        # Cross-host comparison figure (BASELINE.md convention):
-        # headline seconds normalized by the single-thread host
-        # fingerprint. THE number to trend when par_band is degraded.
-        "value_normalized": round(min(final["totals"]) / cpu_calib, 2),
         "contended": contended,
-        # The one bit a trend consumer must check: false means every
-        # retry was contended and "value" is measurement noise.
+        # The one bit a trend consumer must check: false means the
+        # run was contended and "value" is measurement noise.
         "trend_point": not contended,
-        "attempts": len(attempts),
-        "attempt_par_calib_secs": [a["par_calib_sec"] for a in attempts],
         "pass_totals": final["totals"],
     }
     # recorded pass's one-time costs as top-level fields too, for
@@ -623,8 +496,8 @@ def main() -> None:
     out.update(final["one_time"])
     detail = {
         **out,
-        # Per-pass per-query seconds for every pass of the recorded
-        # attempt — the back-to-back repeat evidence, machine-readable
+        # Per-pass per-query seconds for every pass of the run —
+        # the back-to-back repeat evidence, machine-readable
         # (VERDICT r8 #2) instead of living only in BASELINE.md prose.
         "pass_queries": final["pass_queries"],
         # Per-pass one-time artifact costs (gate server start, docs

@@ -672,7 +672,7 @@ def _orders_gate_server(sf_dir: str) -> int:
             stdout=subprocess.PIPE,
             env=env,
         )
-        for _ in range(int(os.environ.get("SG_GATE_WORKERS", GATE_WORKERS)))
+        for _ in range(GATE_WORKERS)
     ]
     for p in procs:
         if b"READY" not in p.stdout.readline():

@@ -13,6 +13,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -90,6 +91,35 @@ def pretouch_enabled(mem: str, env: str | None) -> bool:
     return _mem_gb(mem) >= 16.0
 
 
+def _mem_available_gb() -> float | None:
+    """MemAvailable from /proc/meminfo in GiB; None where the file or
+    the field is missing (non-Linux hosts)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) / 1024.0**2
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def warn_if_pretouch_exceeds_ram(mem: str) -> None:
+    """Warn when a pre-committed ``mem`` heap is larger than the RAM
+    the host has free: AlwaysPreTouch zeroes every heap page at JVM
+    start, so such a session swaps or is OOM-killed before it runs a
+    query."""
+    avail = _mem_available_gb()
+    if avail is not None and _mem_gb(mem) > avail:
+        warnings.warn(
+            f"heap pretouch is on for a {mem} driver heap but only "
+            f"{avail:.1f} GiB of RAM is available; set SG_PRETOUCH=0 "
+            f"or a smaller SPARK_GRAFT_DRIVER_MEM",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
 def driver_java_options(
     user_opts: str | None, mem: str, pretouch: bool
 ) -> str | None:
@@ -110,7 +140,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     master = master or f"local[{cpus}]"
     # Local mode: shuffle partitions ~ cores. On a real cluster this is
@@ -146,13 +176,10 @@ def get_spark(
         # faster (map medians -39%, scoring-stage max task -21%) with
         # no codec-free stage improved — the win is the byte
         # reduction, not window drift. At the 17 MB bench inputs the
-        # codec is in the noise either way. SG_IO_CODEC overrides
-        # (the probe's A/B hook and an lz4 escape hatch for
-        # high-entropy payloads per the guide's "measure both").
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SG_IO_CODEC", "zstd"),
-        )
+        # codec is in the noise either way. A caller that needs lz4
+        # (high-entropy payloads) passes it in extra_conf, which is
+        # applied last.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", jvm_mem(mem))
         .config("spark.ui.enabled", "false")
     )
@@ -160,10 +187,11 @@ def get_spark(
     # Pretouch only takes effect when this call launches the gateway
     # JVM (first session of the process) — exactly the fresh-JVM case
     # the first-wave page-fault cost belongs to.
+    pretouch = pretouch_enabled(mem, os.environ.get("SG_PRETOUCH"))
+    if pretouch:
+        warn_if_pretouch_exceeds_ram(mem)
     opts = driver_java_options(
-        conf.get("spark.driver.extraJavaOptions"),
-        mem,
-        pretouch_enabled(mem, os.environ.get("SG_PRETOUCH")),
+        conf.get("spark.driver.extraJavaOptions"), mem, pretouch
     )
     if opts is not None:
         conf["spark.driver.extraJavaOptions"] = opts

@@ -30,7 +30,7 @@ python -m pytest tests/ -x -q
 
 echo "== bench CLI (one JSON line expected) =="
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.001}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 python bench.py 2>/dev/null | python -c '
 import json, sys
 line = sys.stdin.readline()

@@ -28,6 +28,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import smoke_scale as sm  # noqa: E402
+from bench import _cpu_calibration  # noqa: E402
+
 N_ROWS = int(os.environ.get("CONNECTOR_ROWS", "2000000"))
 PAGE = 500  # the gate page size (advanced._gate_paginator)
 STRIDES = (2, 8, 32)
@@ -138,8 +141,6 @@ def start_server() -> int:
 
 
 def main() -> None:
-    import smoke_scale as sm
-
     from pyspark.sql import functions as F
 
     from go_integ_spark.operators.advanced import _gate_paginator
@@ -152,12 +153,8 @@ def main() -> None:
     from go_integ_spark.sources.source import HttpStream
 
     port = start_server()
-    spark = get_spark(
-        app_name="probe_connector_scale",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(app_name="probe_connector_scale")
     spark.sparkContext.setLogLevel("ERROR")
-    ui = "http://localhost:4040"
 
     t0 = time.perf_counter()
     warmup_datasource(spark, num_partitions=max(STRIDES))
@@ -177,7 +174,7 @@ def main() -> None:
     want_sum = N_ROWS * (N_ROWS - 1) // 2
     results = {}
     for strides in STRIDES:
-        lo = sm._max_stage_id(ui) + 1
+        lo = sm._max_stage_id(spark) + 1
         t0 = time.perf_counter()
         df, _ = stream_dataframe(
             spark,
@@ -198,7 +195,7 @@ def main() -> None:
         results[f"strides_{strides}"] = {
             "sec": secs,
             "rows_per_sec": round(N_ROWS / secs),
-            "stages": [lo, sm._max_stage_id(ui)],
+            "stages": [lo, sm._max_stage_id(spark)],
         }
         print(
             f"== {strides} strides: {N_ROWS} rows in {secs}s "
@@ -206,7 +203,7 @@ def main() -> None:
             flush=True,
         )
 
-    report = sm.stage_report(ui)
+    report = sm.stage_report(spark)
     for s in report:
         if s["tasks"] < 2:
             continue
@@ -218,9 +215,6 @@ def main() -> None:
         )
     base = results[f"strides_{STRIDES[0]}"]["sec"]
     top = results[f"strides_{STRIDES[-1]}"]["sec"]
-    from bench import _cpu_calibration, _cpu_calibration_parallel, par_band
-
-    calib_par = _cpu_calibration_parallel()
     summary = {
         "rows": N_ROWS,
         "page_size": PAGE,
@@ -231,8 +225,6 @@ def main() -> None:
         "speedup_low_to_high": round(base / top, 2),
         "strides": list(STRIDES),
         "cpu_calib_sec": _cpu_calibration(),
-        "cpu_calib_par_sec": calib_par,
-        "par_band": par_band(calib_par),
     }
     print(json.dumps(summary))
     out = os.environ.get("SMOKE_OUT")

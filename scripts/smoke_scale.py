@@ -7,12 +7,13 @@ injected near-dup clusters AND a heavy 16-word boilerplate paragraph
 to pressure both the LSH ``max_bucket`` cap and the paragraph-dedup
 hot hash key), runs the flagship dedup/similarity/curation/text
 queries against it, and reports per-stage shuffle volume and
-task-time skew from the Spark UI REST API. The pass criteria
-(recorded in STATUS.md): no task over 10x the median task time in
-any shuffle stage, and the cross-engine float-gate margins
-(tests/test_round7_ops.py pins) hold on the scaled corpus too — the
-r7 int64-overflow bug was only caught because the 10x corpus had 30x
-the magnitude; envelope/margin failure classes SCALE WITH DATA.
+task-time skew from Spark's in-process status store (the UI stays
+off). The pass criteria (recorded in STATUS.md): no task over 10x
+the median task time in any shuffle stage, and the cross-engine
+float-gate margins (tests/test_round7_ops.py pins) hold on the scaled
+corpus too — the r7 int64-overflow bug was only caught because the
+10x corpus had 30x the magnitude; envelope/margin failure classes
+SCALE WITH DATA.
 
 ``SMOKE_SCALE`` (default 10) multiplies the gate corpus: 10 -> 50k
 docs / 20k vectors (~2 min on local[32]); 100 -> 500k docs / 200k
@@ -34,9 +35,10 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _cpu_calibration  # noqa: E402
 
 SCALE = int(os.environ.get("SMOKE_SCALE", "10"))
 # Comma-separated allowlist of smoke lines (empty = run everything).
@@ -255,26 +257,52 @@ def generate_multilang() -> None:
           f"{len(MULTILANG)} languages in {DATA_DIR}/multilang")
 
 
-
-def _max_stage_id(ui: str) -> int:
-    """Highest stage id the UI has seen — sampled before/after each
-    smoke line so every stage in the report is ATTRIBUTABLE to the
-    query that ran it (r10: the 6.6x worst-skew stage was guessable
-    but not provable before this)."""
-    try:
-        apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages")
-        )
-        return max((s["stageId"] for s in stages), default=-1)
-    except Exception:
-        return -1
+def _seq(jseq) -> list:
+    """A Scala Seq returned by the status store as a Python list."""
+    it = jseq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
 
 
-def _data_task_skew(
-    ui: str, app_id: str, sid: int, att: int
-) -> tuple[float | None, int]:
+def _status_store(spark):
+    """Spark's AppStatusStore: the store the UI's REST API reads,
+    live with spark.ui.enabled=false."""
+    return spark.sparkContext._jsc.sc().statusStore()
+
+
+def _doubles(spark, xs: list[float]):
+    arr = spark.sparkContext._gateway.new_array(spark._jvm.double, len(xs))
+    for i, x in enumerate(xs):
+        arr[i] = x
+    return arr
+
+
+def _stage_list(spark, complete_only: bool = False) -> list:
+    """StageData rows from the status store, newest first."""
+    statuses = (
+        [spark._jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE]
+        if complete_only
+        else []
+    )
+    # (statuses, details, withSummaries, quantiles, taskStatus): the
+    # REST stages endpoint's defaults
+    stages = _status_store(spark).stageList(
+        statuses, False, False, _doubles(spark, []), []
+    )
+    return _seq(stages)
+
+
+def _max_stage_id(spark) -> int:
+    """Highest stage id the status store has seen — sampled
+    before/after each smoke line so every stage in the report is
+    ATTRIBUTABLE to the query that ran it (r10: the 6.6x worst-skew
+    stage was guessable but not provable before this)."""
+    return max((s.stageId() for s in _stage_list(spark)), default=-1)
+
+
+def _data_task_skew(spark, sid: int, att: int) -> tuple[float | None, int]:
     """max/median executor run time over DATA-BEARING tasks only,
     plus the count of empty tasks excluded. Streaming micro-batch
     file-read stages schedule defaultParallelism tasks but only
@@ -282,56 +310,27 @@ def _data_task_skew(
     median under a real 48 s task reads as four-digit "skew" when no
     row was ever distributed unevenly (the 1000x probe's one FAIL was
     exactly this artifact). Raw skew is still reported alongside."""
-    # Page through taskList: a single ?length=N fetch silently
-    # truncates stages with more tasks, so skew would be computed
-    # over a partial sample at larger probe scales (ADVICE r10).
-    # Explicit sortBy=ID pins a deterministic order across the
-    # separate REST requests (the default sort is not contractually
-    # stable, so pages could duplicate/skip tasks — ADVICE r11), and
-    # the dedupe-by-taskId below guards against overlap regardless.
-    tasks = []
-    page = 1000
-    try:
-        while True:
-            batch = json.load(
-                urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app_id}/stages/{sid}/{att}/"
-                    f"taskList?offset={len(tasks)}&length={page}&sortBy=ID"
-                )
-            )
-            tasks.extend(batch)
-            if len(batch) < page:
-                break
-    except Exception:
-        # A fetch failure MID-pagination must not yield skew over a
-        # partial sample (the straggler could be in the missing
-        # tail) — fall back to None so the caller uses the raw
-        # taskSummary skew, which always includes the true max.
-        return None, 0
-    seen_ids: set = set()
-    deduped = []
-    for t in tasks:
-        tid = t.get("taskId")
-        if tid in seen_ids:
-            continue
-        seen_ids.add(tid)
-        deduped.append(t)
-    tasks = deduped
+    store = _status_store(spark)
     runs = []
     empties = 0
-    for t in tasks:
-        m = t.get("taskMetrics") or {}
+    # every task of the stage attempt in one call (maxTasks = Int.Max)
+    for t in _seq(store.taskList(sid, att, 2**31 - 1)):
+        m = t.taskMetrics()
+        if m.isEmpty():
+            empties += 1
+            continue
+        m = m.get()
         # RECORDS, not bytes: a split that covers no row-group start
         # still reads the parquet FOOTER (bytesRead > 0, records 0) —
         # exactly the 26-of-30 no-op tasks this filter must exclude.
         moved = (
-            m.get("inputMetrics", {}).get("recordsRead", 0)
-            + m.get("shuffleReadMetrics", {}).get("recordsRead", 0)
-            + m.get("shuffleWriteMetrics", {}).get("recordsWritten", 0)
-            + m.get("outputMetrics", {}).get("recordsWritten", 0)
+            m.inputMetrics().recordsRead()
+            + m.shuffleReadMetrics().recordsRead()
+            + m.shuffleWriteMetrics().recordsWritten()
+            + m.outputMetrics().recordsWritten()
         )
         if moved > 0:
-            runs.append(m.get("executorRunTime", 0))
+            runs.append(m.executorRunTime())
         else:
             empties += 1
     if not runs:
@@ -341,38 +340,30 @@ def _data_task_skew(
     return round(runs[-1] / med, 1), empties
 
 
-def stage_report(ui: str) -> list[dict]:
+def stage_report(spark) -> list[dict]:
     """Per completed stage: shuffle bytes + task-time quantiles."""
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages?status=complete")
-    )
+    store = _status_store(spark)
+    quantiles = _doubles(spark, [0.5, 1.0])
     out = []
-    for s in stages:
-        sid, att = s["stageId"], s["attemptId"]
-        try:
-            q = json.load(
-                urllib.request.urlopen(
-                    f"{ui}/api/v1/applications/{app_id}/stages/{sid}/{att}/"
-                    "taskSummary?quantiles=0.5,1.0"
-                )
-            )
-            med, mx = q["executorRunTime"]
-        except Exception:
-            med = mx = 0.0
+    for s in _stage_list(spark, complete_only=True):
+        sid, att = s.stageId(), s.attemptId()
+        dist = store.taskSummary(sid, att, quantiles)
+        med = mx = 0.0
+        if dist.isDefined():
+            run = dist.get().executorRunTime()
+            med, mx = run.apply(0), run.apply(1)
         skew = round(mx / med, 1) if med else None
         data_skew, empties = skew, 0
         if skew is not None and skew > 10:
             # re-measure over data-bearing tasks before calling it skew
-            data_skew, empties = _data_task_skew(ui, app_id, sid, att)
+            data_skew, empties = _data_task_skew(spark, sid, att)
         out.append(
             {
                 "stage": sid,
-                "name": s["name"].split("\n")[0][:60],
-                "tasks": s["numCompleteTasks"],
-                "shuffle_write_mb": round(s["shuffleWriteBytes"] / 1e6, 2),
-                "shuffle_read_mb": round(s["shuffleReadBytes"] / 1e6, 2),
+                "name": s.name().split("\n")[0][:60],
+                "tasks": s.numCompleteTasks(),
+                "shuffle_write_mb": round(s.shuffleWriteBytes() / 1e6, 2),
+                "shuffle_read_mb": round(s.shuffleReadBytes() / 1e6, 2),
                 "task_med_ms": med,
                 "task_max_ms": mx,
                 "skew": skew,
@@ -381,6 +372,28 @@ def stage_report(ui: str) -> list[dict]:
             }
         )
     return out
+
+
+def verdict_eligible(s: dict) -> bool:
+    """Stall-robust eligibility (VERDICT r12 item 3): the r12 probes
+    carried two red-looking headlines — knn_final 11.8x from ONE 5.1 s
+    host stall on a 0.43 s-median 1 MB/task bookkeeping stage, cc_ab
+    51.5x from one 4.6 s GC stall on a 14 MB even stage — that each
+    needed prose to explain away. A stage enters the straggler
+    verdict only when its skew could be a PLAN problem: its median
+    task is >= 1 s (real per-task work; a single-task stall can't
+    read as 10x), or its per-task shuffle volume is material (>= 16
+    MB/task — a data distribution CAN be the cause), or its max task
+    is >= 30 s (a straggler that long is material whatever the
+    stage's bookkeeping looks like, so a genuinely mis-packed bin can
+    never hide behind this floor). Everything still prints;
+    ineligible stages just can't set the PASS/FAIL."""
+    if s["task_max_ms"] >= 30_000:
+        return True
+    per_task_mb = (s["shuffle_write_mb"] + s["shuffle_read_mb"]) / max(
+        s["tasks"], 1
+    )
+    return s["task_med_ms"] >= 1000 or per_task_mb >= 16
 
 
 def check_float_margins() -> dict:
@@ -453,13 +466,8 @@ def main() -> None:
     # SF — the 1000x probe runs 256, not core-count 32; pair with
     # SPARK_GRAFT_DRIVER_MEM for the single-JVM heap).
     shuffle = int(os.environ.get("SMOKE_SHUFFLE", "0")) or None
-    spark = get_spark(
-        app_name="smoke_scale",
-        shuffle_partitions=shuffle,
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(app_name="smoke_scale", shuffle_partitions=shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-    ui = "http://localhost:4040"
     reg = load_all()
 
     # One-time artifacts billed to their own lines (the bench.py
@@ -468,12 +476,12 @@ def main() -> None:
     results = {}
 
     def timed(name, thunk, extra=None):
-        lo = _max_stage_id(ui) + 1
+        lo = _max_stage_id(spark) + 1
         t0 = time.perf_counter()
         n = thunk()
         secs = round(time.perf_counter() - t0, 2)
         results[name] = {"rows": n, "sec": secs,
-                         "stages": [lo, _max_stage_id(ui)]}
+                         "stages": [lo, _max_stage_id(spark)]}
         if extra:
             results[name].update(extra() if callable(extra) else extra)
         print(f"\n== {name}: {n} rows in {secs}s ==")
@@ -750,30 +758,8 @@ def main() -> None:
             f"expected pairs in >=9 of 11 target langs, got {ml_langs}"
         )
 
-    report = stage_report(ui)
+    report = stage_report(spark)
     shuffly = [s for s in report if s["shuffle_write_mb"] or s["shuffle_read_mb"]]
-
-    def verdict_eligible(s: dict) -> bool:
-        # Stall-robust eligibility (VERDICT r12 item 3): the r12
-        # probes carried two red-looking headlines — knn_final 11.8x
-        # from ONE 5.1 s host stall on a 0.43 s-median 1 MB/task
-        # bookkeeping stage, cc_ab 51.5x from one 4.6 s GC stall on a
-        # 14 MB even stage — that each needed prose to explain away.
-        # A stage enters the straggler verdict only when its skew
-        # could be a PLAN problem: its median task is >= 1 s (real
-        # per-task work; a single-task stall can't read as 10x), or
-        # its per-task shuffle volume is material (>= 16 MB/task — a
-        # data distribution CAN be the cause), or its max task is
-        # >= 30 s (a straggler that long is material whatever the
-        # stage's bookkeeping looks like, so a genuinely mis-packed
-        # bin can never hide behind this floor). Everything still
-        # prints; ineligible stages just can't set the PASS/FAIL.
-        if s["task_max_ms"] >= 30_000:
-            return True
-        per_task_mb = (s["shuffle_write_mb"] + s["shuffle_read_mb"]) / max(
-            s["tasks"], 1
-        )
-        return s["task_med_ms"] >= 1000 or per_task_mb >= 16
 
     def eff_skew(s: dict) -> float:
         # data-bearing-task skew where it was measured, raw otherwise,
@@ -811,15 +797,6 @@ def main() -> None:
     worst_owner = owner(worst_stage["stage"]) if worst_stage else "-"
     print(f"\nworst shuffle-stage DATA-task skew (max/median): {worst}x "
           f"(in {worst_owner}; {'PASS' if worst < 10 else 'FAIL'} vs the 10x bound)")
-    # Host fingerprint (r12): the 2026-08-16 probe session measured
-    # cpu_calib_par at 9.3-14.2 s vs the 3.5-4.4 s host norm (13%
-    # hypervisor steal + 38% system time under all-core load) —
-    # without these fields a degraded-host wall reads as a plan
-    # regression. Ratios (skew) stay comparable; walls need the par
-    # calib next to them.
-    from bench import _cpu_calibration, _cpu_calibration_parallel, par_band
-
-    calib_par = _cpu_calibration_parallel()
     summary = {
         "queries": results,
         "worst_skew": worst,
@@ -832,13 +809,9 @@ def main() -> None:
         "order_seed": os.environ.get("SMOKE_ORDER_SEED"),
         "shuffle_partitions": os.environ.get("SMOKE_SHUFFLE"),
         "only": sorted(ONLY) if ONLY else None,
+        # single-thread host fingerprint measured at report time:
+        # skew ratios compare across hosts, walls need this next to them
         "cpu_calib_sec": _cpu_calibration(),
-        "cpu_calib_par_sec": calib_par,
-        # measured AT report time, i.e. right when the verdict is
-        # computed — a flagged PASS/FAIL self-describes its host
-        # (VERDICT r12 item 3: two r12 headlines were host stalls
-        # recorded without the calib that would have said so)
-        "par_band": par_band(calib_par),
     }
     print(json.dumps(summary))
     # Standing-gate artifact (VERDICT r10 #8): SMOKE_OUT=path writes

@@ -14,10 +14,8 @@ PKG = os.path.join(
 ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SG_IO_CODEC",
     "SG_PRETOUCH",
     "SG_STATE_PARTITIONS",
-    "SG_GATE_WORKERS",
 }
 
 

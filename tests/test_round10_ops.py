@@ -1,50 +1,5 @@
-"""Round-10 regression pins: bench harness drain/attempt-carry fixes
-(ADVICE r9), broadcast codebooks, the Arrow bigram fold, and the
-production-shaped embedding-dedup operating point."""
-
-import subprocess
-import sys
-
-import bench
-
-
-def test_bench_drain_survives_output_larger_than_pipe_buffer():
-    """ADVICE r9 (bench.py:319): the parent must drain the child's
-    stdout WHILE polling — a child emitting more than the ~64KB pipe
-    buffer would otherwise block on write and the parent would poll
-    forever. Pin with a 2MB payload child (deadlocks inside the test
-    timeout if the drain regresses)."""
-    payload_kb = 2048
-    proc = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            f"import sys; sys.stdout.write('x' * {payload_kb} * 1024 + '\\n')",
-        ],
-        stdout=subprocess.PIPE,
-    )
-    out, own = bench._poll_and_drain(proc, observe=set, poll_sleep=0.05)
-    assert proc.returncode == 0
-    assert len(out) == payload_kb * 1024 + 1
-    assert own == set()
-
-
-def test_bench_attempts_share_observed_own_jvm_set():
-    """ADVICE r9 (bench.py:337): the observed-own pid set must thread
-    ACROSS attempts — a just-exited pass's JVM reparented to init
-    must not be re-classified foreign at the next attempt's
-    jvms_start sample. Pin the mechanism: _one_attempt takes the
-    carried set and _foreign_jvms excludes every remembered pid."""
-    import inspect
-
-    sig = inspect.signature(bench._one_attempt)
-    assert "own" in sig.parameters, "attempt must accept the carried own set"
-    # _foreign_jvms must drop remembered pids even when they are no
-    # longer our descendants (the reparented-to-init case)
-    ppid, javas = bench._proc_snapshot()
-    assert bench._foreign_jvms(set(javas)) == [p for p in []] or all(
-        p not in set(javas) for p in bench._foreign_jvms(set(javas))
-    )
+"""Round-10 regression pins: broadcast codebooks, the Arrow bigram
+fold, and the production-shaped embedding-dedup operating point."""
 
 
 def _synth_bitext_v(spark, langs, n_per_lang, dim=8, seed=7):

@@ -1,19 +1,11 @@
-"""Round-13 pins: the bounded alias search, the per-block pair cap,
-the bench par_band verdict, and the stall-robust probe skew
-eligibility rule."""
+"""Round-13 pins: the bounded alias search and the per-block pair
+cap."""
 
 from __future__ import annotations
-
-import os
-import sys
 
 import pytest
 
 from go_integ_spark.session import get_spark
-
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
-)
 
 
 @pytest.fixture(scope="module")
@@ -44,79 +36,6 @@ class TestAliasSearchBounded:
             assert aliases is not None
             parts = {_murmur3_int(a) % n_parts for a in aliases}
             assert len(parts) == n_bins
-
-
-class TestParBand:
-    def test_band_against_recorded_host_class(self, monkeypatch):
-        """bench.par_band: healthy sessions on this host class
-        measure par-calib 3.5-4.6 s, degraded windows 8.5-14.2 s;
-        the 5.0 ceiling splits the clusters (BASELINE.md r13 rule)."""
-        monkeypatch.delenv("SG_PAR_HEALTHY_MAX", raising=False)
-        from bench import par_band
-
-        assert par_band(3.7) == "healthy"
-        assert par_band(4.6) == "healthy"
-        assert par_band(8.51) == "degraded"  # the r12 official bench
-        assert par_band(14.2) == "degraded"
-        monkeypatch.setenv("SG_PAR_HEALTHY_MAX", "7.0")
-        assert par_band(6.4) == "healthy"  # r7-class host, re-banded
-
-
-class TestSkewVerdictEligibility:
-    def test_r12_stall_flags_declassified_real_flags_kept(self):
-        """The stall-robust rule (VERDICT r12 item 3): the two r12
-        false headlines are ineligible, every real packing defect
-        ever found stays eligible."""
-        from reemit_skew import eligible
-
-        knn_final_stall = {  # 11.8x: one 5.1 s stall, 0.43 s median
-            "tasks": 256,
-            "shuffle_write_mb": 0.0,
-            "shuffle_read_mb": 260.44,
-            "task_med_ms": 432,
-            "task_max_ms": 5093,
-        }
-        assert not eligible(knn_final_stall)
-        cc_gc_stall = {  # 51.5x: one 4.6 s GC stall on a 14 MB stage
-            "tasks": 256,
-            "shuffle_write_mb": 14.0,
-            "shuffle_read_mb": 0.0,
-            "task_med_ms": 89,
-            "task_max_ms": 4600,
-        }
-        assert not eligible(cc_gc_stall)
-        bitext_forward = {  # the open 13.4x: 6.0 s median — REAL duty
-            "tasks": 1023,
-            "shuffle_write_mb": 100.0,
-            "shuffle_read_mb": 3000.0,
-            "task_med_ms": 6000,
-            "task_max_ms": 80700,
-        }
-        assert eligible(bitext_forward)
-        mispacked_bin = {  # r12's found defect class: 201.9 s max task
-            "tasks": 722,
-            "shuffle_write_mb": 0.0,
-            "shuffle_read_mb": 5.0,
-            "task_med_ms": 500,
-            "task_max_ms": 201_900,
-        }
-        assert eligible(mispacked_bin)  # >=30 s max floor catches it
-
-    def test_reemit_parses_committed_log_line(self, tmp_path):
-        from reemit_skew import replay
-
-        log = tmp_path / "probe.log"
-        log.write_text(
-            "stage  44 tasks=256 shufW=     0.0MB shufR=  260.44MB "
-            "task med/max=432/5093ms skew=11.8 | embedding_knn_graph\n"
-            "stage  12 tasks= 64 shufW=   500.0MB shufR=   500.0MB "
-            "task med/max=14900/104900ms skew=7.0 | embedding_knn_graph\n"
-        )
-        rep = replay(str(log))
-        assert rep["stages_parsed"] == 2
-        assert rep["worst_eligible_skew"] == 7.0
-        assert rep["verdict"] == "PASS"
-        assert len(rep["declassified_stall_flags"]) == 1
 
 
 def _sparse_neardup_embeddings(n=1500, dim=64, n_pairs=40, seed=11):

@@ -1,61 +1,67 @@
-"""Round-14 optimization pins: bench retry-into-healthy-window
-(VERDICT r13 item 1), the funnel near-dup de-array (item 2), and the
+"""Round-14 optimization pins: the session codec and pretouch
+defaults, the funnel near-dup de-array (VERDICT r13 item 2), and the
 cached_persist token key (ADVICE r13)."""
 
 from __future__ import annotations
 
-import bench
+import json
+import os
+import subprocess
+import sys
+
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _att(total, contended=False, band="healthy"):
-    return {"contended": contended, "par_band": band, "totals": [total]}
-
-
-def test_select_attempt_prefers_healthy_uncontended():
-    """VERDICT r13 item 1: a degraded attempt must not be recorded
-    when a later healthy one exists — and vice versa a healthy early
-    attempt must win over a faster-but-degraded later one."""
-    degraded = _att(20.0, band="degraded")
-    healthy = _att(30.0)
-    assert bench.select_attempt([degraded, healthy]) is healthy
-    assert bench.select_attempt([healthy, degraded]) is healthy
-
-
-def test_select_attempt_contended_loses_to_degraded():
-    """Contention (a sharing tenant) invalidates harder than a
-    degraded hypervisor window: the degraded-but-solo attempt is the
-    recordable one."""
-    contended = _att(18.0, contended=True)
-    degraded = _att(40.0, band="degraded")
-    assert bench.select_attempt([contended, degraded]) is degraded
+# Runs in a child interpreter: the override and the unset-CPUs
+# default only show in a session that get_spark itself launches.
+_FRESH_SESSION = """
+import json
+from go_integ_spark.session import get_spark
+s = get_spark(extra_conf={"spark.io.compression.codec": "lz4"})
+print(json.dumps({
+    "master": s.sparkContext.master,
+    "shuffle": s.conf.get("spark.sql.shuffle.partitions"),
+    "codec": s.sparkContext.getConf().get("spark.io.compression.codec"),
+}))
+s.stop()
+"""
 
 
-def test_select_attempt_ties_break_on_faster_total():
-    """Same verdict class -> the faster total is the least-disturbed
-    measurement (noise only ever inflates)."""
-    slow = _att(31.0)
-    fast = _att(29.0)
-    assert bench.select_attempt([slow, fast]) is fast
-    d_slow = _att(44.0, band="degraded")
-    d_fast = _att(41.0, band="degraded")
-    assert bench.select_attempt([d_slow, d_fast]) is d_fast
+@pytest.fixture(scope="module")
+def fresh_session_conf():
+    """Conf of a new get_spark session with SPARK_GRAFT_CPUS unset
+    and an lz4 codec passed in extra_conf."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
 
 
-def test_session_io_codec_default_and_override(monkeypatch):
+def test_session_io_codec_default_and_override(spark, fresh_session_conf):
     """r14 codec ship (guide §2.3/§9): zstd is the session default —
     A/B'd at the 1000x kNN probe, scoring-exchange shuffle -18.9%
-    bytes / -13.1% wall (SMOKE_r14_1000x_knn_codec_*.json) — and
-    SG_IO_CODEC overrides for probes/escape hatch."""
-    import inspect
+    bytes / -13.1% wall (SMOKE_r14_1000x_knn_codec_*.json) — and a
+    caller's extra_conf codec wins over it."""
+    assert spark.conf.get("spark.io.compression.codec") == "zstd"
+    assert fresh_session_conf["codec"] == "lz4"
 
-    from go_integ_spark import session as sess
 
-    src = inspect.getsource(sess.get_spark)
-    assert "spark.io.compression.codec" in src
-    monkeypatch.delenv("SG_IO_CODEC", raising=False)
-    assert 'os.environ.get("SG_IO_CODEC", "zstd")' in src
+def test_cpus_default_is_host_core_count(fresh_session_conf):
+    """With SPARK_GRAFT_CPUS unset the session sizes itself to this
+    host, not to a fixed core count."""
+    n = os.cpu_count()
+    assert fresh_session_conf["master"] == f"local[{n}]"
+    assert fresh_session_conf["shuffle"] == str(n)
 
 
 def test_live_session_uses_zstd_codec(spark):
@@ -276,3 +282,39 @@ class TestPretouchRegime:
         assert driver_java_options(None, "48gb", True) == (
             "-Xms49152m -XX:+AlwaysPreTouch"
         )
+
+    def test_warns_when_heap_exceeds_available_ram(self, monkeypatch):
+        """Pretouch commits the whole heap at JVM start, so a heap
+        larger than MemAvailable must be called out before launch,
+        naming the switch that turns it off."""
+        import warnings
+
+        from pyspark.sql import SparkSession
+
+        from go_integ_spark import session as sess
+
+        monkeypatch.setattr(sess, "_mem_available_gb", lambda: 14.5)
+        with pytest.warns(RuntimeWarning, match="SG_PRETOUCH=0"):
+            sess.warn_if_pretouch_exceeds_ram("48g")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            sess.warn_if_pretouch_exceeds_ram("8g")
+            monkeypatch.setattr(sess, "_mem_available_gb", lambda: None)
+            sess.warn_if_pretouch_exceeds_ram("48g")
+
+        # get_spark warns before it launches anything: the builder's
+        # getOrCreate is stubbed to hand back the conf it was given
+        monkeypatch.setattr(sess, "_mem_available_gb", lambda: 14.5)
+        monkeypatch.setattr(
+            SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+        )
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
+        monkeypatch.delenv("SG_PRETOUCH", raising=False)
+        with pytest.warns(RuntimeWarning, match="SG_PRETOUCH=0"):
+            conf = sess.get_spark()
+        assert "-XX:+AlwaysPreTouch" in conf["spark.driver.extraJavaOptions"]
+        monkeypatch.setenv("SG_PRETOUCH", "0")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            conf = sess.get_spark()
+        assert "spark.driver.extraJavaOptions" not in conf

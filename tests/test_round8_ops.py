@@ -204,25 +204,6 @@ def test_zipf_fit_matches_numpy_reference(spark):
     assert all(sl < 0 for (_, sl, _) in got.values())
 
 
-def test_bench_contended_classification():
-    """bench.py's contended verdict is load-bearing measurement QA
-    (r7's bogus 29.76 s trend point slipped through the old gate) —
-    pin the pure decision function."""
-    import bench
-
-    # single clean pass, no tenants
-    assert bench.classify_run([20.0], [], [], []) is False
-    # foreign JVM at any checkpoint -> contended, even if totals agree
-    assert bench.classify_run([20.0, 20.5], [123], [], []) is True
-    assert bench.classify_run([20.0, 20.5], [], [9], []) is True
-    assert bench.classify_run([20.0], [], [], [77]) is True
-    # two cold passes within 25% -> reproducible, start load was decay
-    assert bench.classify_run([24.0, 20.0], [], [], []) is False
-    # >25% disagreement -> actively contended
-    assert bench.classify_run([29.8, 20.0], [], [], []) is True
-    assert bench.classify_run([20.0, 29.8], [], [], []) is True
-
-
 def test_warmup_datasource_runs(spark):
     """The DataSource warmup read (bills worker spin-up outside the
     connector bench line) must stay runnable: empty page, 8
