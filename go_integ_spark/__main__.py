@@ -19,7 +19,7 @@ import json
 import os
 import sys
 
-from go_integ_spark.engine.envelope import RunInput
+from go_integ_spark.engine.envelope import parse_envelope
 from go_integ_spark.engine.lifecycle import Engine
 
 
@@ -54,25 +54,17 @@ def main(argv: list[str] | None = None) -> int:
     mod_name, _, attr = args.source.partition(":")
     source = getattr(importlib.import_module(mod_name), attr or "source")
 
-    run = RunInput(format=args.format)
-    cfg = _load_json_arg(args.config)
-    if cfg:
-        run.config = cfg
-    state = _load_json_arg(args.state)
-    if state:
-        names = source.stream_names()
-        if "" in state:  # global state fan-out (proto.go:90-101)
-            run.states = {n: state[""] for n in names}
-        else:
-            run.states = dict(state)
-    catalog = _load_json_arg(args.catalog)
-    if catalog and "streams" in catalog:
-        names = set()
-        for s in catalog["streams"]:
-            inner = s.get("stream", s)
-            if "name" in inner:
-                names.add(inner["name"])
-        run.selected_streams = names or None
+    # argv -> NDJSON envelope, parsed like any other run input
+    lines = [json.dumps({"type": "SETTINGS", "settings": {"format": args.format}})]
+    for typ, key, arg in (
+        ("CONFIG", "config", args.config),
+        ("STATE", "state", args.state),
+        ("CATALOG", "catalog", args.catalog),
+    ):
+        value = _load_json_arg(arg)
+        if value:
+            lines.append(json.dumps({"type": typ, key: value}))
+    run = parse_envelope(lines, source.stream_names())
 
     if args.out or args.compression != "none":
         from go_integ_spark.engine.compress import wrap_output

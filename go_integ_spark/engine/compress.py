@@ -2,11 +2,10 @@
 wraps the response writer in zstd when the client sends an
 ``Accept-Zstd`` header, proto.go:196-204).
 
-zstd has no stdlib codec on this Python, so the codec comes from
-``zstandard`` when installed, else from pyarrow's bundled libzstd
-(streaming CompressedOutput/InputStream — standard zstd frames, wire-
-compatible with the reference's client). gzip remains available as
-the stdlib fallback codec. Spark-side parquet/json writers take
+zstd has no stdlib codec on this Python, so the codec is pyarrow's
+bundled libzstd (streaming CompressedOutput/InputStream — standard
+zstd frames, wire-compatible with the reference's client). gzip
+remains available as the stdlib codec. Spark-side parquet/json writers take
 ``.option("compression", "zstd")`` natively — this module only covers
 the driver-side NDJSON pipe.
 """
@@ -51,39 +50,21 @@ class _NonClosingReader(io.RawIOBase):
 
 
 def _zstd_writer(raw: IO[bytes]) -> IO[str]:
-    try:
-        import zstandard  # noqa: PLC0415 - optional dependency
+    import pyarrow as pa  # noqa: PLC0415 - only zstd output needs it
 
-        return io.TextIOWrapper(
-            zstandard.ZstdCompressor().stream_writer(raw), encoding="utf-8"
-        )
-    except ImportError:
-        import pyarrow as pa  # noqa: PLC0415 - bundled libzstd fallback
-
-        return io.TextIOWrapper(
-            pa.CompressedOutputStream(
-                pa.PythonFile(_NonClosingWriter(raw), mode="w"), "zstd"
-            ),
-            encoding="utf-8",
-        )
+    stream = pa.CompressedOutputStream(
+        pa.PythonFile(_NonClosingWriter(raw), mode="w"), "zstd"
+    )
+    return io.TextIOWrapper(stream, encoding="utf-8")
 
 
 def _zstd_reader(raw: IO[bytes]) -> IO[str]:
-    try:
-        import zstandard  # noqa: PLC0415 - optional dependency
+    import pyarrow as pa  # noqa: PLC0415 - only zstd input needs it
 
-        return io.TextIOWrapper(
-            zstandard.ZstdDecompressor().stream_reader(raw), encoding="utf-8"
-        )
-    except ImportError:
-        import pyarrow as pa  # noqa: PLC0415 - bundled libzstd fallback
-
-        return io.TextIOWrapper(
-            pa.CompressedInputStream(
-                pa.PythonFile(_NonClosingReader(raw), mode="r"), "zstd"
-            ),
-            encoding="utf-8",
-        )
+    stream = pa.CompressedInputStream(
+        pa.PythonFile(_NonClosingReader(raw), mode="r"), "zstd"
+    )
+    return io.TextIOWrapper(stream, encoding="utf-8")
 
 
 def wrap_output(raw: IO[bytes], compression: str = "none") -> IO[str]:

@@ -19,9 +19,6 @@ class RunInput:
     catalog: dict | None = None  # accepted; stream selection honored
     selected_streams: set[str] | None = None
 
-    def state_for(self, stream: str) -> dict | None:
-        return self.states.get(stream)
-
 
 def parse_envelope(lines: IO[str] | list[str], stream_names: list[str]) -> RunInput:
     out = RunInput()

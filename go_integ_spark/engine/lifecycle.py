@@ -9,9 +9,8 @@ protocol-defined timing (Airbyte merged-at-close vs Singer inline —
 the writer owns that distinction).
 
 Spark integration: ``read_dataframes`` returns one DataFrame per
-stream. The scale path fetches pages inside executors via the Python
-DataSource (sources/datasource.py); the driver-side
-``createDataFrame`` path remains for small probes and tests.
+stream, each fetched inside executors by the Python DataSource
+(sources/datasource.py).
 """
 
 from __future__ import annotations
@@ -26,10 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from go_integ_spark.engine.envelope import RunInput
 from go_integ_spark.protocols import PROTOCOLS
-from go_integ_spark.protocols.base import ProtocolWriter, utc_now
+from go_integ_spark.protocols.base import Clock, ProtocolWriter, utc_now
 from go_integ_spark.schema.catalog import Catalog, CatalogStream
+from go_integ_spark.sources.datasource import stream_dataframe
 from go_integ_spark.sources.http import Transport
-from go_integ_spark.sources.source import Clock, HttpStream, Source
+from go_integ_spark.sources.source import HttpStream, Source
 
 
 @dataclass
@@ -165,65 +165,33 @@ class Engine:
         return buf.getvalue()
 
     # -- Spark path --------------------------------------------------------
-    # Driver-path buffering ceiling: a probe-scale convenience must
-    # never quietly become the production read path. Overridable per
-    # call for legitimately-larger probes.
-    DRIVER_FETCH_MAX_ROWS = 1_000_000
-
     def read_dataframes(
         self,
         source: Source,
         config: dict,
         states: dict[str, dict] | None = None,
         selected: set[str] | None = None,
-        distributed: bool = False,
-        max_driver_rows: int | None = None,
     ) -> tuple[dict[str, DataFrame], dict[str, Any]]:
-        """One DataFrame per selected stream + post-read states.
-
-        driver-side fetch (default): pages stream through the driver
-        into Arrow batches — right for connector-scale data (an HTTP
-        API is the bottleneck, not Spark). Guarded by a row ceiling
-        (``max_driver_rows``, default DRIVER_FETCH_MAX_ROWS): a pull
-        that exceeds it raises and points at the distributed path
-        instead of buffering an unbounded table on the driver.
-
-        distributed=True: register the stream as a Python DataSource
-        so fetching happens in executors (sources/datasource.py) —
-        right when the API supports page-range splitting.
-        """
+        """One DataFrame per selected stream + post-read states. Pages
+        are fetched in executors by the Python DataSource, with the
+        Engine's transport (pickled to the executors) and clock."""
         if self.spark is None:
             raise RuntimeError("Engine needs a SparkSession for read_dataframes")
         states = states or {}
-        ceiling = max_driver_rows if max_driver_rows is not None else self.DRIVER_FETCH_MAX_ROWS
         out: dict[str, DataFrame] = {}
         new_states: dict[str, Any] = {}
         for stream in source.streams:
             name = stream.schema.name
             if selected is not None and name not in selected:
                 continue
-            if distributed:
-                from go_integ_spark.sources.datasource import stream_dataframe
-
-                df, ns = stream_dataframe(
-                    self.spark, stream, config, states.get(name), self.transport
-                )
-            else:
-                pages, ns = stream.read(
-                    config, states.get(name), transport=self.transport, clock=self.clock
-                )
-                rows: list = []
-                for page in pages:
-                    rows.extend(page)
-                    if len(rows) > ceiling:
-                        raise RuntimeError(
-                            f"driver-side read of stream {name!r} exceeded "
-                            f"{ceiling} rows; use read_dataframes("
-                            "distributed=True) (Python DataSource, executor-"
-                            "side pagination) for reads of this size"
-                        )
-                df = self.spark.createDataFrame(rows, schema=stream.schema.struct)
-            out[name] = df
+            out[name], ns = stream_dataframe(
+                self.spark,
+                stream,
+                config,
+                states.get(name),
+                self.transport,
+                clock=self.clock,
+            )
             if ns is not None:
                 new_states[name] = ns
         return out, new_states

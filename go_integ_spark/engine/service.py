@@ -12,8 +12,8 @@ Routes:
 
 Compression: the reference wraps responses in zstd when the client
 sends ``Accept-Zstd`` (proto.go:196-204); honored here too (codec
-from ``zstandard`` or pyarrow's bundled libzstd — engine/compress.py),
-alongside standard ``Accept-Encoding: gzip``/``zstd``.
+from pyarrow's bundled libzstd — engine/compress.py), alongside
+standard ``Accept-Encoding: gzip``/``zstd``.
 
 Built on stdlib http.server: the service is a control-plane shim in
 front of the engine, not a data-plane component — heavy reads go

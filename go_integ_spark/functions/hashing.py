@@ -18,8 +18,6 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-H60_BITS = 60
-
 
 def h60(col: Column | str) -> Column:
     """60-bit engine-portable hash of a string column (Spark side)."""

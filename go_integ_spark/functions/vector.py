@@ -41,13 +41,6 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("e", e).withColumn("e_norm", norm(F.col("e")))
 
 
-def cosine_sim(alias_a: str, alias_b: str) -> Column:
-    """Cosine between two with_norm'd sides of a join."""
-    return dot(F.col(f"{alias_a}.e"), F.col(f"{alias_b}.e")) / (
-        F.col(f"{alias_a}.e_norm") * F.col(f"{alias_b}.e_norm")
-    )
-
-
 def cosine_sim_pd(vec_a, norm_a, vec_b, norm_b) -> Column:
     """Arrow-batched twin of ``dot(a, b) / (norm_a * norm_b)`` — the
     pair-scoring hot path of every candidate-verification join (ANN

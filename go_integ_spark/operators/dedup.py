@@ -145,16 +145,6 @@ def doc_shingle_sets(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def word_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, n, sid) — exploded distinct shingle IDs (one row per
-    doc x shingle), with the doc's set size carried alongside so
-    downstream pair counting never needs a separate sizes join.
-    """
-    return doc_shingle_sets(docs, k).select(
-        "doc_id", "n", F.explode("sids").alias("sid")
-    )
-
-
 def _pairs_from_sorted_array(arr_col: str) -> "F.Column":
     """All ordered pairs (a < b) from a sorted array column, generated
     JVM-side: flatten(transform x transform). Replaces a self-join —

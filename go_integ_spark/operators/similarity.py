@@ -33,7 +33,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_integ_spark.functions.vector import (
-    cosine_sim,
     cosine_sim_pd,
     dot,
     with_norm,

@@ -20,10 +20,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's file scans."""
     out: list[str] = []

@@ -1,19 +1,4 @@
 from go_integ_spark.schema.stream import Field, StreamSchema, SortOrder
-from go_integ_spark.schema.catalog import (
-    Catalog,
-    ConfiguredCatalog,
-    ConfiguredStream,
-    DestinationSyncMode,
-    SyncMode,
-)
+from go_integ_spark.schema.catalog import Catalog
 
-__all__ = [
-    "Field",
-    "StreamSchema",
-    "SortOrder",
-    "Catalog",
-    "ConfiguredCatalog",
-    "ConfiguredStream",
-    "SyncMode",
-    "DestinationSyncMode",
-]
+__all__ = ["Field", "StreamSchema", "SortOrder", "Catalog"]

@@ -1,30 +1,14 @@
-"""Catalog / ConfiguredCatalog model (reference:
-pkg/airbyte/types.go:25-55 — Stream, ConfiguredStream, Catalog,
-ConfiguredCatalog; sync modes types.go:6-23).
-
-A Catalog lists every stream a source offers; a ConfiguredCatalog is
-the user-selected subset with sync mode, cursor and destination mode
-— the engine's unit of planning for a ``read``.
+"""Catalog model (reference: pkg/airbyte/types.go:25-40 — Stream,
+Catalog): every stream a source offers, as emitted by ``discover``.
+A ``read``'s stream selection arrives in the run input
+(engine/envelope.py).
 """
 
 from __future__ import annotations
 
-import enum
 from dataclasses import dataclass, field
 
 from go_integ_spark.schema.stream import StreamSchema
-
-
-class SyncMode(enum.Enum):
-    # reference: pkg/airbyte/types.go:6-13
-    FULL_REFRESH = "full_refresh"
-    INCREMENTAL = "incremental"
-
-
-class DestinationSyncMode(enum.Enum):
-    # reference: pkg/airbyte/types.go:15-23
-    APPEND = "append"
-    OVERWRITE = "overwrite"
 
 
 @dataclass
@@ -60,21 +44,3 @@ class Catalog:
 
     def names(self) -> list[str]:
         return [s.schema.name for s in self.streams]
-
-
-@dataclass
-class ConfiguredStream:
-    # reference: pkg/airbyte/types.go:42-49
-    schema: StreamSchema
-    sync_mode: SyncMode = SyncMode.FULL_REFRESH
-    destination_sync_mode: DestinationSyncMode = DestinationSyncMode.APPEND
-    cursor_field: list[str] = field(default_factory=list)
-
-
-@dataclass
-class ConfiguredCatalog:
-    # reference: pkg/airbyte/types.go:51-55
-    streams: list[ConfiguredStream] = field(default_factory=list)
-
-    def selected_names(self) -> set[str]:
-        return {s.schema.name for s in self.streams}

@@ -129,16 +129,3 @@ def merge_upsert(
     merged = merged.localCheckpoint(eager=True)
     write_table(merged, path, mode="overwrite", format=format)
     return merged
-
-
-def append_stream(
-    dfs: dict[str, DataFrame],
-    base_path: str,
-    schemas: dict[str, StreamSchema],
-    mode: str = "append",
-) -> None:
-    """Write every synced stream under ``{base}/{stream}/`` with its
-    declared destination mode — the batch analogue of the protocol
-    sink, for downstream Spark consumption."""
-    for name, df in dfs.items():
-        write_table(df, f"{base_path}/{name}", mode=mode)

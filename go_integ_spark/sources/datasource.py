@@ -3,8 +3,9 @@ extraction *inside executors*, registered via
 ``spark.dataSource.register`` and read with
 ``spark.read.format("http_stream")``.
 
-This is the scale path for connector reads (the Spark-idiomatic
-answer to the reference's in-process runner loop, proto.go:283-293):
+This is the one Spark read path for connector streams (the Spark-
+idiomatic answer to the reference's in-process runner loop,
+proto.go:283-293):
 
 - **Projection pushdown for free**: Spark hands the reader the pruned
   schema; we forward the pruned field list into the HTTP query
@@ -16,23 +17,28 @@ answer to the reference's in-process runner loop, proto.go:283-293):
   — pagination chains run in parallel across executors. Token/
   link-style paginations are inherently sequential, so they get one
   partition (the API, not Spark, is the bottleneck there).
+- **One sync window per read**: the driver reads the clock once and
+  every partition's cursor bounds, plus the returned state, come
+  from that instant.
 - The stream spec travels to executors by pickle (everything in
   sources/ is picklable by construction).
 
-Driver-side alternative for small probes: Engine.read_dataframes
-(distributed=False).
+``Engine.read_dataframes`` reads every stream through this module.
 """
 
 from __future__ import annotations
 
 import base64
+import datetime as dt
+import functools
 import json
 import pickle
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from go_integ_spark.protocols.base import Clock, utc_now
 from go_integ_spark.sources.http import OffsetLimitPaginator
 from go_integ_spark.sources.source import HttpStream
 
@@ -47,6 +53,7 @@ class HttpStreamDataSource(DataSource):
     """options:
     - ``spec``: base64(pickle(HttpStream))      [required]
     - ``config``: JSON connector config          [required]
+    - ``now``: ISO instant closing the cursor window [required]
     - ``state``: JSON per-stream state           [optional]
     - ``num_partitions``: offset-stride fan-out  [optional, offset/limit only]
     """
@@ -70,6 +77,7 @@ class HttpStreamReader(DataSourceReader):
         self.stream = stream
         self.config = json.loads(options.get("config", "{}"))
         self.state = json.loads(options["state"]) if options.get("state") else None
+        self.now = dt.datetime.fromisoformat(options["now"])
         self.num_partitions = int(options.get("num_partitions", "1"))
         self.transport = (
             pickle.loads(base64.b64decode(options["transport"]))
@@ -92,67 +100,29 @@ class HttpStreamReader(DataSourceReader):
     def read(self, partition: _StridePartition) -> Iterator[tuple]:
         stream = self.stream
         if partition.num > 1:
-            stream = _with_stride(stream, partition.index, partition.num)
+            base = stream.paginator()
+            stream = replace(
+                stream,
+                paginator=functools.partial(
+                    OffsetLimitPaginator,
+                    offset_param=base.offset_param,
+                    limit_param=base.limit_param,
+                    page_size=base.page_size,
+                    start=partition.index * base.page_size,
+                    stride=partition.num,
+                ),
+            )
         pages, _ = stream.read(
-            self.config, self.state, transport=self.transport, fields=self.fields
+            self.config,
+            self.state,
+            transport=self.transport,
+            clock=lambda: self.now,
+            fields=self.fields,
         )
         names = self.fields
         for page in pages:
             for rec in page:
                 yield tuple(rec.get(n) for n in names)
-
-
-def _with_stride(stream: HttpStream, index: int, num: int) -> HttpStream:
-    """Rebind an offset/limit stream so this partition fetches offsets
-    index, index+num, index+2num, ... (interleaved stride)."""
-    from dataclasses import replace as dc_replace
-
-    base = stream.paginator()
-    assert isinstance(base, OffsetLimitPaginator)
-
-    def paginator_factory(
-        _base: OffsetLimitPaginator = base, _index: int = index, _num: int = num
-    ):
-        return _StridedOffsetPaginator(
-            offset_param=_base.offset_param,
-            limit_param=_base.limit_param,
-            page_size=_base.page_size,
-            stride=_num,
-            _offset=_index * _base.page_size,
-        )
-
-    return dc_replace(stream, paginator=paginator_factory)
-
-
-@dataclass
-class _StridedOffsetPaginator(OffsetLimitPaginator):
-    stride: int = 1
-
-    def first_params(self):
-        return {
-            self.offset_param: str(self._offset),
-            self.limit_param: str(self.page_size),
-        }
-
-    def next(self, prev, resp, records):
-        if len(records) < self.page_size:
-            return None
-        self._offset += self.page_size * self.stride
-        from dataclasses import replace
-
-        params = tuple(
-            (k, v)
-            for k, v in prev.params
-            if k not in (self.offset_param, self.limit_param)
-        )
-        return replace(
-            prev,
-            params=params
-            + (
-                (self.offset_param, str(self._offset)),
-                (self.limit_param, str(self.page_size)),
-            ),
-        )
 
 
 def _warmup_transport(req):
@@ -197,10 +167,19 @@ def warmup_datasource(spark, num_partitions: int = 8) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def stream_dataframe(spark, stream: HttpStream, config: dict, state, transport=None, num_partitions: int = 1):
+def stream_dataframe(
+    spark,
+    stream: HttpStream,
+    config: dict,
+    state,
+    transport=None,
+    num_partitions: int = 1,
+    clock: Clock = utc_now,
+):
     """Register + read an HttpStream as a DataFrame via the Python
-    DataSource. Returns (df, new_state) — new_state computed from the
-    cursor spec (the executor-side read uses the same window).
+    DataSource. Returns (df, new_state). The clock is read once, here:
+    every partition's cursor window and new_state end at that instant,
+    however late the frame's action runs.
 
     ``transport`` (stub, auth-wrapping, throttled client) is pickled
     into the DataSource options so executors actually use it; a
@@ -221,15 +200,13 @@ def stream_dataframe(spark, stream: HttpStream, config: dict, state, transport=N
                 "for the default urllib transport); got "
                 f"{type(transport).__name__}: {ex}"
             ) from ex
-    new_state = None
-    if stream.cursor is not None:
-        from go_integ_spark.sources.source import utc_now
-
-        new_state = stream.cursor.new_state(state, utc_now)
+    now = clock()
+    new_state = stream.cursor.new_state(now) if stream.cursor is not None else None
     reader = (
         spark.read.format("http_stream")
         .option("spec", base64.b64encode(pickle.dumps(stream)).decode())
         .option("config", json.dumps(config))
+        .option("now", now.isoformat())
         .option("num_partitions", str(num_partitions))
     )
     if state is not None:

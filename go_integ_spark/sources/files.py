@@ -3,10 +3,10 @@ are declared-but-unimplemented stubs — sourcedef.go:91-101,
 proto.go:338-339 "fs runner not implemented").
 
 In a Spark-native engine these are *first-class*, not stubs: a file
-or JDBC stream is a declarative spec resolved straight to
-``spark.read`` — distributed scans, pushdown and partition pruning
-come from the format readers. Included for surface parity and used
-by the connector test-suite as a local-source fixture.
+stream is a declarative spec resolved straight to ``spark.read`` —
+distributed scans, pushdown and partition pruning come from the
+format readers. Included for surface parity and used by the
+connector test-suite as a local-source fixture.
 """
 
 from __future__ import annotations
@@ -61,24 +61,6 @@ class FileStream:
                 cols.append(F.col(f.name))
         return df.select(*cols)
 
-    def incremental_dataframe(
-        self, spark: SparkSession, state: dict | None, state_key: str = "To"
-    ) -> tuple[DataFrame, dict]:
-        """Cursor-filtered batch read over a file source: the
-        reference's P3 predicate, pushed into the file scan by
-        Catalyst instead of an HTTP query param. Returns the filtered
-        frame and the new state (cursor high-water mark).
-
-        The high-water mark here is an eager scalar aggregate — one
-        extra (cheap, column-pruned) job per read. When the caller
-        runs its own action on the frame anyway (every sink does),
-        prefer ``incremental_dataframe_observed``, which folds the
-        max into that same pass.
-        """
-        df, resolve = self.incremental_dataframe_observed(spark, state, state_key)
-        df.agg(F.count(F.lit(1))).collect()  # drive the observation
-        return df, resolve()
-
     def incremental_dataframe_observed(
         self, spark: SparkSession, state: dict | None, state_key: str = "To"
     ):
@@ -110,20 +92,3 @@ class FileStream:
             }
 
         return df, resolve
-
-
-@dataclass
-class JdbcStream:
-    schema: StreamSchema
-    url: str
-    table: str
-    options: dict[str, str] = field(default_factory=dict)
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("dbtable", self.table)
-            .options(**self.options)
-            .load()
-        )

@@ -252,6 +252,10 @@ class Paginator:
     or None to stop. Strategy per integration style.
     """
 
+    def first_params(self) -> dict[str, str]:
+        """Query params the first request carries (none by default)."""
+        return {}
+
     def next(
         self, prev: HttpRequest, resp: HttpResponse, records: list[dict]
     ) -> HttpRequest | None:
@@ -326,20 +330,30 @@ class ODataPaginator(Paginator):
 @dataclass
 class OffsetLimitPaginator(Paginator):
     """offset/limit advance; stop when a page comes back shorter than
-    the page size (reference S6, sitoo.go:56-62)."""
+    the page size (reference S6, sitoo.go:56-62).
+
+    ``start`` and ``stride`` split one offset chain across N readers:
+    reader p of N takes ``start=p * page_size, stride=N`` and fetches
+    pages p, p+N, p+2N, ... (the DataSource partitions,
+    sources/datasource.py).
+    """
 
     offset_param: str = "start"
     limit_param: str = "num"
     page_size: int = 100
-    _offset: int = 0
+    start: int = 0
+    stride: int = 1
+
+    def __post_init__(self) -> None:
+        self._offset = self.start
 
     def first_params(self) -> dict[str, str]:
-        return {self.offset_param: "0", self.limit_param: str(self.page_size)}
+        return {self.offset_param: str(self.start), self.limit_param: str(self.page_size)}
 
     def next(self, prev, resp, records):
         if len(records) < self.page_size:
             return None
-        self._offset += self.page_size
+        self._offset += self.page_size * self.stride
         params = tuple(
             (k, v) for k, v in prev.params if k not in (self.offset_param, self.limit_param)
         )

@@ -18,6 +18,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
+from go_integ_spark.protocols.base import Clock, utc_now
 from go_integ_spark.schema.stream import StreamSchema
 from go_integ_spark.sources.http import (
     Auth,
@@ -31,12 +32,6 @@ from go_integ_spark.sources.http import (
     urllib_transport,
 )
 
-Clock = Callable[[], dt.datetime]
-
-
-def utc_now() -> dt.datetime:
-    return dt.datetime.now(dt.timezone.utc)
-
 
 def no_auth(config: dict) -> Auth:
     """Default auth factory (module-level so HttpStream pickles into
@@ -49,11 +44,12 @@ class CursorSpec:
     """Cursor-predicate pushdown + state management (reference P3,
     shopify.go:39-72).
 
-    The sync window is [state[state_key] or (now - fallback), now];
-    bounds are pushed to the server as ``min_param``/``max_param``
-    query params; the new state records the window end — committed
-    only when the read finishes (Airbyte semantics) or inline
-    (Singer), per the protocol in use.
+    The sync window is [state[state_key] or (now - fallback), now],
+    with ``now`` read from the clock once per read; bounds are pushed
+    to the server as ``min_param``/``max_param`` query params; the new
+    state records the window end — committed only when the read
+    finishes (Airbyte semantics) or inline (Singer), per the protocol
+    in use.
     """
 
     cursor_field: str
@@ -63,25 +59,17 @@ class CursorSpec:
     fallback: dt.timedelta = dt.timedelta(days=3650)  # shopify.go:67-72
     time_format: str = "%Y-%m-%dT%H:%M:%S%z"
 
-    def window(self, state: dict | None, clock: Clock) -> tuple[str, str]:
-        now = clock()
-        start = None
-        if state and self.state_key in state and state[self.state_key]:
-            start = state[self.state_key]
-        if not start:
-            start = (now - self.fallback).strftime(self.time_format)
-        return start, now.strftime(self.time_format)
-
-    def params(self, state: dict | None, clock: Clock) -> dict[str, str]:
-        lo, hi = self.window(state, clock)
+    def params(self, state: dict | None, now: dt.datetime) -> dict[str, str]:
+        lo = (state or {}).get(self.state_key)
+        if not lo:
+            lo = (now - self.fallback).strftime(self.time_format)
         p = {self.min_param: lo}
         if self.max_param:
-            p[self.max_param] = hi
+            p[self.max_param] = now.strftime(self.time_format)
         return p
 
-    def new_state(self, state: dict | None, clock: Clock) -> dict:
-        _, hi = self.window(state, clock)
-        return {self.state_key: hi}
+    def new_state(self, now: dt.datetime) -> dict:
+        return {self.state_key: now.strftime(self.time_format)}
 
 
 @dataclass
@@ -164,14 +152,14 @@ class HttpStream:
         projected = fields if fields is not None else self.schema.field_keys()
         paginator = self.paginator()
         params = dict(self.params)
-        if hasattr(paginator, "first_params"):
-            params.update(paginator.first_params())
+        params.update(paginator.first_params())
         if self.projection is not None:
             params.update(self.projection.params_for(self.schema.struct, projected))
         new_state: dict | None = None
         if self.cursor is not None:
-            params.update(self.cursor.params(state, clock))
-            new_state = self.cursor.new_state(state, clock)
+            now = clock()
+            params.update(self.cursor.params(state, now))
+            new_state = self.cursor.new_state(now)
         base = config.get("url", "").rstrip("/")
         url = f"{base}{self.path}" if self.path.startswith("/") else (self.path or base)
         first = HttpRequest(url=url).with_params(**params)

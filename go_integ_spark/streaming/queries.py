@@ -143,21 +143,17 @@ def _source_bytes(source_path: str, spark) -> int:
 def state_partitions_for(source_path: str | None, spark=None) -> int:
     """State-store shard count for a streaming run, derived from the
     stream source's volume: ceil(bytes / STATE_SHARD_BYTES), clamped
-    to [MIN, MAX]. SG_STATE_PARTITIONS stays as an explicit capacity
-    override for probes. Remote (object-store/HDFS) sources are sized
+    to [MIN, MAX]. Remote (object-store/HDFS) sources are sized
     through the Hadoop FileSystem API and therefore need ``spark``;
     local paths don't.
 
     CHECKPOINT CONSTRAINT: Spark freezes the shard count into a
     streaming checkpoint at first run — resuming an existing
-    checkpoint under a different value (env override, grown source)
+    checkpoint under a different value (a grown source)
     FAILS. Safe here because every gate/smoke run starts from a
     fresh per-run checkpoint dir; a durable deployment must pin the
     count at provisioning time instead of deriving it per run.
     """
-    env = os.environ.get("SG_STATE_PARTITIONS")
-    if env is not None:
-        return int(env)
     if source_path is None:
         return MIN_STATE_PARTITIONS
     total = _source_bytes(source_path, spark)

@@ -26,10 +26,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any realistic scale factor
-# (region: 5 rows, nation: 25 rows — fixed-cardinality dims in TPC-H).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -72,9 +68,3 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
         elif isinstance(f.dataType, TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    if not names:
-        names = TABLE_NAMES
-    return {n: load_table(spark, sf_dir, n) for n in names}

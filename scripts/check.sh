@@ -10,8 +10,9 @@
 #   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
 #
 # Deeper sweeps (run before a round close, not per push):
-#   python scripts/strict_sweep.py /root/testdata/sf0.01   # bit-exact
-#   python scripts/strict_sweep.py /root/testdata/sf0.1    # 10x-scale
+#   python scripts/strict_sweep.py                   # bit-exact at sf0.01
+#   python scripts/strict_sweep.py --sf .../sf0.1    # 10x-scale
+#   python scripts/strict_sweep.py name1 name2       # named queries only
 # The sf0.1 strict sweep is the one that caught the fixed-probe-count
 # recall regression in the embedding-dedup family (round 6) — scale
 # factors exercise different cell/bucket geometry than the gate SF.

@@ -5,12 +5,15 @@ The pytest oracle sweep rounds to 9 digits and collapses signed
 zero, which is exactly how round 5's text_collocations -0.0 red
 escaped local detection; this sweep closes that gap.
 
-Usage: python scripts/strict_sweep.py [sf_dir]
+Usage: python scripts/strict_sweep.py [--sf DIR] [name ...]
+Names restrict the sweep to those queries (the fast inner loop while
+developing an operator); no names sweeps every registered query.
+Exits 1 if any query is not bit-exact.
 """
 
 from __future__ import annotations
 
-import math
+import argparse
 import os
 import struct
 import sys
@@ -46,17 +49,22 @@ def main() -> None:
     from go_integ_spark.session import get_spark
     from go_integ_spark.tables import TABLE_NAMES
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="strict_sweep", master="local[8]", shuffle_partitions=8)
+    ap = argparse.ArgumentParser(prog="strict_sweep.py")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="scale-factor dir")
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    args = ap.parse_args()
+    sf_dir = args.sf
+    reg = load_all()
+    names = args.names or sorted(reg)
+    spark = get_spark(app_name="strict_sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    reg = load_all()
     fails = []
-    for name in sorted(reg):
-        spec = reg[name]
+    for name in names:
         try:
+            spec = reg[name]
             df = spec.fn(spark, sf_dir)
             s_rows = [tuple(r) for r in df.collect()]
             cur = con.execute(spec.oracle)
@@ -64,20 +72,23 @@ def main() -> None:
             o_rows = cur.fetchall()
             if sorted(df.columns) != sorted(o_cols):
                 fails.append((name, "columns"))
-                print(f"FAIL {name}: columns", flush=True)
+                print(f"FAIL {name}: columns {sorted(df.columns)} vs {sorted(o_cols)}", flush=True)
                 continue
             sc, oc = canon(df.columns, s_rows), canon(o_cols, o_rows)
             if sc != oc:
-                diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
                 fails.append((name, "values"))
-                print(f"FAIL {name}: values; first diffs {diffs}", flush=True)
+                print(f"FAIL {name}: values ({len(sc)} vs {len(oc)} rows)")
+                print("  first aligned diffs:", [(a, b) for a, b in zip(sc, oc) if a != b][:3])
+                print("  spark-only:", [r for r in sc if r not in oc][:2])
+                print("  oracle-only:", [r for r in oc if r not in sc][:2], flush=True)
             else:
                 print(f"ok   {name} ({len(sc)} rows)", flush=True)
         except Exception as e:  # noqa: BLE001 - report-and-continue sweep
             fails.append((name, f"error {e}"))
             print(f"ERR  {name}: {str(e)[:200]}", flush=True)
-    print(f"\n{len(reg) - len(fails)}/{len(reg)} bit-exact; failures: {fails}")
+    print(f"\n{len(names) - len(fails)}/{len(names)} bit-exact; failures: {fails}")
     spark.stop()
+    sys.exit(1 if fails else 0)
 
 
 if __name__ == "__main__":

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import threading
+from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -206,3 +207,22 @@ class StubServer:
     @property
     def data(self) -> dict:
         return self.fixtures["_data"]
+
+
+@dataclass
+class QueryLogTransport:
+    """Picklable transport that appends each request's query string
+    (as a JSON object of first values) to ``log_path``, then sends it
+    over urllib — shows what executor-side reads actually asked for.
+    """
+
+    log_path: str
+
+    def __call__(self, req):
+        from go_integ_spark.sources.http import urllib_transport
+
+        url = req.full_url()
+        query = {k: v[0] for k, v in parse_qs(urlparse(url).query).items()}
+        with open(self.log_path, "a") as f:
+            f.write(json.dumps(query) + "\n")
+        return urllib_transport()(req)

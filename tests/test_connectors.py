@@ -15,9 +15,9 @@ from go_integ_spark.engine.envelope import parse_envelope
 from go_integ_spark.engine.lifecycle import Engine
 from go_integ_spark.examples.connectors import klaviyo, pokeapi, shopify, sitoo, storm
 from go_integ_spark.protocols.airbyte import AirbyteWriter
+from go_integ_spark.protocols.base import utc_now
 from go_integ_spark.protocols.singer import SingerWriter
 from go_integ_spark.sources.http import Retryer, urllib_transport
-from go_integ_spark.sources.source import utc_now
 from tests.stub_server import StubServer
 
 FIXED_CLOCK = lambda: dt.datetime(2022, 4, 7, 12, 0, 0, tzinfo=dt.timezone.utc)  # noqa: E731
@@ -87,6 +87,40 @@ def test_offset_limit_short_page_termination(server):
         sitoo.stream("users"), {"url": server.base, "user": "u", "password": "p"}
     )
     assert rows == server.data["sitoo_users"]  # 23 rows: 10+10+3
+
+
+def test_offset_limit_stride_splits_offsets():
+    """``start``/``stride`` split one offset chain across N readers:
+    reader p asks for offsets p, p+N, ... pages until a short page, and
+    the readers together fetch every record exactly once."""
+    from go_integ_spark.sources.http import (
+        HttpRequest,
+        HttpResponse,
+        OffsetLimitPaginator,
+        PageFetcher,
+    )
+
+    size, total, n = 10, 73, 3  # 8 pages, the last one short
+    starts = []
+
+    def transport(req):
+        q = dict(req.params)
+        assert q["num"] == str(size)
+        starts.append(int(q["start"]))
+        rows = [{"i": i} for i in range(starts[-1], min(starts[-1] + size, total))]
+        return HttpResponse(status=200, headers={}, body=json.dumps({"items": rows}).encode())
+
+    want = {0: [0, 30, 60, 90], 1: [10, 40, 70], 2: [20, 50, 80]}
+    seen = []
+    for p in range(n):
+        pag = OffsetLimitPaginator(page_size=size, start=p * size, stride=n)
+        assert pag.first_params() == {"start": str(p * size), "num": str(size)}
+        fetcher = PageFetcher(transport=transport, paginator=pag, record_path="items")
+        first = HttpRequest(url="http://api/items").with_params(**pag.first_params())
+        starts.clear()
+        seen += [r["i"] for page in fetcher.pages(first) for r in page]
+        assert starts == want[p]
+    assert sorted(seen) == list(range(total))
 
 
 # --- retry (S10) ----------------------------------------------------------

@@ -15,7 +15,6 @@ ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
     "SG_PRETOUCH",
-    "SG_STATE_PARTITIONS",
 }
 
 

@@ -1,6 +1,7 @@
-"""Spark-side connector integration: Engine.read_dataframes (driver
-fetch), the Python DataSource distributed read with projection
-pushdown and offset-stride partitioning, and file-source incremental.
+"""Spark-side connector integration: Engine.read_dataframes and the
+Python DataSource read under it (projection pushdown, offset-stride
+partitioning, one cursor window per read), and file-source
+incremental reads.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ import datetime as dt
 import pytest
 
 from go_integ_spark.engine.lifecycle import Engine
-from go_integ_spark.examples.connectors import pokeapi, sitoo
+from go_integ_spark.examples.connectors import pokeapi, shopify, sitoo
 from go_integ_spark.schema.stream import StreamSchema
 from go_integ_spark.sources.files import FileStream
 from tests.stub_server import StubServer
@@ -24,22 +25,13 @@ def server():
         yield s
 
 
-def test_read_dataframes_driver_path(spark, server):
+def test_read_dataframes_per_stream(spark, server):
     eng = Engine(clock=FIXED_CLOCK, spark=spark)
     dfs, states = eng.read_dataframes(pokeapi, {"url": server.base})
     df = dfs["pokemon"]
     assert df.count() == len(server.data["pokemon"])
     assert df.columns == ["name", "url"]
     assert states == {}  # full-refresh stream, no cursor
-
-
-def test_driver_path_refuses_large_pulls(spark, server):
-    """The driver-side convenience path must not buffer unbounded
-    tables: past the ceiling it raises and points at the DataSource
-    path."""
-    eng = Engine(clock=FIXED_CLOCK, spark=spark)
-    with pytest.raises(RuntimeError, match="distributed=True"):
-        eng.read_dataframes(pokeapi, {"url": server.base}, max_driver_rows=10)
 
 
 def test_datasource_distributed_read(spark, server):
@@ -80,6 +72,7 @@ def test_datasource_reader_uses_injected_transport(server):
     stream = pokeapi.streams[0]
     options = {
         "config": "{}",
+        "now": "2022-04-07T12:00:00+00:00",
         "transport": base64.b64encode(pickle.dumps(_failing_transport)).decode(),
     }
     reader = HttpStreamReader(stream, options, stream.schema.struct)
@@ -144,6 +137,34 @@ def test_datasource_offset_stride_partitions(spark, server):
     assert rows == sorted(u["userid"] for u in server.data["sitoo_users"])
 
 
+def test_datasource_cursor_window_read_once(spark, server, tmp_path):
+    """The sync window is read from the clock once per read: every
+    request the executors send carries the same ``updated_at_max``,
+    and it is the ``To`` the read returns. The action runs a second
+    after the frame is defined, so a clock read at execution time
+    would move the window and the next sync would re-fetch the gap.
+    """
+    import json
+    import time
+
+    from go_integ_spark.sources.datasource import stream_dataframe
+    from tests.stub_server import QueryLogTransport
+
+    log = tmp_path / "queries.jsonl"
+    df, state = stream_dataframe(
+        spark,
+        shopify.stream("users"),
+        {"url": server.base, "api_key": "sekret"},
+        None,
+        transport=QueryLogTransport(str(log)),
+    )
+    time.sleep(1.1)
+    assert df.count() == len(server.data["users"])
+    queries = [json.loads(line) for line in log.read_text().splitlines()]
+    highs = {q["updated_at_max"] for q in queries if "updated_at_max" in q}
+    assert len(queries) == 3 and highs == {state["To"]}
+
+
 def test_file_stream_incremental(spark, tmp_path):
     """S12 + P3: file-backed stream with cursor state — the filter is
     pushed into the parquet scan; state advances to the high-water mark."""
@@ -153,20 +174,20 @@ def test_file_stream_incremental(spark, tmp_path):
         schema=StreamSchema.from_ddl("ev", "id long, v long").iterated_by("id"),
         path=src,
     )
-    df, state = fs.incremental_dataframe(spark, None)
-    assert df.count() == 10 and state == {"To": 9}
-    df2, state2 = fs.incremental_dataframe(spark, {"To": 7})
+    df, resolve = fs.incremental_dataframe_observed(spark, None)
+    assert df.count() == 10 and resolve() == {"To": 9}
+    df2, resolve2 = fs.incremental_dataframe_observed(spark, {"To": 7})
     assert sorted(r.id for r in df2.collect()) == [8, 9]
-    assert state2 == {"To": 9}
-    df3, state3 = fs.incremental_dataframe(spark, {"To": 9})
-    assert df3.count() == 0 and state3 == {"To": 9}  # cursor holds
+    assert resolve2() == {"To": 9}
+    df3, resolve3 = fs.incremental_dataframe_observed(spark, {"To": 9})
+    assert df3.count() == 0 and resolve3() == {"To": 9}  # cursor holds
 
 
 def test_file_stream_incremental_observed(spark, tmp_path):
-    """The zero-extra-job variant: the high-water mark is computed by
-    the caller's own action (here a collect standing in for the sink
-    write), and resolve() then yields the same state the eager API
-    returns — including the cursor-holds case on an empty batch."""
+    """Zero extra jobs: the high-water mark is computed by the
+    caller's own action (here a collect standing in for the sink
+    write), and resolve() then yields the new state — including the
+    cursor-holds case on an empty batch."""
     from go_integ_spark.schema.stream import StreamSchema
     from go_integ_spark.sources.files import FileStream
 
@@ -195,9 +216,9 @@ def test_file_stream_csv_and_jsonl(spark, tmp_path):
     csv_dir.mkdir()
     (csv_dir / "part.csv").write_text("3,30\n4,40\n5,50\n")
     fs_csv = FileStream(schema=schema, path=str(csv_dir), format="csv")
-    df, state = fs_csv.incremental_dataframe(spark, {"To": 3})
+    df, resolve = fs_csv.incremental_dataframe_observed(spark, {"To": 3})
     assert sorted((r.id, r.v) for r in df.collect()) == [(4, 40), (5, 50)]
-    assert state == {"To": 5}
+    assert resolve() == {"To": 5}
 
     jl_dir = tmp_path / "jl"
     jl_dir.mkdir()
@@ -205,9 +226,9 @@ def test_file_stream_csv_and_jsonl(spark, tmp_path):
         '{"id": 1, "v": 10}\n{"id": 2, "v": 20}\n'
     )
     fs_jl = FileStream(schema=schema, path=str(jl_dir), format="json")
-    df2, state2 = fs_jl.incremental_dataframe(spark, None)
+    df2, resolve2 = fs_jl.incremental_dataframe_observed(spark, None)
     assert sorted((r.id, r.v) for r in df2.collect()) == [(1, 10), (2, 20)]
-    assert state2 == {"To": 2}
+    assert resolve2() == {"To": 2}
 
 
 def test_cli_spec_and_read(server, capsys):
@@ -228,3 +249,41 @@ def test_cli_spec_and_read(server, capsys):
     recs = [json.loads(x) for x in out.splitlines() if '"RECORD"' in x]
     assert len(recs) == len(server.data["pokemon"])
     assert recs[0]["record"]["stream"] == "pokemon"
+
+
+def test_cli_state_fan_out_and_catalog_selection(server, capsys, monkeypatch):
+    """``--state`` keyed by ``""`` is a global state fanned out to every
+    stream, and ``--catalog`` selects which streams are read."""
+    import json
+
+    from go_integ_spark.__main__ import main
+
+    runs = []
+    handle = Engine.handle
+
+    def spy(self, source, cmd, run, out):
+        runs.append(run)
+        return handle(self, source, cmd, run, out)
+
+    monkeypatch.setattr(Engine, "handle", spy)
+    since = "2022-03-10T00:00:00+00:00"
+    rc = main(
+        [
+            "go_integ_spark.examples.connectors:shopify",
+            "read",
+            "--config",
+            json.dumps({"url": server.base, "api_key": "sekret"}),
+            "--state",
+            json.dumps({"": {"To": since}}),
+            "--catalog",
+            json.dumps({"streams": [{"stream": {"name": "users"}}]}),
+        ]
+    )
+    assert rc == 0
+    (run,) = runs
+    assert run.states == {"users": {"To": since}, "orders": {"To": since}}
+    assert run.selected_streams == {"users"}
+    msgs = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    recs = [m["record"] for m in msgs if m["type"] == "RECORD"]
+    assert {r["stream"] for r in recs} == {"users"}
+    assert len(recs) == sum(u["updated_at"] >= since for u in server.data["users"])

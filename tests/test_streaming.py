@@ -387,10 +387,9 @@ def test_streaming_paragraph_dedup_equals_batch_distinct(spark):
 def test_state_partitions_auto_sizing(tmp_path, monkeypatch):
     """Shard count derives from source volume (VERDICT r10 #4): floor
     at MIN for gate-sized sources, ceil(bytes/shard_bytes) above it,
-    clamped at MAX; SG_STATE_PARTITIONS stays an explicit override."""
+    clamped at MAX."""
     from go_integ_spark.streaming import queries as sq
 
-    monkeypatch.delenv("SG_STATE_PARTITIONS", raising=False)
     assert sq.state_partitions_for(None) == sq.MIN_STATE_PARTITIONS
     src = tmp_path / "src"
     src.mkdir()
@@ -400,11 +399,9 @@ def test_state_partitions_auto_sizing(tmp_path, monkeypatch):
     assert sq.state_partitions_for(str(src)) == 8  # ceil(1024/128)
     monkeypatch.setattr(sq, "MAX_STATE_PARTITIONS", 6)
     assert sq.state_partitions_for(str(src)) == 6
-    monkeypatch.setenv("SG_STATE_PARTITIONS", "7")
-    assert sq.state_partitions_for(str(src)) == 7
 
 
-def test_state_partitions_remote_uri(monkeypatch):
+def test_state_partitions_remote_uri():
     """Remote (object-store) sources size through Hadoop's
     FileSystem.getContentSummary via the JVM gateway (VERDICT r11
     item 4 — the os.walk form silently returned MIN shards for any
@@ -417,7 +414,6 @@ def test_state_partitions_remote_uri(monkeypatch):
 
     from go_integ_spark.streaming import queries as sq
 
-    monkeypatch.delenv("SG_STATE_PARTITIONS", raising=False)
     fake_spark = MagicMock()
     summary = (
         fake_spark._jvm.org.apache.hadoop.fs.Path.return_value
@@ -443,9 +439,6 @@ def test_state_partitions_remote_uri(monkeypatch):
     )
     with _pytest.raises(ValueError, match="needs the"):
         sq.state_partitions_for("s3a://bucket/corpus")
-    # explicit override still wins without touching the FS
-    monkeypatch.setenv("SG_STATE_PARTITIONS", "9")
-    assert sq.state_partitions_for("s3a://bucket/corpus") == 9
 
 
 def test_state_partitions_file_uri_forms(tmp_path, monkeypatch):
@@ -459,7 +452,6 @@ def test_state_partitions_file_uri_forms(tmp_path, monkeypatch):
 
     from go_integ_spark.streaming import queries as sq
 
-    monkeypatch.delenv("SG_STATE_PARTITIONS", raising=False)
     src = tmp_path / "src"
     src.mkdir()
     (src / "part-0.parquet").write_bytes(b"x" * 1024)
