@@ -116,20 +116,6 @@ class IntegService:
                 _, source = matched
                 length = int(self.headers.get("Content-Length") or 0)
                 body = self.rfile.read(length).decode("utf-8")
-                try:
-                    run = parse_envelope(
-                        body.splitlines(), source.stream_names()
-                    )
-                    buf = io.StringIO()
-                    service.engine.handle(source, cmd, run, buf)
-                except Exception as e:  # noqa: BLE001 - surface as 500
-                    msg = str(e).encode()
-                    self.send_response(500)
-                    self.send_header("Content-Length", str(len(msg)))
-                    self.end_headers()
-                    self.wfile.write(msg)
-                    return
-                payload = buf.getvalue().encode("utf-8")
                 accept = self.headers.get("Accept-Encoding", "")
                 # reference parity: Accept-Zstd wins (proto.go:196-204);
                 # Accept-Encoding: gzip/zstd also honored
@@ -138,14 +124,25 @@ class IntegService:
                     codec = "zstd"
                 elif "gzip" in accept:
                     codec = "gzip"
+                raw = io.BytesIO()
+                try:
+                    run = parse_envelope(
+                        body.splitlines(), source.stream_names()
+                    )
+                    out = wrap_output(raw, codec or "none")
+                    service.engine.handle(source, cmd, run, out)
+                    out.close()
+                except Exception as e:  # noqa: BLE001 - surface as 500
+                    msg = str(e).encode()
+                    self.send_response(500)
+                    self.send_header("Content-Length", str(len(msg)))
+                    self.end_headers()
+                    self.wfile.write(msg)
+                    return
+                payload = raw.getvalue()
                 self.send_response(200)
                 self.send_header("Content-Type", "application/x-ndjson")
                 if codec:
-                    raw = io.BytesIO()
-                    w = wrap_output(raw, codec)
-                    w.write(payload.decode("utf-8"))
-                    w.close()
-                    payload = raw.getvalue()
                     self.send_header("Content-Encoding", codec)
                 self.send_header("Content-Length", str(len(payload)))
                 self.end_headers()

@@ -15,9 +15,9 @@ Message shapes (pkg/airbyte/proto.go, stream_proto.go):
 
 from __future__ import annotations
 
-from typing import Any
+from typing import IO, Any
 
-from go_integ_spark.protocols.base import ProtocolWriter, StreamWriter, _log_value
+from go_integ_spark.protocols.base import Clock, ProtocolWriter, StreamWriter, encode_json, utc_now
 from go_integ_spark.schema.catalog import CatalogStream
 from go_integ_spark.schema.stream import StreamSchema
 
@@ -26,32 +26,26 @@ class AirbyteStreamWriter(StreamWriter):
     def __init__(self, proto: "AirbyteWriter", schema: StreamSchema):
         self.proto = proto
         self.schema = schema
+        self._head = f'{{"type":"RECORD","record":{{"stream":{encode_json(schema.name)},"emitted_at":'
 
     def emit_records(self, records: list[dict]) -> None:
-        emitted_at = int(self.proto.clock().timestamp() * 1000)
-        name = self.schema.name
-        for rec in records:
-            self.proto.encode(
-                {
-                    "type": "RECORD",
-                    "record": {"stream": name, "emitted_at": emitted_at, "data": rec},
-                }
-            )
+        if not records:
+            return
+        # each line has the bytes encode() gives its envelope; one write per page
+        head = f'{self._head}{int(self.proto.clock().timestamp() * 1000)},"data":'
+        self.proto.write(head + ("}}\n" + head).join(map(encode_json, records)) + "}}\n")
 
     def emit_state(self, state: Any) -> None:
         # lazily registered; merged STATE at close (stream_proto.go:42-45)
         self.proto.reg_state[self.schema.name] = state
 
     def emit_log(self, v: Any) -> None:
-        self.proto.emit("LOG", _log_value(v))
+        self.proto.emit_log(v)
 
 
 class AirbyteWriter(ProtocolWriter):
-    def __init__(self, out, clock=None):
-        if clock is not None:
-            super().__init__(out, clock)
-        else:
-            super().__init__(out)
+    def __init__(self, out: IO[str], clock: Clock = utc_now):
+        super().__init__(out, clock)
         self.reg_state: dict[str, Any] = {}
         self.schemas: list[StreamSchema] = []
 

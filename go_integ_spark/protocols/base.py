@@ -3,6 +3,10 @@ backend.go:50-74): a protocol opens per-stream writers and emits
 SPEC / CONNECTION_STATUS / CATALOG / RECORD / STATE / LOG messages as
 NDJSON lines.
 
+Records go out a page at a time, as in the reference's per-stream
+buffer (pkg/airbyte/stream_proto.go:20-36): one envelope head per page
+and one locked ``ProtocolWriter.write`` of the page's joined lines.
+
 The clock is injectable so golden tests pin ``emitted_at`` /
 ``time_extracted`` (the reference hardcodes time.Now—
 pkg/airbyte/proto.go:28, pkg/singer/singer.go:29 — making its output
@@ -11,6 +15,7 @@ untestable; we fix that).
 
 from __future__ import annotations
 
+import base64
 import datetime as dt
 import json
 import threading
@@ -48,15 +53,15 @@ class ProtocolWriter:
         self.clock = clock
         self._lock = threading.Lock()
 
-    def encode(self, msg: dict) -> None:
-        # reference Protocol.Encode (protocol.go:20-33): one JSON doc
-        # per line, writes serialized under a mutex. Engine.read emits
-        # from up to `concurrency` threads and TextIOWrapper writes
-        # are not guaranteed atomic past the internal buffer, so the
-        # reference's wMtx semantics apply here too.
-        line = json.dumps(msg, separators=(",", ":"), default=_default) + "\n"
+    def write(self, lines: str) -> None:
+        # whole lines under the reference's wMtx (protocol.go:28-33):
+        # up to `concurrency` stream threads share one output
         with self._lock:
-            self.out.write(line)
+            self.out.write(lines)
+
+    def encode(self, msg: dict) -> None:
+        # one JSON doc per line (reference Protocol.Encode, protocol.go:20-33)
+        self.write(encode_json(msg) + "\n")
 
     def emit(self, typ: str, v: Any) -> None:
         # reference emit(): {"type": T, lower(T): payload}
@@ -96,7 +101,9 @@ def _default(o: Any):
     if isinstance(o, (dt.datetime, dt.date)):
         return o.isoformat()
     if isinstance(o, bytes):
-        import base64
-
         return base64.b64encode(o).decode()
     raise TypeError(f"not JSON serializable: {type(o)}")
+
+
+# built once: json.dumps(msg, separators=..., default=...) builds one per call
+encode_json = json.JSONEncoder(separators=(",", ":"), default=_default).encode

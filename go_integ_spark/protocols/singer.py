@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from go_integ_spark.protocols.base import ProtocolWriter, StreamWriter, _log_value
+from go_integ_spark.protocols.base import ProtocolWriter, StreamWriter, _log_value, encode_json
 from go_integ_spark.schema.stream import StreamSchema
 
 
@@ -23,14 +23,13 @@ class SingerStreamWriter(StreamWriter):
     def __init__(self, proto: "SingerWriter", schema: StreamSchema):
         self.proto = proto
         self.schema = schema
+        self._head = f'{{"type":"RECORD","stream":{encode_json(schema.name)},"time_extracted":'
 
     def emit_records(self, records: list[dict]) -> None:
-        ts = int(self.proto.clock().timestamp())
-        name = self.schema.name
-        for rec in records:
-            self.proto.encode(
-                {"type": "RECORD", "stream": name, "time_extracted": ts, "record": rec}
-            )
+        if not records:
+            return
+        head = f'{self._head}{int(self.proto.clock().timestamp())},"record":'
+        self.proto.write(head + ("}\n" + head).join(map(encode_json, records)) + "}\n")
 
     def emit_state(self, state: Any) -> None:
         # inline, per stream (singer_stream.go:41-58)

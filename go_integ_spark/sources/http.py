@@ -25,6 +25,7 @@ import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
+from typing import Any
 
 
 @dataclass(frozen=True)
@@ -66,9 +67,13 @@ class HttpResponse:
     status: int
     headers: dict[str, str]
     body: bytes
+    _json: Any = field(default=None, init=False, repr=False, compare=False)
 
     def json(self) -> dict:
-        return json.loads(self.body)
+        # decoded once: the fetch loop and body-driven paginators share it
+        if self._json is None:
+            self._json = json.loads(self.body)
+        return self._json
 
 
 Transport = Callable[[HttpRequest], HttpResponse]

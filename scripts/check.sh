@@ -29,6 +29,15 @@ fi
 echo "== pytest (full suite incl. sf0.001 oracle sweep) =="
 python -m pytest tests/ -x -q
 
+echo "== connector workload correctness (every cli_sync record decoded) =="
+python3 perfbench/run.py --workload connector --seed 1 --seconds 1 --trace 0 2>/dev/null \
+    | tail -n 1 | python -c '
+import json, sys
+d = json.loads(sys.stdin.readline())
+assert d["correct"] is True and d["failed"] == 0, d
+print("connector ok: correct=%s, failed=%s" % (d["correct"], d["failed"]))
+'
+
 echo "== bench CLI (one JSON line expected) =="
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.001}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \

@@ -89,6 +89,36 @@ def test_offset_limit_short_page_termination(server):
     assert rows == server.data["sitoo_users"]  # 23 rows: 10+10+3
 
 
+def test_body_paginator_decodes_each_page_once(monkeypatch):
+    """The fetch loop and a body-driven paginator share one decode of
+    each page: three pages, three ``json.loads`` calls."""
+    import types
+
+    from go_integ_spark.sources import http
+    from go_integ_spark.sources.http import HttpRequest, HttpResponse, NextUrlPaginator, PageFetcher
+
+    loads = []
+
+    def counting_loads(s):
+        loads.append(s)
+        return json.loads(s)
+
+    monkeypatch.setattr(http, "json", types.SimpleNamespace(loads=counting_loads, dumps=json.dumps))
+    bodies = {
+        "http://api/p0": {"results": [{"i": 0}, {"i": 1}], "next": "http://api/p1"},
+        "http://api/p1": {"results": [{"i": 2}], "next": "http://api/p2"},
+        "http://api/p2": {"results": [{"i": 3}], "next": None},
+    }
+
+    def transport(req):
+        return HttpResponse(status=200, headers={}, body=json.dumps(bodies[req.url]).encode())
+
+    fetcher = PageFetcher(transport=transport, paginator=NextUrlPaginator(), record_path="results")
+    pages = list(fetcher.pages(HttpRequest(url="http://api/p0")))
+    assert [r["i"] for p in pages for r in p] == [0, 1, 2, 3]
+    assert len(loads) == 3
+
+
 def test_offset_limit_stride_splits_offsets():
     """``start``/``stride`` split one offset chain across N readers:
     reader p asks for offsets p, p+N, ... pages until a short page, and
