@@ -39,7 +39,6 @@ _MEASURED_COST = {
     "sink_singer_envelope": 0.14,
     "text_repetition_ratio": 0.14,
     "text_token_count": 0.14,
-    "multimodal_metadata": 0.15,
     "window_running_customer_spend": 0.15,
     "window_trailing_spend": 0.15,
     "sample_stratified": 0.16,
@@ -121,7 +120,6 @@ _MEASURED_COST = {
     "dedup_soft_weights": 0.42,
     "q12_priority_shipping": 0.42,
     "events_bot_gap_regularity": 0.43,
-    "multimodal_resize_thumbs": 0.43,
     "q22_idle_customers": 0.43,
     "curation_split_leakage": 0.44,
     "events_rfm": 0.44,
@@ -129,18 +127,14 @@ _MEASURED_COST = {
     "window_share_of_segment": 0.44,
     "dedup_containment": 0.45,
     "embedding_dim_profile": 0.45,
-    "multimodal_decode_features": 0.45,
-    "stream_source_documents_build": 0.45,
     "text_vocab_growth": 0.45,
     "events_attribution_linear": 0.46,
     "q4_late_orders": 0.46,
     "curation_dedup_impact": 0.47,
-    "multimodal_frame_sample": 0.47,
     "similarity_ivf_cell_balance": 0.47,
     "curation_mirror_blocklist": 0.48,
     "events_transition_matrix": 0.48,
     "graph_triangle_count": 0.49,
-    "multimodal_audio_vad": 0.5,
     "q15_top_supplier": 0.5,
     "curation_quality_calibration": 0.51,
     "dedup_ngram_jaccard": 0.51,
@@ -160,16 +154,12 @@ _MEASURED_COST = {
     "events_changepoint_cusum": 0.58,
     "similarity_sq_encode": 0.59,
     "graph_dup_flow": 0.61,
-    "stream_source_embeddings_build": 0.61,
     "window_rolling_distinct_users": 0.61,
     "events_anomaly_mad": 0.62,
-    "multimodal_scene_cuts": 0.63,
     "curation_diversity_sample": 0.64,
-    "multimodal_phash_dedup": 0.65,
     "join_salted_skew": 0.67,
     "text_collocations": 0.67,
     "q3_shipping_priority": 0.68,
-    "connector_http_paginated_read": 0.69,
     "text_bpe_vocab": 0.7,
     "q16_supplier_part_count": 0.71,
     "graph_degree_distribution": 0.72,
@@ -205,8 +195,6 @@ _MEASURED_COST = {
     "ann_ivf_topk": 1.09,
     "q2_min_cost_supplier": 1.09,
     "curation_token_budget_select": 1.1,
-    "multimodal_phash_neighbors": 1.11,
-    "stream_source_events_build": 1.14,
     "text_lang_confusion": 1.14,
     "similarity_mmr_rerank": 1.19,
     "q11_important_part_value": 1.2,
@@ -216,7 +204,6 @@ _MEASURED_COST = {
     "dedup_embedding_cosine": 1.31,
     "dedup_simhash": 1.31,
     "similarity_pq_search": 1.31,
-    "dedup_shingle_cache_build": 1.38,
     "streaming_foreach_batch_merge": 1.38,
     "streaming_hourly_counts": 1.39,
     "streaming_paragraph_dedup": 1.4,
@@ -244,16 +231,13 @@ _MEASURED_COST = {
     "streaming_stream_join": 2.04,
     "text_winnow_overlap": 2.04,
     "similarity_bitext_pairs": 2.29,
-    "ann_ivf_topk_partitioned": 2.38,
     "contamination_embedding_strict": 2.11,  # r13, timed at sf0.01
     "ann_ivfpq_topk": 2.5,
-    "streaming_phash_registry": 2.66,
     "ann_ivfpq_residual_topk": 2.67,
     "streaming_changepoint_cusum": 2.86,
     "events_forecast_eval": 3.13,
     "er_golden_record": 3.77,
     "connector_datasource_distributed_read": 3.85,
-    "dedup_lsh_pairs_build": 4.31,
     "embedding_communities": 7.51,
 }
 

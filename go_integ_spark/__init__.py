@@ -12,8 +12,8 @@ framework (ajzo90/go-integ, see SURVEY.md) idiomatically on Spark:
 - ``engine``     spec/check/discover/read lifecycle + state management
                  (reference: proto.go, sourcedef.go)
 - ``operators``  analytics layer: relational queries, dedup, similarity
-                 search, text analysis, multimodal plumbing (no
-                 counterpart in the reference; Spark-first designs)
+                 search, text analysis (no counterpart in the
+                 reference; Spark-first designs)
 - ``streaming``  Structured Streaming incremental sync analogues
 
 Everything is DataFrame-declarative so Catalyst handles pushdown,

@@ -364,51 +364,6 @@ def range_join_error_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "connector_http_paginated_read",
-    tags=("connector", "http", "pagination"),
-    oracle="""
-SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority
-FROM orders
-""",
-)
-def connector_http_paginated_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's core capability inside the correctness gate: a
-    paginated HTTP API (offset/limit, S6 — sitoo.go:56-62) served
-    from the orders table by an in-process stub, extracted through
-    the engine's HttpStream (pagination loop, record-path extraction,
-    short-page termination), and returned as a DataFrame that must
-    hash-match DuckDB reading the same parquet. End-to-end proof the
-    HTTP extract path is lossless.
-
-    Driver-side fetch (probe-scale); the executor-distributed path is
-    the Python DataSource (tests/test_spark_integration.py).
-    """
-    from go_integ_spark.schema.stream import StreamSchema
-    from go_integ_spark.sources.http import OffsetLimitPaginator
-    from go_integ_spark.sources.source import HttpStream
-
-    port = _orders_gate_server(sf_dir)
-    stream = HttpStream(
-        schema=StreamSchema.from_ddl(
-            "orders",
-            "o_orderkey bigint, o_custkey bigint, "
-            "o_orderstatus string, o_orderpriority string",
-        ),
-        path="/orders",
-        record_path="records",
-        paginator=lambda: OffsetLimitPaginator(
-            offset_param="start", limit_param="num", page_size=1000
-        ),
-    )
-    pages, _ = stream.read({"url": f"http://127.0.0.1:{port}"}, None)
-    fetched = [r for p in pages for r in p]
-    return spark.createDataFrame(
-        [(r["o_orderkey"], r["o_custkey"], r["o_orderstatus"], r["o_orderpriority"]) for r in fetched],
-        schema="o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_orderpriority string",
-    )
-
-
-@register(
     "connector_graphql_cursor_read",
     tags=("connector", "http", "graphql", "pagination"),
     oracle="""

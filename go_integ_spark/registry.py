@@ -56,7 +56,6 @@ def load_all() -> dict[str, QuerySpec]:
         dedup,
         entity,
         events,
-        multimodal,
         relational,
         similarity,
         text,

@@ -13,7 +13,6 @@ from __future__ import annotations
 import math
 import os
 import re
-import warnings
 
 from pyspark.sql import SparkSession
 
@@ -48,8 +47,7 @@ _MEM_POW = {"k": -1, "m": 0, "g": 1, "t": 2}
 def _mem_gb(mem: str) -> float:
     """Parse a Spark memory string ("48g", "48gb", "512M", "1tb") to
     GiB the way Spark reads spark.driver.memory: whole numbers, any
-    suffix case. Unparseable values resolve to 0.0 (pretouch stays
-    off)."""
+    suffix case. Unparseable values resolve to 0.0."""
     m = re.fullmatch(r"(\d+)(?:([kmgt])b?)?", mem.strip().lower())
     if m is None:
         return 0.0
@@ -65,73 +63,6 @@ def jvm_mem(mem: str) -> str:
     if re.fullmatch(r"\d+[kmgt]", mem.strip().lower()) or not _mem_gb(mem):
         return mem
     return f"{math.ceil(_mem_gb(mem) * 1024)}m"
-
-
-def pretouch_enabled(mem: str, env: str | None) -> bool:
-    """Whether to pre-commit the driver/executor heap
-    (``-Xms<mem> -XX:+AlwaysPreTouch``). Explicit SG_PRETOUCH=1/0
-    wins; default is on only in the large-heap scale regime
-    (>= 16 GiB — the 1000x-probe / production-profile shape), so the
-    bench and the test suite at the 8g default keep an unchanged JVM
-    environment and the driver's bench stays comparable.
-
-    Why (guide §5; r14 straggler probe, ABA arms
-    SMOKE_r14_1000x_knn_straggler_{base2,pretouch,base3}.json): in a
-    fresh large-heap JVM every heavyweight stage's FIRST wave pays
-    concurrent heap-commit page faults while the heap grows toward
-    -Xmx — 32 tasks fault-zeroing pages simultaneously. At the 1000x
-    kNN probe this made wave-0 of the 5.4 GB scoring exchange run
-    ~44 s vs a 3.2 s steady median (13.7x, zero GC / zero fetch in
-    the stragglers) and inflated every single-wave 32-task stage.
-    Pre-committing the heap moves that cost to session startup
-    (~63 s for 48g, once, off the measured path) where it zeroes
-    sequentially without contending with task compute."""
-    if env is not None:
-        return env == "1"
-    return _mem_gb(mem) >= 16.0
-
-
-def _mem_available_gb() -> float | None:
-    """MemAvailable from /proc/meminfo in GiB; None where the file or
-    the field is missing (non-Linux hosts)."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    return int(line.split()[1]) / 1024.0**2
-    except (OSError, ValueError, IndexError):
-        pass
-    return None
-
-
-def warn_if_pretouch_exceeds_ram(mem: str) -> None:
-    """Warn when a pre-committed ``mem`` heap is larger than the RAM
-    the host has free: AlwaysPreTouch zeroes every heap page at JVM
-    start, so such a session swaps or is OOM-killed before it runs a
-    query."""
-    avail = _mem_available_gb()
-    if avail is not None and _mem_gb(mem) > avail:
-        warnings.warn(
-            f"heap pretouch is on for a {mem} driver heap but only "
-            f"{avail:.1f} GiB of RAM is available; set SG_PRETOUCH=0 "
-            f"or a smaller SPARK_GRAFT_DRIVER_MEM",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-
-
-def driver_java_options(
-    user_opts: str | None, mem: str, pretouch: bool
-) -> str | None:
-    """spark.driver.extraJavaOptions for get_spark: the caller's
-    options, with the heap pre-commit flags appended when ``pretouch``
-    is on. The key holds one string, so setting the flags and the
-    caller's options as two config() calls would silently drop
-    whichever came first."""
-    if not pretouch:
-        return user_opts
-    flags = f"-Xms{jvm_mem(mem)} -XX:+AlwaysPreTouch"
-    return f"{user_opts} {flags}" if user_opts else flags
 
 
 def get_spark(
@@ -183,18 +114,6 @@ def get_spark(
         .config("spark.driver.memory", jvm_mem(mem))
         .config("spark.ui.enabled", "false")
     )
-    conf = dict(extra_conf or {})
-    # Pretouch only takes effect when this call launches the gateway
-    # JVM (first session of the process) — exactly the fresh-JVM case
-    # the first-wave page-fault cost belongs to.
-    pretouch = pretouch_enabled(mem, os.environ.get("SG_PRETOUCH"))
-    if pretouch:
-        warn_if_pretouch_exceeds_ram(mem)
-    opts = driver_java_options(
-        conf.get("spark.driver.extraJavaOptions"), mem, pretouch
-    )
-    if opts is not None:
-        conf["spark.driver.extraJavaOptions"] = opts
-    for k, v in conf.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -10,7 +10,7 @@ transport is injectable for stub-server tests and for swapping in a
 faster client.
 
 Scale note: fetching happens inside DataSource partitions (see
-datasource.py) or a driver thread pool (engine/orchestrator.py) —
+datasource.py) or a driver thread pool (engine/lifecycle.py) —
 this module is deliberately session-free and picklable so executors
 can run it.
 """

@@ -595,49 +595,6 @@ def streaming_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flag_mad_anomalies(out.join(F.broadcast(thresholds), "event_type"))
 
 
-def _phash_registry_oracle() -> str:
-    from go_integ_spark.operators.multimodal import PHASH_CTE
-
-    return PHASH_CTE + """
-SELECT media_type, phash,
-       min(doc_id) AS keep_doc_id,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM h GROUP BY 1, 2
-"""
-
-
-@register(
-    "streaming_phash_registry",
-    tags=("streaming", "multimodal", "dedup"),
-    oracle=_phash_registry_oracle(),
-)
-def streaming_phash_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming perceptual-hash registry — the multimodal twin of
-    streaming_srp_registry: media assets arrive as files, each
-    micro-batch synthesizes payloads and computes the stub pHash
-    ROW-LOCALLY with the IDENTICAL Arrow kernel the batch dedup uses
-    (phash_of_media — nothing to retrain), and the state store
-    maintains per-(media_type, phash) (first doc, member count) —
-    the incremental asset index an ingest pipeline queries before
-    admitting a new image/audio/video. Driven to completion the
-    registry equals the batch GROUP BY exactly (min/count are
-    arrival-order free), so it carries the batch value oracle.
-    """
-    from go_integ_spark.operators.multimodal import (
-        phash_of_media,
-        synthesize_media,
-    )
-
-    path, schema = _docs_stream_source(spark, sf_dir)
-    stream = read_stream(spark, path, schema, max_files_per_trigger=4)
-    hashed = phash_of_media(synthesize_media(stream))
-    reg = hashed.groupBy("media_type", "phash").agg(
-        F.min("doc_id").alias("keep_doc_id"),
-        F.count(F.lit(1)).cast("bigint").alias("n_items"),
-    )
-    return _run_to_memory(reg, "complete", "ph", source_path=path)
-
-
 @register(
     "streaming_changepoint_cusum",
     tags=("streaming", "changepoint", "event_time"),

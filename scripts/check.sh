@@ -3,10 +3,12 @@
 # the reference's go.yml race+cover gate on every push): lint/syntax,
 # the full pytest suite — which includes the every-registered-query
 # DuckDB oracle sweep at sf0.001 (tests/test_queries_oracle.py) —
+# the plan-determinism gate (two fresh processes must print the same
+# normalised plan sha256 for every registered op, scripts/plans.py)
 # and the two driver-facing surfaces (bench JSON line with contention
 # flag; __spark_entry__ contract is exercised by tests/test_schema.py).
 #
-#   scripts/check.sh            # full check (~5 min)
+#   scripts/check.sh            # full check (~10 min)
 #   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
 #
 # Deeper sweeps (run before a round close, not per push):
@@ -28,6 +30,16 @@ fi
 
 echo "== pytest (full suite incl. sf0.001 oracle sweep) =="
 python -m pytest tests/ -x -q
+
+echo "== plan fingerprints (every registered op, two fresh processes) =="
+plans_dir="$(mktemp -d)"
+for run in 1 2; do
+    SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.001}" \
+    python scripts/plans.py "$plans_dir/plans.md" 2>/dev/null >"$plans_dir/sha$run"
+done
+diff "$plans_dir/sha1" "$plans_dir/sha2"
+echo "plans ok: $(wc -l <"$plans_dir/sha1") ops, same sha256 in both runs"
+rm -rf "$plans_dir"
 
 echo "== connector workload correctness (every cli_sync record decoded) =="
 python3 perfbench/run.py --workload connector --seed 1 --seconds 1 --trace 0 2>/dev/null \

@@ -603,10 +603,6 @@ def main() -> None:
         # neighbors into few cells); the scale-safe embedding-quality
         # representative here is the linear outlier scan instead.
         "embedding_outliers",
-        # the physically partitioned corpus layout: the one-time
-        # partitionBy write at 200k vectors + the pruned probe scan
-        # (INSET partition filters — the 100 TB read path).
-        "ann_ivf_topk_partitioned",
         # token-budget selection without a global sort: the driver
         # walks the (lang, tok) group table, which scales with the
         # VOCABULARY of token counts, not the corpus.

@@ -14,7 +14,6 @@ PKG = os.path.join(
 ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SG_PRETOUCH",
 }
 
 

@@ -589,18 +589,6 @@ def test_q15_q11_revenue_aggregate_is_cached(registry, spark):
         assert "InMemoryTableScan" in executed_plan(df), name
 
 
-def test_audio_vad_zero_shuffle_pruned_scan(registry, spark):
-    # VAD is entirely map-side: filter -> mapInPandas -> 5 scalars.
-    # No exchange anywhere, and the scan reads only (doc_id, text) —
-    # at 100 TB the payload column flows straight into Arrow batches
-    # without ever hitting a shuffle.
-    df = _df(registry, spark, "multimodal_audio_vad")
-    assert shuffle_count(df) == 0
-    (schema,) = read_schemas(df)
-    assert "text" in schema and "lang" not in schema and "source" not in schema
-    assert "MapInPandas" in executed_plan(df)
-
-
 def test_pagerank_iterations_checkpoint_and_stay_keyed(registry, spark):
     # The rank loop must never degenerate into an all-pairs join, and
     # the iteration frames must come from checkpointed RDDs (the
@@ -633,12 +621,10 @@ def test_epoch_schedule_single_corpus_pass(registry, spark):
 
 def test_single_shuffle_aggregation_family(registry, spark):
     # Each of these reduces the corpus through exactly ONE exchange:
-    # lifetime/holdout are map-side-combined aggregations; scene
-    # cuts' lag window and per-video aggregate share doc_id.
+    # lifetime/holdout are map-side-combined aggregations.
     for name in (
         "events_user_lifetime",
         "curation_holdout_split",
-        "multimodal_scene_cuts",
     ):
         assert shuffle_count(_df(registry, spark, name)) == 1, name
 
@@ -764,16 +750,6 @@ def test_ivf_cell_balance_bounded_summary(registry, spark):
     assert shuffle_count(df) <= 2
 
 
-def test_phash_neighbors_profile_runs_on_bounded_table(registry, spark):
-    # Payloads contribute one hash pass + one counter shuffle; the
-    # 9-probe expansion and neighborhood join ride broadcasts over
-    # the bounded count table — no shuffle join, no payload movement.
-    df = _df(registry, spark, "multimodal_phash_neighbors")
-    plan = executed_plan(df)
-    assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-
-
 def test_partition_plan_single_agg_text_never_moves(registry, spark):
     # One map-side-combined aggregation; the shuffle carries counters,
     # not text; the total is a broadcast cross join.
@@ -869,50 +845,6 @@ def test_threshold_join_cap_adds_no_data_exchange(registry, spark):
     # the only shuffle is the cap's tiny per-label count aggregate.
     assert count_op(df, "BroadcastHashJoin") >= 2
     assert shuffle_count(df) <= 2
-
-
-def test_ann_partitioned_corpus_prunes_cells(registry, spark):
-    # r9 (VERDICT r8 #3): the cell_id-partitioned corpus layout is a
-    # registered query, not prose — the scan over the materialized
-    # layout must carry a STATIC cell_id partition filter (INSET of
-    # the bounded probe set) so unprobed cells are pruned before any
-    # file IO. A probe set as large as IVF_K would mean pruning
-    # nothing — assert strict subset too.
-    df = _df(registry, spark, "ann_ivf_topk_partitioned")
-    plan = executed_plan(df)
-    scan_lines = [
-        ln for ln in plan.splitlines()
-        if "sg_ann_cells" in ln and "FileScan" in ln
-    ]
-    assert scan_lines, "partitioned-corpus scan missing from the plan"
-    assert any(
-        "PartitionFilters: [cell_id" in ln and "INSET" in ln
-        for ln in scan_lines
-    ), scan_lines
-    # the probed-cell set is a strict subset of the IVF_K cells
-    from pyspark.sql import functions as F
-
-    from go_integ_spark.operators.similarity import (
-        IVF_K,
-        IVF_NPROBE,
-        N_QUERIES,
-        ivf_centroids,
-        nearest_cells_pd,
-    )
-    from go_integ_spark.functions.vector import with_norm
-    from go_integ_spark.tables import load_table
-
-    v = with_norm(
-        load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    )
-    (crow,) = ivf_centroids(v).collect()
-    probed = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.explode(nearest_cells_pd(crow, IVF_NPROBE)).alias("c"))
-        .distinct()
-        .count()
-    )
-    assert probed < IVF_K, f"probe set covers all {IVF_K} cells"
 
 
 def test_hll_rolling_distinct_sketch_merges_mapside(registry, spark):

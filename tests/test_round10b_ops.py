@@ -11,7 +11,6 @@ of the CUSUM recursion being the recursion.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from go_integ_spark.operators import entity
 from go_integ_spark.operators.events import (
@@ -268,28 +267,6 @@ class TestCusumChangepoint:
             spec = reg[name]
             assert spec.oracle is not None
             assert spec.tags[0] == fam
-
-    def test_streaming_phash_registry_equals_batch_groupby(self, spark):
-        """The streaming registry driven to completion must equal the
-        batch groupBy over the identical kernel output — min/count
-        are arrival-order free."""
-        from go_integ_spark.operators.multimodal import phash_hashes
-        from go_integ_spark.streaming.queries import streaming_phash_registry
-
-        batch = {
-            tuple(r)
-            for r in phash_hashes(spark, SF)
-            .groupBy("media_type", "phash")
-            .agg(
-                F.min("doc_id").alias("keep_doc_id"),
-                F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            )
-            .collect()
-        }
-        stream = {
-            tuple(r) for r in streaming_phash_registry(spark, SF).collect()
-        }
-        assert batch == stream
 
     def test_streaming_twin_equals_batch(self, spark):
         """The streaming rollup driven to completion feeds the same

@@ -1,6 +1,6 @@
-"""Round-14 optimization pins: the session codec and pretouch
-defaults, the funnel near-dup de-array (VERDICT r13 item 2), and the
-cached_persist token key (ADVICE r13)."""
+"""Round-14 optimization pins: the session codec default and driver
+memory parsing, the funnel near-dup de-array (VERDICT r13 item 2), and
+the cached_persist token key (ADVICE r13)."""
 
 from __future__ import annotations
 
@@ -215,41 +215,14 @@ class TestCachedPersistToken:
         cache._slots.pop("er_kept_names")[2].unpersist()
 
 
-class TestPretouchRegime:
-    """Session-level heap pre-commit (VERDICT r13 item 5, guide §5):
-    ON by default only in the large-heap scale regime (>= 16 GiB
-    driver memory — the 1000x-probe / production profile), OFF at the
-    bench/test 8g default so the driver's measured JVM environment is
-    unchanged; SG_PRETOUCH=1/0 overrides both ways. Evidence for the
-    default: SMOKE_r14_1000x_knn_straggler_{base2,pretouch,base3}
-    ABA arms."""
+class TestDriverMemory:
+    """spark.driver.memory strings are read the way Spark reads them,
+    and reach the JVM in a form HotSpot accepts."""
 
-    def test_default_off_at_bench_memory(self):
-        from go_integ_spark.session import pretouch_enabled
-
-        assert pretouch_enabled("8g", None) is False
-        assert pretouch_enabled("512m", None) is False
-
-    def test_default_on_at_scale_memory(self):
-        from go_integ_spark.session import pretouch_enabled
-
-        assert pretouch_enabled("48g", None) is True
-        assert pretouch_enabled("16g", None) is True
-        # Spark's two-letter and terabyte suffixes, any case
-        for mem in ("48gb", "48GB", "1t", "1tb", "1T", "16384mb"):
-            assert pretouch_enabled(mem, None) is True, mem
-
-    def test_env_overrides_both_ways(self):
-        from go_integ_spark.session import pretouch_enabled
-
-        assert pretouch_enabled("8g", "1") is True
-        assert pretouch_enabled("48g", "0") is False
-
-    def test_unparseable_memory_stays_off(self):
-        from go_integ_spark.session import _mem_gb, pretouch_enabled
+    def test_mem_gb_parses_like_spark(self):
+        from go_integ_spark.session import _mem_gb
 
         assert _mem_gb("weird") == 0.0
-        assert pretouch_enabled("weird", None) is False
         assert _mem_gb("16384m") == 16.0
         assert _mem_gb("48gb") == _mem_gb("48G") == 48.0
         assert _mem_gb("1tb") == _mem_gb("1t") == 1024.0
@@ -267,54 +240,3 @@ class TestPretouchRegime:
         assert jvm_mem("48gb") == "49152m"
         assert jvm_mem("16384") == "16384m"
         assert jvm_mem("weird") == "weird"
-
-    def test_driver_java_options_merge(self):
-        """A caller's extraJavaOptions keep their flags and gain the
-        pretouch ones; with pretouch off they pass through as is."""
-        from go_integ_spark.session import driver_java_options
-
-        user = "-Djava.io.tmpdir=/x -XX:+PerfDisableSharedMem"
-        assert driver_java_options(user, "8g", False) == user
-        assert driver_java_options(None, "8g", False) is None
-        assert driver_java_options(user, "48g", True) == (
-            f"{user} -Xms48g -XX:+AlwaysPreTouch"
-        )
-        assert driver_java_options(None, "48gb", True) == (
-            "-Xms49152m -XX:+AlwaysPreTouch"
-        )
-
-    def test_warns_when_heap_exceeds_available_ram(self, monkeypatch):
-        """Pretouch commits the whole heap at JVM start, so a heap
-        larger than MemAvailable must be called out before launch,
-        naming the switch that turns it off."""
-        import warnings
-
-        from pyspark.sql import SparkSession
-
-        from go_integ_spark import session as sess
-
-        monkeypatch.setattr(sess, "_mem_available_gb", lambda: 14.5)
-        with pytest.warns(RuntimeWarning, match="SG_PRETOUCH=0"):
-            sess.warn_if_pretouch_exceeds_ram("48g")
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            sess.warn_if_pretouch_exceeds_ram("8g")
-            monkeypatch.setattr(sess, "_mem_available_gb", lambda: None)
-            sess.warn_if_pretouch_exceeds_ram("48g")
-
-        # get_spark warns before it launches anything: the builder's
-        # getOrCreate is stubbed to hand back the conf it was given
-        monkeypatch.setattr(sess, "_mem_available_gb", lambda: 14.5)
-        monkeypatch.setattr(
-            SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
-        )
-        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
-        monkeypatch.delenv("SG_PRETOUCH", raising=False)
-        with pytest.warns(RuntimeWarning, match="SG_PRETOUCH=0"):
-            conf = sess.get_spark()
-        assert "-XX:+AlwaysPreTouch" in conf["spark.driver.extraJavaOptions"]
-        monkeypatch.setenv("SG_PRETOUCH", "0")
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            conf = sess.get_spark()
-        assert "spark.driver.extraJavaOptions" not in conf

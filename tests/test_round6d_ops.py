@@ -1,7 +1,7 @@
 """Invariant pins for the fifth round-6 session's additions, beyond
-oracle equality: PageRank mass accounting, VAD frame algebra (with an
-oracle-INDEPENDENT pure-Python re-derivation — the shared-flaw lesson
-from the BM25/DSIR review), and epoch-schedule arithmetic.
+oracle equality: PageRank mass accounting (with an oracle-INDEPENDENT
+pure-Python re-derivation — the shared-flaw lesson from the BM25/DSIR
+review) and epoch-schedule arithmetic.
 """
 
 from __future__ import annotations
@@ -11,10 +11,6 @@ from go_integ_spark.operators.dedup import (
     PR_DAMP_DEN,
     PR_DAMP_NUM,
     PR_UNIT,
-)
-from go_integ_spark.operators.multimodal import (
-    VAD_ENERGY_THRESHOLD,
-    VAD_FRAME,
 )
 from go_integ_spark.registry import load_all
 from go_integ_spark.tables import load_table
@@ -79,51 +75,6 @@ def test_pagerank_matches_pure_python(spark):
         for r in REG["graph_pagerank_sources"].fn(spark, SF_DIR).collect()
     }
     assert got == {s: (wsum.get(s, 0), pr[s]) for s in nodes}
-
-
-def test_audio_vad_matches_pure_python(spark):
-    # Independent re-derivation straight from the text column with
-    # plain Python loops (no numpy, no SQL).
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in load_table(spark, SF_DIR, "documents")
-        .select("doc_id", "text")
-        .collect()
-        if r["doc_id"] % 3 == 1
-    }
-    got = {
-        r["doc_id"]: r
-        for r in REG["multimodal_audio_vad"].fn(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(texts)
-    for doc_id, text in texts.items():
-        b = text.encode("utf-8")
-        nf = len(b) // VAD_FRAME
-        speech = []
-        for f in range(nf):
-            frame = b[f * VAD_FRAME : (f + 1) * VAD_FRAME]
-            e = sum((x - 32) * (x - 32) for x in frame)
-            speech.append(e >= VAD_ENERGY_THRESHOLD)
-        n_sp = sum(speech)
-        run = best = 0
-        for s in speech:
-            run = run + 1 if s else 0
-            best = max(best, run)
-        r = got[doc_id]
-        assert r["n_frames"] == nf
-        assert r["speech_frames"] == n_sp
-        assert r["speech_bp"] == (n_sp * 10000 // nf if nf else 0)
-        assert r["max_speech_run"] == best
-
-
-def test_audio_vad_discriminates(spark):
-    # The threshold actually separates frames: the corpus must yield
-    # both speech and non-speech frames, or the op is a constant.
-    rows = REG["multimodal_audio_vad"].fn(spark, SF_DIR).collect()
-    assert any(r["speech_frames"] > 0 for r in rows)
-    assert any(r["speech_frames"] < r["n_frames"] for r in rows)
-    for r in rows:
-        assert 0 <= r["max_speech_run"] <= r["speech_frames"] <= r["n_frames"]
 
 
 def test_epoch_schedule_arithmetic(spark):

@@ -197,35 +197,6 @@ def test_ndcg_matches_recall_and_recompute(spark):
             assert r["dcg_micro"] < _NDCG_IDCG
 
 
-def test_scene_cuts_match_pure_python(spark):
-    from go_integ_spark.operators.multimodal import (
-        FRAME_COUNT,
-        SCENE_CUT_THRESHOLD,
-        SCENE_FEAT_SCALE,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").collect()
-    expect = {}
-    for r in docs:
-        if r["doc_id"] % 3 != 2:
-            continue
-        b = r["text"].encode("utf-8")
-        chunk = max(1, len(b) // FRAME_COUNT)
-        means = []
-        for i in range(FRAME_COUNT):
-            fb = b[i * chunk : (i + 1) * chunk]
-            means.append(sum(fb) * SCENE_FEAT_SCALE // len(fb) if fb else 0)
-        deltas = [abs(means[i] - means[i - 1]) for i in range(1, FRAME_COUNT)]
-        cuts = sum(1 for d in deltas if d > SCENE_CUT_THRESHOLD)
-        expect[r["doc_id"]] = (cuts, cuts + 1, max(deltas))
-    got = {
-        r["doc_id"]: (r["n_cuts"], r["n_scenes"], r["max_delta_centi"])
-        for r in REG["multimodal_scene_cuts"].fn(spark, SF_DIR).collect()
-    }
-    assert got == expect
-    assert any(c > 0 for c, _, _ in got.values())  # non-trivial corpus
-
-
 def test_mirror_blocklist_consistent_with_pagerank(spark):
     from go_integ_spark.operators.curation import MIRROR_DUP_THRESHOLD
 

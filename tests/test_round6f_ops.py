@@ -310,32 +310,6 @@ def test_ivf_cell_balance_consistent_with_index(spark):
     assert row["imbalance_bp"] >= 10000 * row["n_cells_used"] // IVF_K
 
 
-def test_phash_neighbors_matches_pure_python(spark):
-    # Third implementation: rebuild the neighborhood profile from the
-    # shared hash helper's own output with Python dicts.
-    from go_integ_spark.operators.multimodal import phash_hashes
-
-    rows = phash_hashes(spark, SF_DIR).collect()
-    counts: dict[tuple[str, int], int] = {}
-    totals: dict[str, int] = {}
-    for r in rows:
-        k = (r["media_type"], r["phash"])
-        counts[k] = counts.get(k, 0) + 1
-        totals[r["media_type"]] = totals.get(r["media_type"], 0) + 1
-    got = {
-        (r["media_type"], r["phash"]): r
-        for r in REG["multimodal_phash_neighbors"].fn(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(counts)
-    for (mt, h), n in counts.items():
-        within1 = n + sum(counts.get((mt, h ^ (1 << j)), 0) for j in range(8))
-        row = got[(mt, h)]
-        assert row["n_exact"] == n
-        assert row["n_within1"] == within1
-        assert row["share_within1_bp"] == within1 * 10000 // totals[mt]
-        assert row["n_within1"] >= row["n_exact"]
-
-
 def test_degree_distribution_matches_pairs(spark):
     # Rebuild the histogram from the registered pair query + corpus
     # count; mass must account for every document exactly once.

@@ -84,6 +84,7 @@ def test_entry_queries_staleness_first_and_complete():
     assert set(names) == set(registry), "queries() must expose the full registry"
     missing = [n for n in names if n not in entry._MEASURED_COST]
     assert not missing, f"untimed queries (run scripts/time_queries.py): {missing}"
+    assert set(entry._MEASURED_COST) <= set(registry), "cost entries for unregistered names"
 
     last_green = entry._last_green_rounds()
     seq = [last_green.get(n, -1) for n in names]
