@@ -170,10 +170,11 @@ def _fresh_session(app_name: str, sf_dir: str, ncpus: int):
         _warm(F.col("id"))
     ).write.format("noop").mode("overwrite").save()
     # ... and one empty 8-partition Python DataSource read, so the
-    # DataSource planning/worker path is warm too — otherwise ~3 s of
-    # one-time spin-up bills to the connector headline line (cold
-    # 5.4 s vs warm 2.1 s measured at sf0.1; same treatment as the
-    # pandas-UDF pool above).
+    # DataSource planning/worker path is warm too — otherwise the
+    # one-time spin-up of three Python daemons in sequence (0.33-0.37 s
+    # each from start to fork with session.py's bytecode zip, 1.10-1.24 s
+    # without) bills to the connector headline line (same treatment as
+    # the pandas-UDF pool above).
     from go_integ_spark.sources.datasource import warmup_datasource
 
     warmup_datasource(spark)

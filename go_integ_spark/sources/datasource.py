@@ -33,6 +33,7 @@ import datetime as dt
 import functools
 import json
 import pickle
+import weakref
 from collections.abc import Iterator
 from dataclasses import dataclass, replace
 
@@ -144,10 +145,13 @@ def _warmup_paginator():
 
 def warmup_datasource(spark, num_partitions: int = 8) -> None:
     """One empty N-partition Python DataSource read: spins up the
-    DataSource planning + worker path so its one-time cost (~3 s
-    measured at sf0.1: cold 5.4 s vs warm 2.1 s for the same read) is
-    not billed to whichever connector query runs first — the same
-    treatment bench.py gives the pandas-UDF worker pool."""
+    DataSource planning + worker path so its one-time cost is not
+    billed to whichever connector query runs first — the same
+    treatment bench.py gives the pandas-UDF worker pool. A cold read
+    starts three Python daemons in sequence (lookup_data_sources ->
+    create_data_source -> plan_data_source_read); importing pyspark
+    from the shadow home's bytecode zip (session.py) cut each one's
+    start-to-fork gap from 1.10-1.24 s to 0.33-0.37 s."""
     from go_integ_spark.schema.stream import StreamSchema
 
     warm_stream = HttpStream(
@@ -165,6 +169,12 @@ def warmup_datasource(spark, num_partitions: int = 8) -> None:
         num_partitions=num_partitions,
     )
     df.write.format("noop").mode("overwrite").save()
+
+
+# Sessions HttpStreamDataSource is registered in. Registering again
+# costs a JVM round trip and logs a "replaced a previously registered
+# data source" warning.
+_registered: weakref.WeakSet = weakref.WeakSet()
 
 
 def stream_dataframe(
@@ -186,10 +196,9 @@ def stream_dataframe(
     non-picklable transport raises here rather than being silently
     swapped for the default urllib transport mid-read.
     """
-    try:
+    if spark not in _registered:
         spark.dataSource.register(HttpStreamDataSource)
-    except Exception:  # already registered
-        pass
+        _registered.add(spark)
     transport_opt = None
     if transport is not None:
         try:

@@ -8,7 +8,7 @@
 # and the two driver-facing surfaces (bench JSON line with contention
 # flag; __spark_entry__ contract is exercised by tests/test_schema.py).
 #
-#   scripts/check.sh            # full check (~10 min)
+#   scripts/check.sh            # full check (tier-1 alone ~814 s at 4 cores)
 #   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
 #
 # Deeper sweeps (run before a round close, not per push):
@@ -55,8 +55,10 @@ SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.001}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 python bench.py 2>/dev/null | python -c '
 import json, sys
-line = sys.stdin.readline()
-d = json.loads(line)
+lines = sys.stdin.read().splitlines()
+# any JVM or library log line leaking to stdout breaks the contract
+assert len(lines) == 1, lines[:5]
+d = json.loads(lines[0])
 assert {"metric", "value", "unit", "queries", "sf", "contended"} <= d.keys(), d.keys()
 print("bench ok: %ss, contended=%s" % (d["value"], d["contended"]))
 '

@@ -14,6 +14,9 @@ PKG = os.path.join(
 ALLOWED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
+    # Spark's own variable, not a knob: read to find the install and
+    # set to the shadow home the session launches from (session.py).
+    "SPARK_HOME",
 }
 
 

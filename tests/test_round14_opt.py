@@ -1,73 +1,11 @@
-"""Round-14 optimization pins: the session codec default and driver
-memory parsing, the funnel near-dup de-array (VERDICT r13 item 2), and
-the cached_persist token key (ADVICE r13)."""
+"""Round-14 optimization pins: the funnel near-dup de-array (VERDICT
+r13 item 2), the kept greedy split geometry, and the cached_persist
+token key (ADVICE r13)."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# Runs in a child interpreter: the override and the unset-CPUs
-# default only show in a session that get_spark itself launches.
-_FRESH_SESSION = """
-import json
-from go_integ_spark.session import get_spark
-s = get_spark(extra_conf={"spark.io.compression.codec": "lz4"})
-print(json.dumps({
-    "master": s.sparkContext.master,
-    "shuffle": s.conf.get("spark.sql.shuffle.partitions"),
-    "codec": s.sparkContext.getConf().get("spark.io.compression.codec"),
-}))
-s.stop()
-"""
-
-
-@pytest.fixture(scope="module")
-def fresh_session_conf():
-    """Conf of a new get_spark session with SPARK_GRAFT_CPUS unset
-    and an lz4 codec passed in extra_conf."""
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
-    out = subprocess.run(
-        [sys.executable, "-c", _FRESH_SESSION],
-        cwd=REPO,
-        env=env,
-        capture_output=True,
-        text=True,
-        check=True,
-        timeout=300,
-    ).stdout
-    return json.loads(out.strip().splitlines()[-1])
-
-
-def test_session_io_codec_default_and_override(spark, fresh_session_conf):
-    """r14 codec ship (guide §2.3/§9): zstd is the session default —
-    A/B'd at the 1000x kNN probe, scoring-exchange shuffle -18.9%
-    bytes / -13.1% wall (SMOKE_r14_1000x_knn_codec_*.json) — and a
-    caller's extra_conf codec wins over it."""
-    assert spark.conf.get("spark.io.compression.codec") == "zstd"
-    assert fresh_session_conf["codec"] == "lz4"
-
-
-def test_cpus_default_is_host_core_count(fresh_session_conf):
-    """With SPARK_GRAFT_CPUS unset the session sizes itself to this
-    host, not to a fixed core count."""
-    n = os.cpu_count()
-    assert fresh_session_conf["master"] == f"local[{n}]"
-    assert fresh_session_conf["shuffle"] == str(n)
-
-
-def test_live_session_uses_zstd_codec(spark):
-    """The conftest session is built by get_spark with no override,
-    so the shipped default must be live in it."""
-    assert spark.conf.get("spark.io.compression.codec") == "zstd"
 
 
 class TestFunnelWindowMinEquivalence:
@@ -213,30 +151,3 @@ class TestCachedPersistToken:
         assert er_slots == ["er_kept_names"]
         assert cache._slots["er_kept_names"][3] == entity.MAX_BLOCK
         cache._slots.pop("er_kept_names")[2].unpersist()
-
-
-class TestDriverMemory:
-    """spark.driver.memory strings are read the way Spark reads them,
-    and reach the JVM in a form HotSpot accepts."""
-
-    def test_mem_gb_parses_like_spark(self):
-        from go_integ_spark.session import _mem_gb
-
-        assert _mem_gb("weird") == 0.0
-        assert _mem_gb("16384m") == 16.0
-        assert _mem_gb("48gb") == _mem_gb("48G") == 48.0
-        assert _mem_gb("1tb") == _mem_gb("1t") == 1024.0
-        assert _mem_gb("8388608kb") == 8.0
-        assert _mem_gb("16384") == 16.0  # bare number is MiB, as in Spark
-        assert _mem_gb("1.5g") == 0.0  # Spark rejects fractions too
-
-    def test_jvm_mem_normalizes_spark_only_forms(self):
-        """Spark's launcher hands spark.driver.memory to -Xmx as is;
-        forms HotSpot rejects become whole MiB, valid ones stay."""
-        from go_integ_spark.session import jvm_mem
-
-        assert jvm_mem("8g") == "8g"
-        assert jvm_mem("1T") == "1T"
-        assert jvm_mem("48gb") == "49152m"
-        assert jvm_mem("16384") == "16384m"
-        assert jvm_mem("weird") == "weird"

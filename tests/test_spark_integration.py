@@ -43,6 +43,37 @@ def test_datasource_distributed_read(spark, server):
     assert rows == sorted(p["name"] for p in server.data["pokemon"])
 
 
+def test_datasource_registered_once_per_session(spark, server, monkeypatch):
+    """Two reads in one session register the DataSource once, and a
+    registration error propagates instead of being swallowed."""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from go_integ_spark.sources import datasource
+
+    calls = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, ds: (calls.append(ds), register(self, ds))[1],
+    )
+    monkeypatch.setattr(datasource, "_registered", weakref.WeakSet())
+    for _ in range(2):
+        df, _ = datasource.stream_dataframe(spark, pokeapi.streams[0], {"url": server.base}, None)
+    assert calls == [datasource.HttpStreamDataSource]
+    assert df.count() == len(server.data["pokemon"])
+
+    def broken(self, ds):
+        raise RuntimeError("registration failed")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", broken)
+    monkeypatch.setattr(datasource, "_registered", weakref.WeakSet())
+    with pytest.raises(RuntimeError, match="registration failed"):
+        datasource.stream_dataframe(spark, pokeapi.streams[0], {"url": server.base}, None)
+
+
 def test_datasource_rejects_unpicklable_transport(spark, server):
     """An injected transport must travel to executors or fail loudly —
     never be silently replaced by the default urllib transport."""
