@@ -518,8 +518,7 @@ if basket_part_pairs.__doc__:  # absent under PYTHONOPTIMIZE=2
 _GATE_SERVERS: dict[str, int] = {}
 
 # Worker processes serving one gate fixture. 4 is plenty for the
-# bench's 8 concurrent strides over 300 pages; the 2M-row scale probe
-# (scripts/probe_connector_scale.py) uses its own 8-worker pool.
+# bench's 8 concurrent strides over 300 pages.
 GATE_WORKERS = 4
 
 

@@ -3471,97 +3471,6 @@ def similarity_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sq_stats(spark: SparkSession, sf_dir: str) -> list[tuple[float, float]]:
-    """Per-dimension [min, max] the SQ8 codec trained on — the
-    codec's entire model state (2 doubles per dimension), collected
-    for broadcast into the search kernel."""
-    emb = load_table(spark, sf_dir, "embeddings").select("embedding")
-    rows = (
-        emb.select(F.posexplode("embedding").alias("dim", "xf"))
-        .groupBy("dim")
-        .agg(F.min(F.col("xf").cast("double")).alias("mn"),
-             F.max(F.col("xf").cast("double")).alias("mx"))
-        .orderBy("dim")
-        .collect()
-    )
-    return [(r["mn"], r["mx"]) for r in rows]
-
-
-def sq_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """Asymmetric top-k over SQ8 codes: float queries against the
-    quantized corpus, squared-L2 distance to bin-center
-    reconstructions — the serving path that makes the 4x memory cut
-    of ``similarity_sq_encode`` usable. Library function (no gate
-    row); accuracy vs the float index is pinned in
-    tests/test_round6b_ops.py.
-
-    Scale shape: the (mn, width) model is aggregated ONCE (the only
-    corpus group-by) and broadcast into a single Arrow-batched kernel
-    that quantizes, dequantizes, and scores all queries per batch
-    (numpy matmul over the batch x dim matrix); the bounded
-    ``salted_topk`` reduction follows. In a deployed store the codes
-    are read back from the index files instead of being regenerated —
-    the scan then rides one byte per dimension, which is the codec's
-    point; this library form regenerates them in the same kernel so
-    the demo stays single-pass over the test parquet.
-    """
-    import numpy as np
-    import pandas as pd
-
-    stats = np.array(sq_stats(spark, sf_dir))  # (dim, 2) — one agg job
-    mn = stats[:, 0]
-    rng = stats[:, 1] - stats[:, 0]
-    width = rng / SQ_LEVELS
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .orderBy("vec_id")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows])
-    q_mat = np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
-
-    def score(it):
-        for pdf in it:
-            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = np.floor((x - mn) * SQ_LEVELS / rng)
-            # same decisions as similarity_sq_encode: top-bin clamp,
-            # code 0 on a corpus-constant dimension
-            c = np.where(rng == 0.0, 0.0, np.minimum(c, SQ_LEVELS - 1))
-            xhat = mn + (c + 0.5) * width  # (batch, dim) dequant
-            # ||q - x||^2 = ||q||^2 - 2 q.x + ||x||^2
-            d2 = (
-                (q_mat * q_mat).sum(axis=1)[None, :]
-                - 2.0 * (xhat @ q_mat.T)
-                + (xhat * xhat).sum(axis=1)[:, None]
-            )  # (batch, n_queries)
-            n = len(pdf)
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids[None, :], n, axis=0).ravel(),
-                    "neighbor_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), len(q_ids)
-                    ),
-                    "d2": d2.ravel(),
-                }
-            )
-            yield out[out["query_id"] != out["neighbor_id"]]
-
-    scored = emb.mapInPandas(
-        score, "query_id long, neighbor_id long, d2 double"
-    )
-    out = salted_topk(
-        scored, "query_id", [F.col("d2").asc(), F.col("neighbor_id")], k
-    )
-    return out.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("d2"), 4).alias("d2"),
-        F.col("rn").cast("int").alias("rank"),
-    )
-
-
 # --- Hybrid retrieval: reciprocal rank fusion (lexical + dense) ------
 #
 # Production RAG retrieval is almost never one ranker: a lexical list

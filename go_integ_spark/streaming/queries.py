@@ -15,7 +15,9 @@ once per streaming query.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -28,6 +30,16 @@ from go_integ_spark.operators.text import CHUNK_ORACLE
 from go_integ_spark.registry import register
 from go_integ_spark.streaming.pipeline import read_stream
 from go_integ_spark.tables import load_table
+
+
+def _process_tempdir(prefix: str) -> str:
+    """A temp dir that lives as long as this process. Stream sources
+    and merge targets are read lazily by the DataFrames built on them,
+    so they are removed at interpreter exit, not when the call returns."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
 
 # sf_dir -> (materialized parquet path, schema). Shared by every
 # streaming gate query in this process.
@@ -50,7 +62,7 @@ def _stream_source(
     df = load_table(spark, sf_dir, table)
     if cols:
         df = df.select(*cols)
-    path = tempfile.mkdtemp(prefix="sg_stream_gate_") + f"/{table}"
+    path = _process_tempdir("sg_stream_gate_") + f"/{table}"
     # 16 MB row groups: a micro-batch's read parallelism is bounded by
     # row-group count, not file count — with the 128 MB default, the
     # 1000x probe's ~92 MB files were ONE row group each, so a
@@ -531,7 +543,7 @@ def streaming_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     out = _FB_MERGE.get(sf_dir)
     if out is None:
         path, schema = _events_stream_source(spark, sf_dir)
-        out = tempfile.mkdtemp(prefix="sg_fb_merge_") + "/events_latest"
+        out = _process_tempdir("sg_fb_merge_") + "/events_latest"
         stream_schema = (
             StreamSchema.from_ddl(
                 "events",
@@ -549,9 +561,7 @@ def streaming_foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame
             read_stream(spark, path, schema, max_files_per_trigger=4)
             .writeStream.foreachBatch(handle)
             .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="sg_fb_ckpt_")
-            )
+            .option("checkpointLocation", _process_tempdir("sg_fb_ckpt_"))
             .start()
         )
         q.awaitTermination()

@@ -5,8 +5,8 @@
 # DuckDB oracle sweep at sf0.001 (tests/test_queries_oracle.py) —
 # the plan-determinism gate (two fresh processes must print the same
 # normalised plan sha256 for every registered op, scripts/plans.py)
-# and the two driver-facing surfaces (bench JSON line with contention
-# flag; __spark_entry__ contract is exercised by tests/test_schema.py).
+# and the two driver-facing surfaces (the bench's one JSON line;
+# __spark_entry__ contract is exercised by tests/test_schema.py).
 #
 #   scripts/check.sh            # full check (tier-1 alone ~814 s at 4 cores)
 #   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
@@ -59,8 +59,8 @@ lines = sys.stdin.read().splitlines()
 # any JVM or library log line leaking to stdout breaks the contract
 assert len(lines) == 1, lines[:5]
 d = json.loads(lines[0])
-assert {"metric", "value", "unit", "queries", "sf", "contended"} <= d.keys(), d.keys()
-print("bench ok: %ss, contended=%s" % (d["value"], d["contended"]))
+assert {"metric", "value", "unit", "queries", "sf"} <= d.keys(), d.keys()
+print("bench ok: %ss" % d["value"])
 '
 
 echo "== check.sh PASSED =="

@@ -38,8 +38,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _cpu_calibration  # noqa: E402
-
 SCALE = int(os.environ.get("SMOKE_SCALE", "10"))
 # Comma-separated allowlist of smoke lines (empty = run everything).
 # The 1000x design probe (5M docs / 2M vectors) runs a TARGETED
@@ -805,9 +803,6 @@ def main() -> None:
         "order_seed": os.environ.get("SMOKE_ORDER_SEED"),
         "shuffle_partitions": os.environ.get("SMOKE_SHUFFLE"),
         "only": sorted(ONLY) if ONLY else None,
-        # single-thread host fingerprint measured at report time:
-        # skew ratios compare across hosts, walls need this next to them
-        "cpu_calib_sec": _cpu_calibration(),
     }
     print(json.dumps(summary))
     # Standing-gate artifact (VERDICT r10 #8): SMOKE_OUT=path writes

@@ -1,90 +1,14 @@
-"""Pins for the measurement harness: bench.py's contended verdict,
-its /proc ancestry walk and its child-output drain, and the skew
-verdict eligibility rule of scripts/smoke_scale.py."""
+"""Pins for the measurement harness: the skew verdict eligibility
+rule of scripts/smoke_scale.py."""
 
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
-
-import bench
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
-
-
-def test_bench_contended_classification():
-    """bench.py's contended verdict is load-bearing measurement QA
-    (r7's bogus 29.76 s trend point slipped through the old gate) —
-    pin the pure decision function."""
-    # single clean pass, no tenants
-    assert bench.classify_run([20.0], [], [], []) is False
-    # foreign JVM at any checkpoint -> contended, even if totals agree
-    assert bench.classify_run([20.0, 20.5], [123], [], []) is True
-    assert bench.classify_run([20.0, 20.5], [], [9], []) is True
-    assert bench.classify_run([20.0], [], [], [77]) is True
-    # two cold passes within 25% -> reproducible, start load was decay
-    assert bench.classify_run([24.0, 20.0], [], [], []) is False
-    # >25% disagreement -> actively contended
-    assert bench.classify_run([29.8, 20.0], [], [], []) is True
-    assert bench.classify_run([20.0, 29.8], [], [], []) is True
-
-
-def test_bench_classify_zero_total_guard():
-    """ADVICE r8: a zero/negative pass total must classify as
-    contended, not raise ZeroDivisionError."""
-    assert bench.classify_run([0.0], [], [], []) is True
-    assert bench.classify_run([0.0, 20.0], [], [], []) is True
-    assert bench.classify_run([20.0, 0.0], [], [], []) is True
-    assert bench.classify_run([-1.0, 20.0], [], [], []) is True
-
-
-def test_bench_process_ancestry_logic():
-    """The subprocess-pass refactor moved foreign-JVM detection to a
-    /proc ancestry walk — pin the pure pieces: descendants of the
-    bench process are never foreign, remembered own pids are never
-    foreign, a cycle-free walk terminates."""
-    me = os.getpid()
-    # synthetic tree: me -> 100 -> 200 (our JVM), 300 orphan (init)
-    ppid_of = {100: me, 200: 100, 300: 1, me: 1}
-    assert bench._is_descendant(200, me, ppid_of)
-    assert bench._is_descendant(100, me, ppid_of)
-    assert not bench._is_descendant(300, me, ppid_of)
-    # a corrupt map with a cycle must terminate, not hang
-    assert not bench._is_descendant(400, me, {400: 500, 500: 400})
-    # the live walk: this test process's own proc entry is consistent
-    ppid_real, javas = bench._proc_snapshot()
-    assert me in ppid_real
-    # every java our session spawned is excluded by ancestry or the
-    # remembered-own set — assert no pid from the FIRST snapshot
-    # survives as foreign, rather than that the second snapshot is
-    # exactly empty (a tenant java started between the two snapshots
-    # would make `== []` flake on shared hosts)
-    own = set(javas)
-    assert set(bench._foreign_jvms(own)) & own == set()
-
-
-def test_bench_drain_survives_output_larger_than_pipe_buffer():
-    """ADVICE r9 (bench.py:319): the parent must drain the child's
-    stdout WHILE polling — a child emitting more than the ~64KB pipe
-    buffer would otherwise block on write and the parent would poll
-    forever. Pin with a 2MB payload child (deadlocks inside the test
-    timeout if the drain regresses)."""
-    payload_kb = 2048
-    proc = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            f"import sys; sys.stdout.write('x' * {payload_kb} * 1024 + '\\n')",
-        ],
-        stdout=subprocess.PIPE,
-    )
-    out, own = bench._poll_and_drain(proc, observe=set, poll_sleep=0.05)
-    assert proc.returncode == 0
-    assert len(out) == payload_kb * 1024 + 1
-    assert own == set()
 
 
 class TestSkewVerdictEligibility:

@@ -158,35 +158,6 @@ def test_bpe_apply_counts_match_python_reference(spark):
         assert r["n_words"] <= r["n_tokens"] <= sum(len(w) for w in words)
 
 
-def test_sq_topk_tracks_float_ground_truth(spark):
-    """The quantized serving path must stay close to the float index:
-    with 256 levels per dimension the L2 top-10 overlap should be
-    near-perfect on this corpus."""
-    from go_integ_spark.operators.similarity import TOP_K, sq_topk, with_norm
-    import numpy as np
-
-    approx = sq_topk(spark, SF_DIR)
-    rows = approx.collect()
-    by_q: dict[int, list] = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert len(by_q) == 5
-    # float L2 ground truth, computed directly
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
-    vecs = {r["vec_id"]: np.array(list(r["embedding"]), dtype=np.float64) for r in emb}
-    overlaps = []
-    for qid, rs in by_q.items():
-        assert sorted(r["rank"] for r in rs) == list(range(1, TOP_K + 1))
-        q = vecs[qid]
-        truth = sorted(
-            ((np.sum((q - v) ** 2), nid) for nid, v in vecs.items() if nid != qid),
-        )[:TOP_K]
-        truth_ids = {nid for _, nid in truth}
-        got_ids = {r["neighbor_id"] for r in rs}
-        overlaps.append(len(truth_ids & got_ids) / TOP_K)
-    assert sum(overlaps) / len(overlaps) >= 0.9, overlaps
-
-
 def test_bm25_matches_pure_python_reference(spark):
     """Oracle-independent pin: the SQL oracle shares the counting
     expression with the Spark side, so a counting bug would be

@@ -5,6 +5,9 @@ with availableNow + processAllAvailable over parquet file sources.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 import uuid
 
 import pytest
@@ -463,3 +466,33 @@ def test_state_partitions_file_uri_forms(tmp_path, monkeypatch):
     assert sq.state_partitions_for(f"file://localhost{src}") == want
     with _pytest.raises(ValueError, match="remote host"):
         sq.state_partitions_for("file://nfs-server/exports/corpus")
+
+
+# Runs in a child interpreter: removal happens at interpreter exit.
+_STREAM_SOURCE_CHILD = """
+import sys
+from go_integ_spark.session import get_spark
+from go_integ_spark.streaming.queries import _docs_stream_source
+s = get_spark(app_name="stream_source_tempdir")
+path, _ = _docs_stream_source(s, sys.argv[1])
+print(path)
+s.stop()
+"""
+
+
+def test_stream_source_dir_removed_at_process_exit():
+    """A stream source's parquet copy lives in a per-process temp dir
+    that is gone once that process exits, so repeated runs do not
+    pile up copies under the temp directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _STREAM_SOURCE_CHILD, SF],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    ).stdout
+    path = out.strip().splitlines()[-1]
+    assert os.path.basename(os.path.dirname(path)).startswith("sg_stream_gate_")
+    assert not os.path.exists(os.path.dirname(path))
