@@ -56,10 +56,10 @@ def _fresh_session(sf_dir: str, ncpus: int):
     ).write.format("noop").mode("overwrite").save()
     # ... and one empty 8-partition Python DataSource read, so the
     # DataSource planning/worker path is warm too — otherwise the
-    # one-time spin-up of three Python daemons in sequence (0.33-0.37 s
-    # each from start to fork with session.py's bytecode zip, 1.10-1.24 s
-    # without) bills to the connector headline line (same treatment as
-    # the pandas-UDF pool above).
+    # one-time spin-up of three Python daemons in sequence (each one's
+    # pyspark imports take 0.37 s from session.py's bytecode directory,
+    # 1.27 s from Spark's source zip) bills to the connector headline
+    # line (same treatment as the pandas-UDF pool above).
     from go_integ_spark.sources.datasource import warmup_datasource
 
     warmup_datasource(spark)

@@ -10,12 +10,16 @@ Start-up: ``get_spark`` launches the JVM from a shadow ``SPARK_HOME``
 under ``~/.cache/go_integ_spark/``, built once per Spark install. Every
 top-level entry of the real home is a symlink there, except two:
 
-- ``python/lib/`` holds copies of ``pyspark.zip`` and the py4j zip with
-  an unchecked-hash ``.pyc`` in place of every ``.py`` (the sources sit
-  beside them, for tracebacks). Spark puts that ``pyspark.zip`` first
-  on each Python worker's path, so workers import pyspark from bytecode
-  instead of compiling it on every start (a worker's start-to-fork
-  gap: 1.1-1.2 s -> 0.33-0.37 s);
+- ``python/lib/`` holds ``pyspark.zip`` and the py4j zip as bytecode
+  directories under those names, which ``PythonUtils.sparkPythonPath``
+  hard-codes: each real zip extracted, with an unchecked-hash ``.pyc``
+  for every ``.py``. Spark puts that ``pyspark.zip`` first on each
+  Python worker's path, so workers import pyspark from bytecode (a
+  fresh worker's pyspark imports: 1.27 s from the source zip, 0.37 s
+  here). pyspark's worker calls ``importlib.invalidate_caches()`` on
+  every task; a zip importer re-parses its archive's directory there,
+  a directory's finder only resets an mtime (0.20-0.25 s -> 0.08-0.11 s
+  of CPU per call; perfbench connector ``pass_cpu_s`` -21%);
 - ``conf/`` is empty (the real one may hold only ``*.template`` files),
   so the JVM classpath has no non-empty directory, which CDS needs.
 
@@ -25,22 +29,25 @@ memory) runs with ``-XX:ArchiveClassesAtExit`` and, at interpreter
 exit, waits for its JVM and promotes the dump to ``<key>.jsa``; later
 sessions map it with ``-Xshare:on``, so a mismatched archive fails
 loudly instead of being skipped (``get_spark`` 4.9-5.6 s -> 2.3 s).
-The first run on a host pays about 5 s to build the zips and about
-10 s at exit for the ~150 MB dump. ``rm -rf ~/.cache/go_integ_spark``
+The first run on a host pays about 4 s to build the directories and
+about 10 s at exit for the ~150 MB dump. ``rm -rf ~/.cache/go_integ_spark``
 resets both.
 """
 
 from __future__ import annotations
 
 import atexit
+import compileall
+import contextlib
 import hashlib
 import importlib.util
-import marshal
 import math
 import os
+import py_compile
 import re
 import shutil
 import subprocess
+import sys
 import tempfile
 import warnings
 import zipfile
@@ -109,45 +116,36 @@ def _lib_zips(home: str) -> list[str]:
 
 
 def _home_key(real: str) -> str:
-    """Key of the shadow of ``real``: its path, the sha256 of its
-    python/lib zips and this interpreter's bytecode magic number.
-    PySpark already refuses a worker whose Python differs from the
-    driver's."""
-    h = hashlib.sha256(importlib.util.MAGIC_NUMBER + real.encode())
+    """Key of the shadow of ``real``: the shadow's layout, ``real``'s
+    path, the sha256 of its python/lib zips and this interpreter's
+    bytecode magic number. PySpark already refuses a worker whose Python
+    differs from the driver's. The layout tag keeps a shadow that holds
+    zips under the same names from being reused."""
+    h = hashlib.sha256(b"bytecode-dir\0" + importlib.util.MAGIC_NUMBER + real.encode())
     for name in _lib_zips(real):
         with open(os.path.join(real, _LIB, name), "rb") as f:
             h.update(name.encode() + hashlib.file_digest(f, "sha256").digest())
     return h.hexdigest()[:16]
 
 
-def _bytecode_zip(real: str, tmp: str, home: str, name: str) -> None:
-    """Copy python/lib zip ``name`` of ``real`` into ``tmp`` with an
-    unchecked-hash .pyc in place of every .py. The .py files go to
-    ``<name>.src/`` beside it, and the bytecode names them as its
-    source, so tracebacks still show source lines. They stay out of the
-    zip because pyspark's worker calls importlib.invalidate_caches() on
-    every task, which re-reads each zip importer's directory: a zip
-    with both files made that read 0.11 -> 0.29 s per task (4 cores)."""
-    head = importlib.util.MAGIC_NUMBER + (1).to_bytes(4, "little")
-    with (
-        zipfile.ZipFile(os.path.join(real, _LIB, name)) as zin,
-        zipfile.ZipFile(os.path.join(tmp, _LIB, name), "w", zipfile.ZIP_DEFLATED) as zout,
-        warnings.catch_warnings(),
-    ):
+def _bytecode_dir(real: str, tmp: str, home: str, name: str) -> None:
+    """Extract python/lib zip ``name`` of ``real`` into a directory of
+    the same name under ``tmp`` and compile every .py in it to an
+    unchecked-hash .pyc whose source is named under ``home``."""
+    lib = os.path.join(_LIB, name)
+    with zipfile.ZipFile(os.path.join(real, lib)) as z:
+        z.extractall(os.path.join(tmp, lib))
+    # compileall prints its errors; stdout belongs to the CLI and bench.py
+    with warnings.catch_warnings(), contextlib.redirect_stdout(sys.stderr):
         warnings.simplefilter("ignore")  # pyspark's own escape-sequence warnings
-        for info in zin.infolist():
-            data = zin.read(info)
-            if not info.filename.endswith(".py"):
-                zout.writestr(info, data)
-                continue
-            src = os.path.join(tmp, _LIB, f"{name}.src", info.filename)
-            os.makedirs(os.path.dirname(src), exist_ok=True)
-            with open(src, "wb") as f:
-                f.write(data)
-            path = os.path.join(home, _LIB, f"{name}.src", info.filename)
-            code = compile(data, path, "exec", dont_inherit=True)
-            pyc = head + importlib.util.source_hash(data) + marshal.dumps(code)
-            zout.writestr(info.filename + "c", pyc)
+        ok = compileall.compile_dir(
+            os.path.join(tmp, lib),
+            ddir=os.path.join(home, lib),
+            quiet=1,
+            invalidation_mode=py_compile.PycInvalidationMode.UNCHECKED_HASH,
+        )
+    if not ok:
+        raise RuntimeError(f"compileall failed in {name} of {real}; errors are on stderr")
 
 
 def _link_all(src: str, dst: str, own: set[str]) -> None:
@@ -164,7 +162,7 @@ def _build_shadow(real: str, tmp: str, home: str) -> None:
     _link_all(os.path.join(real, "python"), os.path.join(tmp, "python"), {"lib"})
     _link_all(os.path.join(real, _LIB), os.path.join(tmp, _LIB), set(zips))
     for name in zips:
-        _bytecode_zip(real, tmp, home, name)
+        _bytecode_dir(real, tmp, home, name)
 
 
 def shadow_spark_home() -> str:

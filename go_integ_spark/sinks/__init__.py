@@ -101,20 +101,17 @@ def merge_upsert(
     if not pk:
         raise ValueError(f"stream {schema.name!r} declares no primary key")
     cursor = schema.cursor_field()
-    # Only a genuinely-missing table means "first write". Any other
-    # read failure (corrupt footer, schema drift, transient IO) must
-    # abort BEFORE the destructive overwrite below — swallowing it
-    # would silently replace the whole table with one batch.
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        existing = spark.read.format(format).load(path)
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" in str(ex) or "Path does not exist" in str(ex):
-            unioned = incoming
-        else:
-            raise
+    # A missing path means "first write"; ask its FileSystem instead of
+    # letting a read fail (Spark logs a listener ERROR for a failed
+    # query). Any read failure of an existing table (corrupt footer,
+    # schema drift, transient IO) must abort BEFORE the destructive
+    # overwrite below — swallowing it would silently replace the whole
+    # table with one batch.
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        unioned = incoming
     else:
+        existing = spark.read.format(format).load(path)
         missing = [c for c in incoming.columns if c not in existing.columns]
         if missing:
             raise ValueError(

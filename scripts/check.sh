@@ -41,14 +41,16 @@ diff "$plans_dir/sha1" "$plans_dir/sha2"
 echo "plans ok: $(wc -l <"$plans_dir/sha1") ops, same sha256 in both runs"
 rm -rf "$plans_dir"
 
-echo "== connector workload correctness (every cli_sync record decoded) =="
-python3 perfbench/run.py --workload connector --seed 1 --seconds 1 --trace 0 2>/dev/null \
-    | tail -n 1 | python -c '
+for workload in connector curation; do
+    echo "== $workload workload correctness (every checked output decoded) =="
+    python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 1 --trace 0 2>/dev/null \
+        | tail -n 1 | python -c '
 import json, sys
 d = json.loads(sys.stdin.readline())
 assert d["correct"] is True and d["failed"] == 0, d
-print("connector ok: correct=%s, failed=%s" % (d["correct"], d["failed"]))
-'
+print("%s ok: correct=%s, failed=%s" % (sys.argv[1], d["correct"], d["failed"]))
+' "$workload"
+done
 
 echo "== bench CLI (one JSON line expected) =="
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.001}" \

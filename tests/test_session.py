@@ -1,6 +1,6 @@
 """get_spark: the session conf it ships and the conf a caller passes,
 driver memory parsing, and the fast start-up (a shadow SPARK_HOME whose
-pyspark zip carries bytecode, and a JVM class-data archive)."""
+pyspark.zip is a bytecode directory, and a JVM class-data archive)."""
 
 from __future__ import annotations
 
@@ -98,8 +98,9 @@ class TestDriverMemory:
         assert jvm_mem("weird") == "weird"
 
 
-# A session in a child interpreter with its cache in argv[1]: the
-# worker's pyspark module file, the JVM's own arguments, and the cache
+# A session in a child interpreter with its cache in argv[1]: where
+# the worker's pyspark bytecode came from and the archives of the
+# worker's zip importers, the JVM's own arguments, and the cache
 # listing while the session is live. The caller passes JVM options of
 # its own, which must survive the merge.
 _CACHED_SESSION = """
@@ -108,10 +109,15 @@ from pyspark.sql import functions as F
 from go_integ_spark import session
 session.CACHE_DIR = sys.argv[1]
 s = session.get_spark(extra_conf={"spark.driver.extraJavaOptions": "-Dcaller.flag=kept"})
-where = F.udf(lambda _: __import__("pyspark").__file__, "string")
+
+def probe(_):
+    import zipimport, pyspark
+    zips = [f.archive for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+    return json.dumps({"cached": pyspark.__spec__.cached, "zips": zips})
+
 bean = s.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 print(json.dumps({
-    "worker_pyspark": s.range(1).select(where("id")).first()[0],
+    "worker": json.loads(s.range(1).select(F.udf(probe, "string")("id")).first()[0]),
     "jvm_args": list(bean.getInputArguments()),
     "cache": sorted(os.listdir(session.CACHE_DIR)),
 }))
@@ -152,12 +158,22 @@ def test_dump_keeps_stdout_clean_and_promotes_after_exit(cached_sessions):
 
 
 def test_worker_imports_pyspark_from_bytecode(cached_sessions):
-    """A Python worker's pyspark loads from the shadow home's zip, as
-    bytecode, not from the installed source-only zip."""
+    """A Python worker's pyspark loads from the shadow home's bytecode,
+    not from the installed source-only zip."""
     cache, runs = cached_sessions
     for _, live, _ in runs:
-        assert live["worker_pyspark"].startswith(cache + os.sep)
-        assert live["worker_pyspark"].endswith(".pyc")
+        cached = live["worker"]["cached"]
+        assert cached.startswith(cache + os.sep) and cached.endswith(".pyc")
+        assert os.path.isfile(cached)
+
+
+def test_worker_has_no_zip_importer_over_the_shadow(cached_sessions):
+    """pyspark's worker calls importlib.invalidate_caches() on every
+    task, and each zip importer re-parses its archive's directory
+    there; the shadow's pyspark and py4j entries are directories."""
+    cache, runs = cached_sessions
+    for _, live, _ in runs:
+        assert not [a for a in live["worker"]["zips"] if a.startswith(cache + os.sep)]
 
 
 def test_jvm_maps_promoted_archive(cached_sessions):
@@ -214,25 +230,44 @@ def test_home_key_follows_zip_bytes(tmp_path):
     assert session._home_key(home) != key
 
 
-def test_bytecode_zip_imports_pyc_and_keeps_source_lines(tmp_path):
-    """The copy holds a .pyc in place of each .py (no more entries than
-    the original, since every Python task re-reads the zip directory),
-    imports as bytecode, and its tracebacks still show source lines."""
-    real = _fake_home(tmp_path / "real", "def boom():\n    raise ValueError('boom')\n")
-    (tmp_path / "home" / "python" / "lib").mkdir(parents=True)
+def test_bytecode_dir_runs_pyc_and_keeps_source_lines(tmp_path, capfd):
+    """The shadow's pyspark.zip is a directory of unchecked-hash .pyc
+    files: editing a .py after the build does not change what runs,
+    and tracebacks show the shadow's source lines. The build prints
+    nothing on stdout."""
+    real = _fake_home(tmp_path / "real", "WHO = 'built'\ndef boom():\n    raise ValueError('boom')\n")
     home = str(tmp_path / "home")
-    session._bytecode_zip(real, home, home, "pyspark.zip")
-    zipped = os.path.join(home, "python", "lib", "pyspark.zip")
-    assert zipfile.ZipFile(zipped).namelist() == ["pyspark/__init__.pyc"]
+    os.mkdir(home)
+    session._build_shadow(real, home, home)
+    assert capfd.readouterr().out == ""
+    lib = os.path.join(home, "python", "lib", "pyspark.zip")
+    src = os.path.join(lib, "pyspark", "__init__.py")
+    with open(src, "w") as f:
+        f.write("WHO = 'edited'\ndef boom():\n    raise ValueError('boom')\n")
     proc = subprocess.run(
-        [sys.executable, "-c", f"import sys; sys.path.insert(0, {zipped!r}); "
-         "import pyspark; print(pyspark.__file__); pyspark.boom()"],
+        [sys.executable, "-c", f"import sys; sys.path.insert(0, {lib!r}); "
+         "import pyspark; print(pyspark.WHO, pyspark.__spec__.cached); pyspark.boom()"],
         capture_output=True,
         text=True,
         timeout=60,
     )
-    assert proc.stdout.strip() == os.path.join(zipped, "pyspark", "__init__.pyc")
+    who, cached = proc.stdout.split()
+    assert who == "built"
+    assert os.path.dirname(cached) == os.path.join(lib, "pyspark", "__pycache__")
+    assert f'File "{src}", line 3' in proc.stderr
     assert "raise ValueError('boom')" in proc.stderr
+
+
+def test_compile_failure_fails_the_build(tmp_path, capfd):
+    """A source that does not compile fails the build; the error goes
+    to stderr, never to stdout."""
+    real = _fake_home(tmp_path / "real", "def (:\n")
+    home = str(tmp_path / "home")
+    os.mkdir(home)
+    with pytest.raises(RuntimeError, match="compileall failed in pyspark.zip"):
+        session._build_shadow(real, home, home)
+    out, err = capfd.readouterr()
+    assert out == "" and "pyspark/__init__.py" in err
 
 
 def test_user_conf_file_is_refused(tmp_path, monkeypatch):

@@ -57,6 +57,27 @@ def test_merge_upsert_across_batches(spark, tmp_path):
     assert back == {1: ("a", "t1"), 2: ("b2", "t2"), 3: ("c", "t2")}
 
 
+def test_first_merge_into_missing_path_never_reads(spark, tmp_path, monkeypatch):
+    """A missing target is found without a failing read, which would
+    make Spark log a listener ERROR for the failed query."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    loads = []
+    load = DataFrameReader.load
+
+    def spy(self, *args, **kwargs):
+        loads.append(args)
+        return load(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "load", spy)
+    p = str(tmp_path / "t")
+    merge_upsert(spark, _df(spark, [(1, "a", "t1")]), p, USERS)
+    assert loads == []
+    merge_upsert(spark, _df(spark, [(2, "b", "t1")]), p, USERS)
+    assert len(loads) == 1
+    assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == [1, 2]
+
+
 def test_merge_refuses_to_overwrite_on_read_failure(spark, tmp_path):
     """A corrupt/unreadable existing table must abort the merge, not
     silently become a 'first write' that overwrites the table with
