@@ -8,7 +8,7 @@ DuckDB oracle (duckdb timestamps are UTC-naive).
 
 Start-up: ``get_spark`` launches the JVM from a shadow ``SPARK_HOME``
 under ``~/.cache/go_integ_spark/``, built once per Spark install. Every
-top-level entry of the real home is a symlink there, except two:
+top-level entry of the real home is a symlink there, except three:
 
 - ``python/lib/`` holds ``pyspark.zip`` and the py4j zip as bytecode
   directories under those names, which ``PythonUtils.sparkPythonPath``
@@ -18,20 +18,29 @@ top-level entry of the real home is a symlink there, except two:
   fresh worker's pyspark imports: 1.27 s from the source zip, 0.37 s
   here). pyspark's worker calls ``importlib.invalidate_caches()`` on
   every task; a zip importer re-parses its archive's directory there,
-  a directory's finder only resets an mtime (0.20-0.25 s -> 0.08-0.11 s
-  of CPU per call; perfbench connector ``pass_cpu_s`` -21%);
+  a directory's finder only resets an mtime;
+- ``python/lib/pyspark.zip/sitecustomize.py`` (compiled like the rest),
+  which ``site`` runs at the start of every Python process Spark
+  launches and never in the driver. It takes the spark-core jar that
+  Spark appends to those processes' path, and the jar's zip importers,
+  off the path: the jar holds no Python, and each of its two importers
+  re-parsed its 5,359-entry directory on every call. With both
+  changes a worker holds no zip importer and a call costs 0.01-0.09 ms
+  of CPU (0.20-0.25 s over bytecode zips, 62-123 ms with only the jar
+  left; perfbench connector ``pass_cpu_s`` -21% and then -16%);
 - ``conf/`` is empty (the real one may hold only ``*.template`` files),
   so the JVM classpath has no non-empty directory, which CDS needs.
 
 CDS (class-data sharing) is the JVM's archive of already-parsed
-classes. The first session for a key (JDK build, jar list, driver
-memory) runs with ``-XX:ArchiveClassesAtExit`` and, at interpreter
-exit, waits for its JVM and promotes the dump to ``<key>.jsa``; later
-sessions map it with ``-Xshare:on``, so a mismatched archive fails
-loudly instead of being skipped (``get_spark`` 4.9-5.6 s -> 2.3 s).
-The first run on a host pays about 4 s to build the directories and
-about 10 s at exit for the ~150 MB dump. ``rm -rf ~/.cache/go_integ_spark``
-resets both.
+classes. One session per key (JDK build, jar list, driver memory), the
+one that takes the key's claim file lock while no archive exists, runs
+with ``-XX:ArchiveClassesAtExit`` and, at interpreter exit, waits for
+its JVM and promotes the dump to ``<key>.jsa`` unless one exists;
+sessions starting meanwhile run without an archive, later ones map it
+with ``-Xshare:on``, so a mismatched archive fails loudly instead of
+being skipped (``get_spark`` 4.9-5.6 s -> 2.3 s). The first run on a
+host pays about 4 s to build the directories and about 10 s at exit
+for the dump. ``rm -rf ~/.cache/go_integ_spark`` resets both.
 """
 
 from __future__ import annotations
@@ -39,6 +48,7 @@ from __future__ import annotations
 import atexit
 import compileall
 import contextlib
+import fcntl
 import hashlib
 import importlib.util
 import math
@@ -61,6 +71,22 @@ CACHE_DIR = os.path.join(os.path.expanduser("~"), ".cache", "go_integ_spark")
 # warnings, and the CLI, bench.py and perfbench own stdout.
 _LOG_FLAGS = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
 _LIB = os.path.join("python", "lib")  # the zips Spark puts on workers' path
+# The shadow's sitecustomize (see the module docstring). The jar's
+# importers are ``jar`` and ``jar/org`` (pickle probes
+# ``org.python.core``); imports made before site runs already cached
+# the first, so the importer cache is cleared as well as sys.path.
+_HOOK = '''"""Drop the Spark home's jars from this interpreter's import path."""
+import sys
+
+_JARS = {jars!r}
+sys.path[:] = [p for p in sys.path if not p.startswith(_JARS)]
+for p in [p for p in sys.path_importer_cache if p.startswith(_JARS)]:
+    del sys.path_importer_cache[p]
+'''
+
+
+def _hook(real: str) -> str:
+    return _HOOK.format(jars=os.path.join(real, "jars", ""))
 
 
 def ensure_engine_contract(spark: SparkSession) -> None:
@@ -117,11 +143,13 @@ def _lib_zips(home: str) -> list[str]:
 
 def _home_key(real: str) -> str:
     """Key of the shadow of ``real``: the shadow's layout, ``real``'s
-    path, the sha256 of its python/lib zips and this interpreter's
-    bytecode magic number. PySpark already refuses a worker whose Python
-    differs from the driver's. The layout tag keeps a shadow that holds
-    zips under the same names from being reused."""
+    path, the sha256 of its python/lib zips, the worker hook's source
+    and this interpreter's bytecode magic number. PySpark already
+    refuses a worker whose Python differs from the driver's. The layout
+    tag keeps a shadow that holds zips under the same names from being
+    reused."""
     h = hashlib.sha256(b"bytecode-dir\0" + importlib.util.MAGIC_NUMBER + real.encode())
+    h.update(_hook(real).encode())
     for name in _lib_zips(real):
         with open(os.path.join(real, _LIB, name), "rb") as f:
             h.update(name.encode() + hashlib.file_digest(f, "sha256").digest())
@@ -163,12 +191,29 @@ def _build_shadow(real: str, tmp: str, home: str) -> None:
     _link_all(os.path.join(real, _LIB), os.path.join(tmp, _LIB), set(zips))
     for name in zips:
         _bytecode_dir(real, tmp, home, name)
+    hook = os.path.join(_LIB, "pyspark.zip", "sitecustomize.py")
+    with open(os.path.join(tmp, hook), "w") as f:
+        f.write(_hook(real))
+    py_compile.compile(
+        os.path.join(tmp, hook),
+        dfile=os.path.join(home, hook),
+        doraise=True,
+        invalidation_mode=py_compile.PycInvalidationMode.UNCHECKED_HASH,
+    )
 
 
 def shadow_spark_home() -> str:
     """The shadow of the real Spark home, built on first use. Resolving
     through ``jars`` finds the real home even when SPARK_HOME already
-    names a shadow (a child of a session inherits it)."""
+    names a shadow (a child of a session inherits it). Refused when
+    this interpreter has a ``sitecustomize``: the shadow's own would
+    hide it from Spark's Python processes."""
+    spec = importlib.util.find_spec("sitecustomize")
+    if spec is not None:
+        raise RuntimeError(
+            f"sitecustomize resolves to {spec.origin}; the shadow SPARK_HOME runs its own "
+            "sitecustomize in Spark's Python processes, which would hide that module there"
+        )
     real = os.path.dirname(os.path.realpath(os.path.join(_find_spark_home(), "jars")))
     conf = os.path.join(real, "conf")
     user = [f for f in os.listdir(conf) if not f.endswith(".template")] if os.path.isdir(conf) else []
@@ -217,17 +262,35 @@ def _alive(pid: int) -> bool:
     return True
 
 
+def _claim(key: str) -> bool:
+    """Take the claim on dumping archive ``key``; False while another
+    live process holds it. The claim is a flock on a descriptor left
+    open, which the kernel releases when this process ends, however it
+    ends."""
+    fd = os.open(os.path.join(CACHE_DIR, f"cds-{key}.claim"), os.O_RDWR | os.O_CREAT, 0o644)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        os.close(fd)
+        return False
+    return True
+
+
 def cds_flags(key: str) -> tuple[list[str], str | None]:
     """JVM flags for archive ``key``, and the ``.part`` file this
-    process dumps to (None when a promoted archive exists). Only a
-    promoted archive is ever passed to the JVM: a truncated one crashes
-    it. ``.part`` files whose process is dead are deleted."""
+    process dumps to (None when it does not dump). Only a promoted
+    archive is ever passed to the JVM: a truncated one crashes it.
+    One process per key dumps, the one holding the key's claim; a
+    session that starts while another dumps runs without an archive.
+    ``.part`` files whose process is dead are deleted."""
     for name in os.listdir(CACHE_DIR):
         m = re.fullmatch(r"cds-\w+\.(\d+)\.part", name)
         if m and not _alive(int(m[1])):
             os.remove(os.path.join(CACHE_DIR, name))
     jsa = os.path.join(CACHE_DIR, f"cds-{key}.jsa")
-    if os.path.isfile(jsa):
+    if not os.path.isfile(jsa) and not _claim(key):
+        return [], None
+    if os.path.isfile(jsa):  # also when promoted just before the claim
         return [f"-XX:SharedArchiveFile={jsa}", "-Xshare:on"], None
     part = os.path.join(CACHE_DIR, f"cds-{key}.{os.getpid()}.part")
     return [f"-XX:ArchiveClassesAtExit={part}"], part
@@ -236,14 +299,15 @@ def cds_flags(key: str) -> tuple[list[str], str | None]:
 def _promote_at_exit(part: str) -> None:
     """Stop a live context, close the gateway's stdin so its JVM exits
     and dumps, wait for it, and promote the dump only if the JVM
-    exited 0."""
+    exited 0 and no archive of its key exists."""
     if SparkContext._active_spark_context is not None:
         SparkContext._active_spark_context.stop()
     proc = SparkContext._gateway.proc
     proc.stdin.close()
     if proc.wait() == 0:
-        os.replace(part, re.sub(r"\.\d+\.part$", ".jsa", part))
-    elif os.path.exists(part):
+        with contextlib.suppress(FileExistsError):
+            os.link(part, re.sub(r"\.\d+\.part$", ".jsa", part))
+    if os.path.exists(part):
         os.remove(part)
 
 

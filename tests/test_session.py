@@ -4,8 +4,11 @@ pyspark.zip is a bytecode directory, and a JVM class-data archive)."""
 
 from __future__ import annotations
 
+import importlib.machinery
+import importlib.util
 import json
 import os
+import re
 import subprocess
 import sys
 import zipfile
@@ -99,25 +102,43 @@ class TestDriverMemory:
 
 
 # A session in a child interpreter with its cache in argv[1]: where
-# the worker's pyspark bytecode came from and the archives of the
-# worker's zip importers, the JVM's own arguments, and the cache
-# listing while the session is live. The caller passes JVM options of
-# its own, which must survive the merge.
+# the worker's pyspark bytecode came from, the worker's zip importers
+# and the jars on its path, in a UDF worker and in a Python DataSource
+# reader task (the connector's path); the JVM's own arguments; and the
+# cache listing while the session is live. The caller passes JVM
+# options of its own, which must survive the merge.
 _CACHED_SESSION = """
 import json, os, sys
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from go_integ_spark import session
 session.CACHE_DIR = sys.argv[1]
 s = session.get_spark(extra_conf={"spark.driver.extraJavaOptions": "-Dcaller.flag=kept"})
 
-def probe(_):
+def probe(_=None):
     import zipimport, pyspark
     zips = [f.archive for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
-    return json.dumps({"cached": pyspark.__spec__.cached, "zips": zips})
+    jars = [p for p in sys.path if p.endswith(".jar")]
+    return json.dumps({"cached": pyspark.__spec__.cached, "zips": zips, "jars": jars})
 
+class ProbeReader(DataSourceReader):
+    def read(self, partition):
+        yield (probe(),)
+
+class ProbeSource(DataSource):
+    @classmethod
+    def name(cls):
+        return "probe"
+    def schema(self):
+        return "probe string"
+    def reader(self, schema):
+        return ProbeReader()
+
+s.dataSource.register(ProbeSource)
 bean = s.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
 print(json.dumps({
     "worker": json.loads(s.range(1).select(F.udf(probe, "string")("id")).first()[0]),
+    "reader": json.loads(s.read.format("probe").load().first()[0]),
     "jvm_args": list(bean.getInputArguments()),
     "cache": sorted(os.listdir(session.CACHE_DIR)),
 }))
@@ -167,13 +188,18 @@ def test_worker_imports_pyspark_from_bytecode(cached_sessions):
         assert os.path.isfile(cached)
 
 
-def test_worker_has_no_zip_importer_over_the_shadow(cached_sessions):
+def test_worker_has_no_zip_importer(cached_sessions):
     """pyspark's worker calls importlib.invalidate_caches() on every
     task, and each zip importer re-parses its archive's directory
-    there; the shadow's pyspark and py4j entries are directories."""
-    cache, runs = cached_sessions
+    there. The shadow's pyspark and py4j entries are directories, and
+    its sitecustomize takes the spark-core jar Spark appends off the
+    path of every Python process Spark starts: UDF workers and
+    DataSource reader tasks alike."""
+    _, runs = cached_sessions
     for _, live, _ in runs:
-        assert not [a for a in live["worker"]["zips"] if a.startswith(cache + os.sep)]
+        for task in ("worker", "reader"):
+            assert live[task]["zips"] == [], task
+            assert live[task]["jars"] == [], task
 
 
 def test_jvm_maps_promoted_archive(cached_sessions):
@@ -213,6 +239,44 @@ def test_stale_part_is_never_passed_to_the_jvm(tmp_path, monkeypatch):
     assert flags == [f"-XX:SharedArchiveFile={tmp_path / 'cds-k.jsa'}", "-Xshare:on"]
 
 
+def test_one_session_dumps_each_archive(tmp_path, monkeypatch):
+    """While a live process holds a key's dump claim, another session
+    gets no archive flags and no .part; a claim whose process has died
+    is taken over."""
+    monkeypatch.setattr(session, "CACHE_DIR", str(tmp_path))
+    claim = tmp_path / "cds-k.claim"
+    holder = subprocess.Popen(
+        [sys.executable, "-c", "import fcntl, sys; f = open(sys.argv[1], 'w'); "
+         "fcntl.flock(f, fcntl.LOCK_EX); print(flush=True); sys.stdin.read()", str(claim)],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+    )
+    try:
+        holder.stdout.readline()
+        assert session.cds_flags("k") == ([], None)
+        assert not list(tmp_path.glob("*.part"))
+    finally:
+        holder.communicate(timeout=60)
+    assert claim.exists()
+    flags, part = session.cds_flags("k")
+    assert flags == [f"-XX:ArchiveClassesAtExit={part}"]
+    assert part == str(tmp_path / f"cds-k.{os.getpid()}.part")
+
+
+def test_promotion_never_replaces_an_archive(tmp_path, monkeypatch):
+    """A dump that finishes after an archive of its key was promoted is
+    dropped; the promoted archive stays as it was."""
+    part = tmp_path / f"cds-k.{os.getpid()}.part"
+    jsa = tmp_path / "cds-k.jsa"
+    part.write_bytes(b"late dump")
+    jsa.write_bytes(b"promoted")
+    proc = subprocess.Popen(["cat"], stdin=subprocess.PIPE)
+    monkeypatch.setattr(session.SparkContext, "_active_spark_context", None)
+    monkeypatch.setattr(session.SparkContext, "_gateway", type("G", (), {"proc": proc}))
+    session._promote_at_exit(str(part))
+    assert jsa.read_bytes() == b"promoted" and not part.exists()
+
+
 def _fake_home(root, zip_text: str):
     lib = root / "python" / "lib"
     lib.mkdir(parents=True, exist_ok=True)
@@ -227,6 +291,13 @@ def test_home_key_follows_zip_bytes(tmp_path):
     key = session._home_key(home)
     assert session._home_key(home) == key
     _fake_home(tmp_path, "x = 2\n")
+    assert session._home_key(home) != key
+
+
+def test_home_key_follows_hook_source(tmp_path, monkeypatch):
+    home = _fake_home(tmp_path, "x = 1\n")
+    key = session._home_key(home)
+    monkeypatch.setattr(session, "_HOOK", session._HOOK + "# edited\n")
     assert session._home_key(home) != key
 
 
@@ -281,3 +352,52 @@ def test_user_conf_file_is_refused(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "CACHE_DIR", str(tmp_path / "cache"))
     with pytest.raises(RuntimeError, match=r"spark-defaults\.conf'\]"):
         session.shadow_spark_home()
+
+
+def test_sitecustomize_of_the_driver_is_refused(tmp_path, monkeypatch):
+    """The shadow's sitecustomize would hide one this interpreter has
+    from Spark's Python processes, so the build refuses, naming it."""
+    real_find_spec = importlib.util.find_spec
+    origin = str(tmp_path / "site-packages" / "sitecustomize.py")
+
+    def find_spec(name, *args):
+        if name == "sitecustomize":
+            return importlib.machinery.ModuleSpec(name, None, origin=origin)
+        return real_find_spec(name, *args)
+
+    monkeypatch.setattr(importlib.util, "find_spec", find_spec)
+    monkeypatch.setattr(session, "_find_spark_home", lambda: _fake_home(tmp_path, ""))
+    monkeypatch.setattr(session, "CACHE_DIR", str(tmp_path / "cache"))
+    with pytest.raises(RuntimeError, match=f"sitecustomize resolves to {re.escape(origin)}"):
+        session.shadow_spark_home()
+    assert not (tmp_path / "cache").exists()
+
+
+def test_hook_drops_only_the_homes_jars(tmp_path):
+    """The built sitecustomize runs from its unchecked-hash .pyc at
+    interpreter start, takes every entry under the real home's jars/
+    off sys.path and out of the importer cache, and leaves the rest."""
+    real = _fake_home(tmp_path / "real", "")
+    home = str(tmp_path / "home")
+    os.mkdir(home)
+    session._build_shadow(real, home, home)
+    lib = os.path.join(home, "python", "lib", "pyspark.zip")
+    with open(os.path.join(lib, "sitecustomize.py"), "w") as f:
+        f.write("raise SystemExit('source ran')\n")
+    jar = os.path.join(real, "jars", "spark-core.jar")
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("org/x.class", b"")
+    other = str(tmp_path / "other.zip")
+    with zipfile.ZipFile(other, "w") as z:
+        z.writestr("y.txt", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", "import json, sys; print(json.dumps([sys.path, list(sys.path_importer_cache)]))"],
+        env={**os.environ, "PYTHONPATH": os.pathsep.join([lib, other, jar])},
+        capture_output=True,
+        text=True,
+        timeout=60,
+        check=True,
+    )
+    path, cached = json.loads(proc.stdout)
+    assert path[1:3] == [lib, other] and jar not in path
+    assert other in cached and not [p for p in cached if p.startswith(os.path.dirname(jar))]
