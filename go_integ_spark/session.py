@@ -10,47 +10,39 @@ Start-up: ``get_spark`` launches the JVM from a shadow ``SPARK_HOME``
 under ``~/.cache/go_integ_spark/``, built once per Spark install. Every
 top-level entry of the real home is a symlink there, except three:
 
-- ``python/lib/`` holds ``pyspark.zip`` and the py4j zip as bytecode
-  directories under those names, which ``PythonUtils.sparkPythonPath``
-  hard-codes: each real zip extracted, with an unchecked-hash ``.pyc``
-  for every ``.py``. Spark puts that ``pyspark.zip`` first on each
-  Python worker's path, so workers import pyspark from bytecode (a
-  fresh worker's pyspark imports: 1.27 s from the source zip, 0.37 s
-  here). pyspark's worker calls ``importlib.invalidate_caches()`` on
-  every task; a zip importer re-parses its archive's directory there,
-  a directory's finder only resets an mtime;
-- ``python/lib/pyspark.zip/sitecustomize.py`` (compiled like the rest),
-  which ``site`` runs at the start of every Python process Spark
-  launches and never in the driver. It takes the spark-core jar that
-  Spark appends to those processes' path, and the jar's zip importers,
-  off the path: the jar holds no Python, and each of its two importers
-  re-parsed its 5,359-entry directory on every call. With both
-  changes a worker holds no zip importer and a call costs 0.01-0.09 ms
-  of CPU (0.20-0.25 s over bytecode zips, 62-123 ms with only the jar
-  left; perfbench connector ``pass_cpu_s`` -21% and then -16%);
+- ``python/lib/`` holds ``pyspark.zip`` and the py4j zip (names
+  ``PythonUtils.sparkPythonPath`` hard-codes) as directories of
+  unchecked-hash ``.pyc`` files, so workers import pyspark from
+  bytecode and the ``importlib.invalidate_caches()`` of every task
+  re-parses no zip directory;
+- ``python/lib/pyspark.zip/sitecustomize.py``, run by ``site`` in every
+  Python process Spark launches (never the driver), takes the
+  spark-core jar Spark appends, and its zip importers, off the path;
 - ``conf/`` is empty (the real one may hold only ``*.template`` files),
   so the JVM classpath has no non-empty directory, which CDS needs.
 
 CDS (class-data sharing) is the JVM's archive of already-parsed
-classes. One session per key (JDK build, jar list, driver memory), the
-one that takes the key's claim file lock while no archive exists, runs
-with ``-XX:ArchiveClassesAtExit`` and, at interpreter exit, waits for
-its JVM and promotes the dump to ``<key>.jsa`` unless one exists;
-sessions starting meanwhile run without an archive, later ones map it
-with ``-Xshare:on``, so a mismatched archive fails loudly instead of
-being skipped (``get_spark`` 4.9-5.6 s -> 2.3 s). The first run on a
-host pays about 4 s to build the directories and about 10 s at exit
-for the dump. ``rm -rf ~/.cache/go_integ_spark`` resets both.
+classes. Each key gets one archive, built before any session maps it:
+the first session to need it takes the key's lock, and a child
+interpreter runs ``_train``, a fixed routine on generated data, with
+``-XX:ArchiveClassesAtExit``; the archive its JVM writes becomes
+``cds-<key>.jsa``. Sessions started meanwhile wait on the lock, so the
+archive holds the same classes whichever command runs first. Every
+session maps it with ``-Xshare:on``, so a mismatched archive fails the
+launch instead of being skipped (``get_spark`` 4.9-5.6 s -> 2.3 s).
+The first run on a host pays about 4 s for the directories and 75 s
+for the training run. ``rm -rf ~/.cache/go_integ_spark`` resets both.
 """
 
 from __future__ import annotations
 
-import atexit
 import compileall
 import contextlib
 import fcntl
 import hashlib
 import importlib.util
+import inspect
+import json
 import math
 import os
 import py_compile
@@ -67,14 +59,13 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 CACHE_DIR = os.path.join(os.path.expanduser("~"), ".cache", "go_integ_spark")
-# JVM log lines go to stderr: a CDS dump prints hundreds of [cds]
-# warnings, and the CLI, bench.py and perfbench own stdout.
+# JVM log lines go to stderr: the CLI, bench.py and perfbench own stdout.
 _LOG_FLAGS = ["-Xlog:disable", "-Xlog:all=warning:stderr"]
+_TRAIN_MAIN = "import json, sys; from go_integ_spark import session; session._train(json.loads(sys.argv[1]))"
 _LIB = os.path.join("python", "lib")  # the zips Spark puts on workers' path
-# The shadow's sitecustomize (see the module docstring). The jar's
-# importers are ``jar`` and ``jar/org`` (pickle probes
-# ``org.python.core``); imports made before site runs already cached
-# the first, so the importer cache is cleared as well as sys.path.
+# The shadow's sitecustomize. The jar's importers (``jar``, and
+# ``jar/org`` from pickle's ``org.python.core`` probe) may already be
+# cached before site runs, so the importer cache is cleared too.
 _HOOK = '''"""Drop the Spark home's jars from this interpreter's import path."""
 import sys
 
@@ -90,22 +81,12 @@ def _hook(real: str) -> str:
 
 
 def ensure_engine_contract(spark: SparkSession) -> None:
-    """Pin the two runtime-settable confs the ENGINE CONTRACT requires,
-    in one advertised place (every table/file read routes through
-    here — tables.load_table, sources.files.FileStream):
-
-    - ``nanosAsLong``: the driver's events.parquet stores
-      TIMESTAMP(NANOS), unreadable without it;
-    - UTC session timezone: the NTZ -> LTZ normalization cast is only
-      a wall-clock identity under UTC — a non-UTC session would
-      silently shift instants relative to the DuckDB oracles and
-      unix_micros epochs.
-
-    DELIBERATELY permanent, not scoped-and-restored: returned frames
-    are lazy, so restoring the timezone before the caller's action
-    would re-break the cast. The engine operates in UTC; callers
-    mixing these reads with local-time timestamp logic in one session
-    are outside the contract (documented in README/STATUS).
+    """Pin the two runtime confs every table and file read relies on
+    (tables.load_table, sources.files.FileStream): ``nanosAsLong``, as
+    events.parquet stores TIMESTAMP(NANOS), and a UTC session timezone,
+    under which alone the NTZ -> LTZ cast keeps instants equal to the
+    DuckDB oracles'. Permanent on purpose: returned frames are lazy, so
+    restoring the timezone before the caller's action breaks the cast.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -127,11 +108,10 @@ def _mem_gb(mem: str) -> float:
 
 
 def jvm_mem(mem: str) -> str:
-    """``mem`` in a form HotSpot's -Xmx/-Xms accept. In local mode
-    Spark's launcher passes spark.driver.memory to -Xmx verbatim, and
-    the JVM rejects two-letter suffixes ("48gb") and reads a bare
-    number as bytes; those become whole MiB. JVM-valid and
-    unparseable strings pass through unchanged."""
+    """``mem`` in a form HotSpot's -Xmx accepts: Spark's launcher passes
+    spark.driver.memory to it verbatim, so two-letter suffixes ("48gb")
+    and bare numbers (bytes to the JVM) become whole MiB; JVM-valid and
+    unparseable strings pass through."""
     if re.fullmatch(r"\d+[kmgt]", mem.strip().lower()) or not _mem_gb(mem):
         return mem
     return f"{math.ceil(_mem_gb(mem) * 1024)}m"
@@ -142,12 +122,9 @@ def _lib_zips(home: str) -> list[str]:
 
 
 def _home_key(real: str) -> str:
-    """Key of the shadow of ``real``: the shadow's layout, ``real``'s
-    path, the sha256 of its python/lib zips, the worker hook's source
-    and this interpreter's bytecode magic number. PySpark already
-    refuses a worker whose Python differs from the driver's. The layout
-    tag keeps a shadow that holds zips under the same names from being
-    reused."""
+    """Key of the shadow of ``real``: a layout tag, ``real``'s path, the
+    sha256 of its python/lib zips, the worker hook's source and this
+    interpreter's bytecode magic number."""
     h = hashlib.sha256(b"bytecode-dir\0" + importlib.util.MAGIC_NUMBER + real.encode())
     h.update(_hook(real).encode())
     for name in _lib_zips(real):
@@ -240,88 +217,146 @@ def shadow_spark_home() -> str:
 
 
 def cds_key(home: str, driver_mem: str) -> str:
-    """Archive key: the JDK build, the jar list (the archive records
-    each jar's path, size and mtime) and the driver memory, which
-    decides compressed oops."""
-    java = shutil.which("java") or "java"
+    """Archive key: the build of the java Spark's launcher runs
+    (``$JAVA_HOME/bin/java`` if set, as in ``bin/spark-class``), the
+    jars' paths, sizes and mtimes, the driver memory (it decides
+    compressed oops) and the training routine's source."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else "java"
     version = subprocess.run([java, "-version"], capture_output=True, text=True, check=True).stderr
     h = hashlib.sha256(f"{home}\n{version}\n{driver_mem}\n".encode())
+    h.update(inspect.getsource(_train).encode())
     for e in sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name):
         st = e.stat()
         h.update(f"{e.name} {st.st_size} {st.st_mtime_ns}\n".encode())
     return h.hexdigest()[:16]
 
 
-def _alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
+def _train(conf: dict[str, str]) -> None:
+    """The fixed work, on generated data, whose loaded classes fill every
+    archive: the column types, operators and function families of the
+    package's ops and connectors. Runs in ``cds_archive``'s child and
+    exits with the JVM's status once the JVM has written its dump."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from go_integ_spark.functions.cache import cached_persist
+    from go_integ_spark.sources.datasource import warmup_datasource
+
+    spark = SparkSession.builder.master("local[2]").config(map=conf).getOrCreate()
+    noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
+    with tempfile.TemporaryDirectory() as tmp:
+        spark.range(4096).selectExpr(
+            "id", "id DIV 600 AS k", "string(id) AS s", "id / 3 AS d", "float(id) AS f", "decimal(id) AS n",
+            "timestamp_seconds(id) AS ts", "date_add(DATE'2024-01-01', int(id % 31)) AS dt", "id % 2 = 0 AS b",
+            "sequence(0, id % 3) AS a", "map(s, id) AS m", "binary(s) AS bin", "named_struct('x', id, 'y', s) AS st",
+        ).write.parquet(f"{tmp}/t")
+        read = spark.read.parquet(f"{tmp}/t")
+        filtered = read.filter("k IN (1, 2) AND s != '3' AND contains(s, '1') OR k < 2 AND ts IS NULL OR NOT b")
+        noop(filtered.selectExpr("st.x", "explode(array(st)) AS e").select("x", "e.y"))
+        t = cached_persist("training", read, lambda: read)
+        t.createOrReplaceTempView("training")
+        spark.range(7).selectExpr("string(id) AS s", "id AS j").createOrReplaceTempView("dim")
+        noop(t.mapInPandas(lambda batches: batches, t.schema))
+        noop(t.select(F.pandas_udf(lambda s: s + 1, "long")("id")))
+        noop(t.withColumns({"c": F.col("id").cast("string"), "z": F.size("a")}).orderBy("id").repartition(3))
+        joined = spark.table("training").join(spark.table("dim"), "s")
+        noop(joined.join(spark.table("dim").groupBy("j").count(), "j").withColumn("e", F.transform("a", lambda x: -x)))
+        noop(t.select("*", F.rank().over(Window.partitionBy("k").orderBy("d")).alias("r")).filter("r <= 2"))
+        for sql in [
+            "SELECT xxhash64(s), xxhash64(a, st), md5(s), sha2(s, 256), hex(bin), conv(s, 10, 16), int(s),"
+            " double(s), bin > binary(s), size(a), a[0], element_at(a, 1), st.x, array_sort(array_distinct(a)),"
+            " array_intersect(a, a), array_contains(a, 1), arrays_overlap(a, a), slice(a, 1, 2), array_max(a),"
+            " filter(a, x -> x > 0), array_join(transform(a, x -> string(x)), ','), split(s, '1'), lower(s),"
+            " upper(s), trim(s), replace(s, '1', '2'), instr(s, '1'), locate('1', s), substring_index(s, '1', 1),"
+            " translate(s, '1', '2'), contains(s, '1'), startswith(s, '1'), endswith(s, '1'), initcap(s),"
+            " find_in_set(s, '1,2'), regexp_replace(s, '1', '2'), levenshtein(s, '12'), ts + INTERVAL 1 DAY,"
+            " datediff(dt, DATE'2024-01-01'), date_trunc('hour', ts), unix_micros(ts), round(d, 2), sqrt(d),"
+            " least(d, f), id DIV 3, d % 2, from_json(to_json(st), 'x long, y string'),"
+            " explode(transform(a, x -> x * 2)) FROM training",
+            "SELECT sum(d) OVER (PARTITION BY k ORDER BY d ROWS 2 PRECEDING), max(d) OVER (PARTITION BY k)"
+            " FROM training",
+            "SELECT id % 1000, collect_list(s), collect_set(k) FROM training GROUP BY 1",
+            "SELECT s, approx_count_distinct(d) FROM training WHERE k = 1 GROUP BY s",
+            "SELECT k, count(*) FROM training GROUP BY k HAVING max(s) > '1' ORDER BY k",
+            "SELECT /*+ BROADCAST(a, b, c) */ * FROM training t JOIN dim a USING (s) JOIN dim b ON t.k = b.j"
+            " JOIN dim c ON t.k < c.j",
+            "SELECT /*+ SHUFFLE_HASH(a), BROADCAST(b) */ * FROM (SELECT /*+ REPARTITION(k) */ * FROM training) t"
+            " JOIN dim a USING (s) JOIN dim b ON t.k = b.j",
+        ]:
+            noop(spark.sql(sql))
+        t.orderBy("d").limit(5).collect()
+        t.head()
+        warmup_datasource(spark, num_partitions=2)
+        stream = spark.readStream.schema(t.schema).parquet(f"{tmp}/t").dropDuplicates(["s"])
+        query = stream.groupBy("k").count().writeStream.format("memory").queryName("training_stream")
+        query.outputMode("complete").trigger(availableNow=True).start().awaitTermination()
+        spark.catalog.dropTempView("training_stream")
+        t.select(F.to_json(F.struct("*"))).write.text(f"{tmp}/json", compression="gzip")
+    spark.stop()
+    jvm = SparkContext._gateway.proc
+    jvm.stdin.close()  # the gateway JVM exits on EOF
+    sys.exit(jvm.wait())
 
 
-def _claim(key: str) -> bool:
-    """Take the claim on dumping archive ``key``; False while another
-    live process holds it. The claim is a flock on a descriptor left
-    open, which the kernel releases when this process ends, however it
-    ends."""
-    fd = os.open(os.path.join(CACHE_DIR, f"cds-{key}.claim"), os.O_RDWR | os.O_CREAT, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    except BlockingIOError:
-        os.close(fd)
-        return False
-    return True
-
-
-def cds_flags(key: str) -> tuple[list[str], str | None]:
-    """JVM flags for archive ``key``, and the ``.part`` file this
-    process dumps to (None when it does not dump). Only a promoted
-    archive is ever passed to the JVM: a truncated one crashes it.
-    One process per key dumps, the one holding the key's claim; a
-    session that starts while another dumps runs without an archive.
-    ``.part`` files whose process is dead are deleted."""
-    for name in os.listdir(CACHE_DIR):
-        m = re.fullmatch(r"cds-\w+\.(\d+)\.part", name)
-        if m and not _alive(int(m[1])):
-            os.remove(os.path.join(CACHE_DIR, name))
+def cds_archive(home: str, driver_mem: str) -> str:
+    """The archive for ``home`` and ``driver_mem``, built under the
+    key's lock on a miss: a child interpreter runs ``_train`` with the
+    session conf and ``-XX:ArchiveClassesAtExit``, and its dump is
+    moved into place once it exits 0."""
+    key = cds_key(home, driver_mem)
     jsa = os.path.join(CACHE_DIR, f"cds-{key}.jsa")
-    if not os.path.isfile(jsa) and not _claim(key):
-        return [], None
-    if os.path.isfile(jsa):  # also when promoted just before the claim
-        return [f"-XX:SharedArchiveFile={jsa}", "-Xshare:on"], None
-    part = os.path.join(CACHE_DIR, f"cds-{key}.{os.getpid()}.part")
-    return [f"-XX:ArchiveClassesAtExit={part}"], part
-
-
-def _promote_at_exit(part: str) -> None:
-    """Stop a live context, close the gateway's stdin so its JVM exits
-    and dumps, wait for it, and promote the dump only if the JVM
-    exited 0 and no archive of its key exists."""
-    if SparkContext._active_spark_context is not None:
-        SparkContext._active_spark_context.stop()
-    proc = SparkContext._gateway.proc
-    proc.stdin.close()
-    if proc.wait() == 0:
-        with contextlib.suppress(FileExistsError):
-            os.link(part, re.sub(r"\.\d+\.part$", ".jsa", part))
-    if os.path.exists(part):
-        os.remove(part)
+    with open(os.path.join(CACHE_DIR, f"cds-{key}.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.isfile(jsa):
+            return jsa
+        conf = _session_conf(2, driver_mem)
+        conf["spark.driver.extraJavaOptions"] = " ".join([f"-XX:ArchiveClassesAtExit={jsa}.tmp", *_LOG_FLAGS])
+        # The child, and Spark's Python workers, import this package from
+        # its cwd; the child's stdout goes to stderr, as stdout is the CLI's.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        args = [sys.executable, "-c", _TRAIN_MAIN, json.dumps(conf)]
+        proc = subprocess.run(args, cwd=root, stdout=2, stderr=subprocess.PIPE, text=True)
+        if proc.returncode != 0:
+            raise RuntimeError(f"the CDS training run exited {proc.returncode}:\n{proc.stderr[-4000:]}")
+        os.replace(f"{jsa}.tmp", jsa)
+    return jsa
 
 
 def _launch_fast(conf: dict[str, str]) -> None:
     """Point the JVM this process is about to launch at the shadow
-    home and the CDS archive; ``conf`` is the session conf and gains
-    the JVM flags after the caller's own."""
+    home and the CDS archive; ``conf`` gains the JVM flags after the
+    caller's own."""
     home = shadow_spark_home()
     os.environ["SPARK_HOME"] = home
-    flags, part = cds_flags(cds_key(home, conf["spark.driver.memory"]))
-    opts = conf.get("spark.driver.extraJavaOptions", "")
-    conf["spark.driver.extraJavaOptions"] = " ".join([opts, *flags, *_LOG_FLAGS]).strip()
-    if part is not None:
-        atexit.register(_promote_at_exit, part)
+    jsa = cds_archive(home, conf["spark.driver.memory"])
+    flags = [conf.get("spark.driver.extraJavaOptions", ""), f"-XX:SharedArchiveFile={jsa}", "-Xshare:on"]
+    conf["spark.driver.extraJavaOptions"] = " ".join([*flags, *_LOG_FLAGS]).strip()
+
+
+def _session_conf(shuffle: int, driver_mem: str) -> dict[str, str]:
+    """The conf every session ships, the archive's training run too."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # events.parquet's TIMESTAMP(NANOS) reads as long (see load_table)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # Accept subset-key hash partitioning for co-partitioned
+        # binary ops (cogroup): the block scorers exchange on a bin id
+        # the grouping keys determine (functions/blocks.py), so no
+        # full-key exchange goes on top (tests/test_round11_ops.py).
+        "spark.sql.requireAllClusterKeysForCoPartition": "false",
+        # zstd over the lz4 default: -18.9% shuffle bytes and -13.1%
+        # wall at the 1000x kNN probe (SMOKE_r14_1000x_knn_codec_*.json).
+        "spark.io.compression.codec": "zstd",
+        "spark.driver.memory": driver_mem,
+        "spark.ui.enabled": "false",
+    }
 
 
 def get_spark(
@@ -336,45 +371,8 @@ def get_spark(
     # Local mode: shuffle partitions ~ cores. On a real cluster this is
     # left to AQE (coalescePartitions) with a high initial value.
     shuffle = shuffle_partitions if shuffle_partitions is not None else cpus
-    conf = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": str(shuffle),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # events.parquet stores ts as TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp type — read as long and convert in load_table.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        # Accept subset-key hash partitioning for co-partitioned
-        # binary ops (cogroup): the block scorers pre-place whole
-        # scoring blocks into cost-balanced bins and exchange on the
-        # BIN id (functions/blocks.py); bin_id is functionally
-        # determined by the grouping keys, so ClusteredDistribution
-        # semantics hold and EnsureRequirements must not stack a
-        # byte-coalescible full-key exchange on top (r11; plan pins
-        # in tests/test_round11_ops.py).
-        "spark.sql.requireAllClusterKeysForCoPartition": "false",
-        # Shuffle/broadcast/spill codec (guide §2.3/§9): zstd over the
-        # lz4 default. A/B'd at the 1000x kNN probe where shuffles are
-        # GBs (SMOKE_r14_1000x_knn_codec_{lz4,zstd}.json, adjacent
-        # same-window arms): scoring-exchange shuffle bytes -18.9%
-        # (6626 -> 5377 MB), wall -13.1%, every codec-touched stage
-        # faster (map medians -39%, scoring-stage max task -21%) with
-        # no codec-free stage improved — the win is the byte
-        # reduction, not window drift. At the 17 MB bench inputs the
-        # codec is in the noise either way. A caller that needs lz4
-        # (high-entropy payloads) passes it in extra_conf, which is
-        # applied last.
-        "spark.io.compression.codec": "zstd",
-        "spark.driver.memory": jvm_mem(mem),
-        "spark.ui.enabled": "false",
-    }
+    conf = _session_conf(shuffle, jvm_mem(mem))
     conf.update(extra_conf or {})
     if SparkContext._gateway is None:  # this call launches the JVM
         _launch_fast(conf)
-    builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return SparkSession.builder.appName(app_name).master(master).config(map=conf).getOrCreate()

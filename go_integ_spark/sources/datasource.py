@@ -7,10 +7,13 @@ This is the one Spark read path for connector streams (the Spark-
 idiomatic answer to the reference's in-process runner loop,
 proto.go:283-293):
 
-- **Projection pushdown for free**: Spark hands the reader the pruned
-  schema; we forward the pruned field list into the HTTP query
-  (``fields=``/``$select=``) exactly like the reference's P1
-  (shopify.go:52, storm.go:47).
+- **No projection pushdown yet**: the reader forwards the fields of
+  the schema it is handed into the HTTP query (``fields=``/``$select=``,
+  the reference's P1, shopify.go:52, storm.go:47), but on Spark 4.1.2
+  ``reader(schema)`` receives the stream's full schema whatever the
+  query selects, so every request asks for every field and Spark drops
+  the unselected columns after the read. ROADMAP item K makes the
+  projection reach the request.
 - **Distributed pagination**: for offset/limit APIs
   (OffsetLimitPaginator), N input partitions fetch interleaved
   offset strides (partition p takes offsets p, p+N, p+2N, ... pages)
@@ -144,10 +147,11 @@ def _warmup_paginator():
 
 
 def warmup_datasource(spark, num_partitions: int = 8) -> None:
-    """One empty N-partition Python DataSource read: spins up the
-    DataSource planning + worker path so its one-time cost is not
-    billed to whichever connector query runs first — the same
-    treatment bench.py gives the pandas-UDF worker pool. A cold read
+    """One empty N-partition Python DataSource read of one of two
+    columns: spins up the DataSource planning + worker path, column
+    pruning included, so its one-time cost is not billed to whichever
+    connector query runs first — the same treatment bench.py gives the
+    pandas-UDF worker pool; the CDS training run calls it too. A cold read
     starts three Python daemons in sequence (lookup_data_sources ->
     create_data_source -> plan_data_source_read); importing pyspark
     from the shadow home's bytecode directory (session.py) cuts a fresh
@@ -155,7 +159,7 @@ def warmup_datasource(spark, num_partitions: int = 8) -> None:
     from go_integ_spark.schema.stream import StreamSchema
 
     warm_stream = HttpStream(
-        schema=StreamSchema.from_ddl("warm", "id bigint"),
+        schema=StreamSchema.from_ddl("warm", "id bigint, name string"),
         path="/warm",
         record_path="records",
         paginator=_warmup_paginator,
@@ -168,7 +172,7 @@ def warmup_datasource(spark, num_partitions: int = 8) -> None:
         transport=_warmup_transport,
         num_partitions=num_partitions,
     )
-    df.write.format("noop").mode("overwrite").save()
+    df.select("id").write.format("noop").mode("overwrite").save()
 
 
 # Sessions HttpStreamDataSource is registered in. Registering again

@@ -17,6 +17,9 @@ ALLOWED = {
     # Spark's own variable, not a knob: read to find the install and
     # set to the shadow home the session launches from (session.py).
     "SPARK_HOME",
+    # Spark's own variable, not a knob: read to version the java that
+    # Spark's launcher runs, as bin/spark-class picks it (session.py).
+    "JAVA_HOME",
 }
 
 

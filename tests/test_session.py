@@ -1,6 +1,7 @@
 """get_spark: the session conf it ships and the conf a caller passes,
 driver memory parsing, and the fast start-up (a shadow SPARK_HOME whose
-pyspark.zip is a bytecode directory, and a JVM class-data archive)."""
+pyspark.zip is a bytecode directory, and a JVM class-data archive built
+once by a training run)."""
 
 from __future__ import annotations
 
@@ -104,15 +105,22 @@ class TestDriverMemory:
 # A session in a child interpreter with its cache in argv[1]: where
 # the worker's pyspark bytecode came from, the worker's zip importers
 # and the jars on its path, in a UDF worker and in a Python DataSource
-# reader task (the connector's path); the JVM's own arguments; and the
-# cache listing while the session is live. The caller passes JVM
-# options of its own, which must survive the merge.
+# reader task (the connector's path); the JVM's own arguments; and how
+# many archive training runs this process started. The caller passes
+# JVM options of its own, which must survive the merge.
 _CACHED_SESSION = """
-import json, os, sys
+import json, os, subprocess, sys
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader
 from go_integ_spark import session
 session.CACHE_DIR = sys.argv[1]
+trainings = []
+run = subprocess.run
+def counting_run(args, **kw):
+    if session._TRAIN_MAIN in args:
+        trainings.append(args)
+    return run(args, **kw)
+subprocess.run = counting_run
 s = session.get_spark(extra_conf={"spark.driver.extraJavaOptions": "-Dcaller.flag=kept"})
 
 def probe(_=None):
@@ -140,49 +148,60 @@ print(json.dumps({
     "worker": json.loads(s.range(1).select(F.udf(probe, "string")("id")).first()[0]),
     "reader": json.loads(s.read.format("probe").load().first()[0]),
     "jvm_args": list(bean.getInputArguments()),
-    "cache": sorted(os.listdir(session.CACHE_DIR)),
+    "trainings": len(trainings),
 }))
 """
 
 
 @pytest.fixture(scope="module")
 def cached_sessions(tmp_path_factory):
-    """Two sessions, one after the other, on one empty cache: the first
-    builds the shadow home and dumps the archive, the second uses both.
-    Each is (completed child, its JSON line, cache listing after exit)."""
+    """Two sessions started at once on one empty cache: both need the
+    shadow home and the archive. Each run is (its stdout, its JSON
+    line); the cache listing is taken after both have exited."""
     cache = str(tmp_path_factory.mktemp("go_integ_spark_cache"))
-    runs = []
-    for _ in range(2):
-        proc = subprocess.run(
+    procs = [
+        subprocess.Popen(
             [sys.executable, "-c", _CACHED_SESSION, cache],
             cwd=REPO,
-            capture_output=True,
+            stdout=subprocess.PIPE,
+            stderr=subprocess.PIPE,
             text=True,
-            timeout=600,
         )
-        assert proc.returncode == 0, proc.stderr[-4000:]
-        runs.append((proc, json.loads(proc.stdout.splitlines()[-1]), sorted(os.listdir(cache))))
-    return cache, runs
+        for _ in range(2)
+    ]
+    outs = [proc.communicate(timeout=600) for proc in procs]
+    for proc, (_, err) in zip(procs, outs):
+        assert proc.returncode == 0, err[-4000:]
+    runs = [(out, json.loads(out.splitlines()[-1])) for out, _ in outs]
+    return cache, runs, sorted(os.listdir(cache))
 
 
-def test_dump_keeps_stdout_clean_and_promotes_after_exit(cached_sessions):
-    """The dumping session prints no JVM log line on stdout, and its
-    archive appears only after the child has exited 0 (the JVM writes
-    the .part file as it exits)."""
-    _, [(proc, live, after), _] = cached_sessions
-    assert proc.stdout.splitlines() == [proc.stdout.strip()]
-    assert "[cds]" not in proc.stdout and "[warning]" not in proc.stdout
-    assert "[cds]" in proc.stderr  # the dump did log, on stderr
-    assert not [f for f in live["cache"] if f.endswith(".jsa")]
-    assert [f for f in after if f.endswith(".jsa")] and not [f for f in after if f.endswith(".part")]
-    assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in live["jvm_args"])
+def test_first_sessions_keep_stdout_clean(cached_sessions):
+    """A session on an empty cache prints only its own line on stdout:
+    no line of the archive's training run or of its JVM's dump."""
+    _, runs, _ = cached_sessions
+    for out, _ in runs:
+        assert out.splitlines() == [out.strip()]
+        assert "[cds]" not in out and "[warning]" not in out
+
+
+def test_concurrent_first_sessions_share_one_training_run(cached_sessions):
+    """Of two sessions started at once on an empty cache, one runs the
+    training and the other waits for its archive; no session's JVM
+    dumps, and the cache holds one finished archive."""
+    _, runs, after = cached_sessions
+    assert sum(live["trainings"] for _, live in runs) == 1
+    for _, live in runs:
+        assert not [a for a in live["jvm_args"] if a.startswith("-XX:ArchiveClassesAtExit")]
+    assert len([f for f in after if f.endswith(".jsa")]) == 1
+    assert not [f for f in after if f.endswith(".tmp")]
 
 
 def test_worker_imports_pyspark_from_bytecode(cached_sessions):
     """A Python worker's pyspark loads from the shadow home's bytecode,
     not from the installed source-only zip."""
-    cache, runs = cached_sessions
-    for _, live, _ in runs:
+    cache, runs, _ = cached_sessions
+    for _, live in runs:
         cached = live["worker"]["cached"]
         assert cached.startswith(cache + os.sep) and cached.endswith(".pyc")
         assert os.path.isfile(cached)
@@ -195,86 +214,30 @@ def test_worker_has_no_zip_importer(cached_sessions):
     its sitecustomize takes the spark-core jar Spark appends off the
     path of every Python process Spark starts: UDF workers and
     DataSource reader tasks alike."""
-    _, runs = cached_sessions
-    for _, live, _ in runs:
+    _, runs, _ = cached_sessions
+    for _, live in runs:
         for task in ("worker", "reader"):
             assert live[task]["zips"] == [], task
             assert live[task]["jars"] == [], task
 
 
 def test_jvm_maps_promoted_archive(cached_sessions):
-    """Once an archive is promoted, the JVM maps it with -Xshare:on,
-    so a mismatch would fail the launch rather than pass unseen."""
-    cache, [_, (_, live, after)] = cached_sessions
+    """Every session, the first on an empty cache included, maps the
+    one finished archive with -Xshare:on, so a mismatch would fail the
+    launch rather than pass unseen."""
+    cache, runs, after = cached_sessions
     [jsa] = [f for f in after if f.endswith(".jsa")]
-    assert "-Xshare:on" in live["jvm_args"]
-    assert f"-XX:SharedArchiveFile={os.path.join(cache, jsa)}" in live["jvm_args"]
+    for _, live in runs:
+        assert "-Xshare:on" in live["jvm_args"]
+        assert f"-XX:SharedArchiveFile={os.path.join(cache, jsa)}" in live["jvm_args"]
 
 
 def test_caller_java_options_kept(cached_sessions):
-    _, runs = cached_sessions
-    for _, live, _ in runs:
+    _, runs, _ = cached_sessions
+    for _, live in runs:
         args = live["jvm_args"]
         assert "-Dcaller.flag=kept" in args
         assert args.index("-Dcaller.flag=kept") < args.index("-Xlog:disable")
-
-
-def test_stale_part_is_never_passed_to_the_jvm(tmp_path, monkeypatch):
-    """A .part file left by a dead process is deleted, not mapped (a
-    truncated archive crashes the JVM); one of a live process stays."""
-    monkeypatch.setattr(session, "CACHE_DIR", str(tmp_path))
-    dead = subprocess.Popen(["true"])
-    dead.wait()
-    stale = tmp_path / f"cds-k.{dead.pid}.part"
-    live = tmp_path / f"cds-k.{os.getppid()}.part"
-    stale.write_bytes(b"truncated")
-    live.write_bytes(b"dumping")
-    flags, part = session.cds_flags("k")
-    assert flags == [f"-XX:ArchiveClassesAtExit={part}"]
-    assert part == str(tmp_path / f"cds-k.{os.getpid()}.part")
-    assert not stale.exists() and live.exists()
-    (tmp_path / "cds-k.jsa").write_bytes(b"promoted")
-    flags, part = session.cds_flags("k")
-    assert part is None
-    assert flags == [f"-XX:SharedArchiveFile={tmp_path / 'cds-k.jsa'}", "-Xshare:on"]
-
-
-def test_one_session_dumps_each_archive(tmp_path, monkeypatch):
-    """While a live process holds a key's dump claim, another session
-    gets no archive flags and no .part; a claim whose process has died
-    is taken over."""
-    monkeypatch.setattr(session, "CACHE_DIR", str(tmp_path))
-    claim = tmp_path / "cds-k.claim"
-    holder = subprocess.Popen(
-        [sys.executable, "-c", "import fcntl, sys; f = open(sys.argv[1], 'w'); "
-         "fcntl.flock(f, fcntl.LOCK_EX); print(flush=True); sys.stdin.read()", str(claim)],
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-    )
-    try:
-        holder.stdout.readline()
-        assert session.cds_flags("k") == ([], None)
-        assert not list(tmp_path.glob("*.part"))
-    finally:
-        holder.communicate(timeout=60)
-    assert claim.exists()
-    flags, part = session.cds_flags("k")
-    assert flags == [f"-XX:ArchiveClassesAtExit={part}"]
-    assert part == str(tmp_path / f"cds-k.{os.getpid()}.part")
-
-
-def test_promotion_never_replaces_an_archive(tmp_path, monkeypatch):
-    """A dump that finishes after an archive of its key was promoted is
-    dropped; the promoted archive stays as it was."""
-    part = tmp_path / f"cds-k.{os.getpid()}.part"
-    jsa = tmp_path / "cds-k.jsa"
-    part.write_bytes(b"late dump")
-    jsa.write_bytes(b"promoted")
-    proc = subprocess.Popen(["cat"], stdin=subprocess.PIPE)
-    monkeypatch.setattr(session.SparkContext, "_active_spark_context", None)
-    monkeypatch.setattr(session.SparkContext, "_gateway", type("G", (), {"proc": proc}))
-    session._promote_at_exit(str(part))
-    assert jsa.read_bytes() == b"promoted" and not part.exists()
 
 
 def _fake_home(root, zip_text: str):
@@ -299,6 +262,33 @@ def test_home_key_follows_hook_source(tmp_path, monkeypatch):
     key = session._home_key(home)
     monkeypatch.setattr(session, "_HOOK", session._HOOK + "# edited\n")
     assert session._home_key(home) != key
+
+
+def _training_stand_in(conf):
+    pass
+
+
+def test_cds_key_follows_training_source(tmp_path, monkeypatch):
+    home = _fake_home(tmp_path, "")
+    key = session.cds_key(home, "8g")
+    assert session.cds_key(home, "8g") == key
+    monkeypatch.setattr(session, "_train", _training_stand_in)
+    assert session.cds_key(home, "8g") != key
+
+
+def test_cds_key_versions_the_launchers_java(tmp_path, monkeypatch):
+    """Spark's launcher runs $JAVA_HOME/bin/java when JAVA_HOME is set,
+    so that JDK's build is the one the archive is keyed on, whatever
+    java PATH finds."""
+    home = _fake_home(tmp_path, "")
+    java = tmp_path / "jdk" / "bin" / "java"
+    java.parent.mkdir(parents=True)
+    java.write_text('#!/bin/sh\necho \'openjdk version "99.0.1"\' >&2\n')
+    java.chmod(0o755)
+    monkeypatch.delenv("JAVA_HOME", raising=False)
+    key = session.cds_key(home, "8g")
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "jdk"))
+    assert session.cds_key(home, "8g") != key
 
 
 def test_bytecode_dir_runs_pyc_and_keeps_source_lines(tmp_path, capfd):
