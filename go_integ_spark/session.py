@@ -4,7 +4,9 @@ shares, and a fast-starting driver JVM and Python workers.
 Config: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), adaptive broadcast thresholds, Arrow for any pandas
 exchange, and a UTC session timezone so results are comparable with the
-DuckDB oracle (duckdb timestamps are UTC-naive).
+DuckDB oracle (duckdb timestamps are UTC-naive). The generated-code
+cache holds 4096 classes instead of 100, more than one session's working
+set, so a query run again reuses its compiled classes.
 
 Start-up: ``get_spark`` launches the JVM from a shadow ``SPARK_HOME``
 under ``~/.cache/go_integ_spark/``, built once per Spark install. Every
@@ -219,13 +221,19 @@ def shadow_spark_home() -> str:
 def cds_key(home: str, driver_mem: str) -> str:
     """Archive key: the build of the java Spark's launcher runs
     (``$JAVA_HOME/bin/java`` if set, as in ``bin/spark-class``), the
-    jars' paths, sizes and mtimes, the driver memory (it decides
-    compressed oops) and the training routine's source."""
+    jars' paths, sizes and mtimes, and all the training run executes:
+    its session conf (the driver memory in it decides compressed oops)
+    and the source of ``_train`` and of the ``warmup_datasource`` it
+    calls."""
+    from go_integ_spark.sources.datasource import warmup_datasource
+
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else "java"
     version = subprocess.run([java, "-version"], capture_output=True, text=True, check=True).stderr
-    h = hashlib.sha256(f"{home}\n{version}\n{driver_mem}\n".encode())
-    h.update(inspect.getsource(_train).encode())
+    h = hashlib.sha256(f"{home}\n{version}\n".encode())
+    h.update(json.dumps(_session_conf(2, driver_mem), sort_keys=True).encode())
+    for fn in (_train, warmup_datasource):
+        h.update(inspect.getsource(fn).encode())
     for e in sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name):
         st = e.stat()
         h.update(f"{e.name} {st.st_size} {st.st_mtime_ns}\n".encode())
@@ -354,6 +362,14 @@ def _session_conf(shuffle: int, driver_mem: str) -> dict[str, str]:
         # zstd over the lz4 default: -18.9% shuffle bytes and -13.1%
         # wall at the 1000x kNN probe (SMOKE_r14_1000x_knn_codec_*.json).
         "spark.io.compression.codec": "zstd",
+        # Keep every generated class a session compiles. One 205-op
+        # oracle sweep at sf0.001 compiles 2,644 distinct classes, and
+        # curation's five ops 113, so at the default of 100 the LRU
+        # cycles: a repeat sweep recompiled 3,627 classes (93 here),
+        # and every warm curation pass 86 (0 here). 4096 leaves 1.5x
+        # headroom over the sweep; curation pass_cpu_s 9.20 -> 8.09 s,
+        # warm-pass JIT CPU 7.02 -> 4.72 s (20 pairs, 4 cores).
+        "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.driver.memory": driver_mem,
         "spark.ui.enabled": "false",
     }

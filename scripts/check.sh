@@ -8,7 +8,7 @@
 # and the two driver-facing surfaces (the bench's one JSON line;
 # __spark_entry__ contract is exercised by tests/test_schema.py).
 #
-#   scripts/check.sh            # full check (tier-1 alone ~920 s at 4 cores)
+#   scripts/check.sh            # full check (tier-1 alone ~840 s at 4 cores)
 #   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
 #
 # Deeper sweeps (run before a round close, not per push):

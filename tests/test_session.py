@@ -17,6 +17,7 @@ import zipfile
 import pytest
 
 from go_integ_spark import session
+from go_integ_spark.sources import datasource
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -73,6 +74,22 @@ def test_live_session_uses_zstd_codec(spark):
     """The conftest session is built by get_spark with no override,
     so the shipped default must be live in it."""
     assert spark.conf.get("spark.io.compression.codec") == "zstd"
+
+
+def test_warm_queries_compile_nothing(spark):
+    """Spark's generated-code cache holds a session's working set: 60
+    distinct one-projection queries compile more classes than Spark's
+    default cap of 100, and running them again compiles none."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def cycle() -> int:
+        before = compiles.getCount()
+        for k in range(60):
+            spark.range(4).selectExpr(f"id * {k + 2} + {k} AS x").collect()
+        return compiles.getCount() - before
+
+    assert cycle() > 100
+    assert cycle() == 0
 
 
 class TestDriverMemory:
@@ -273,6 +290,20 @@ def test_cds_key_follows_training_source(tmp_path, monkeypatch):
     key = session.cds_key(home, "8g")
     assert session.cds_key(home, "8g") == key
     monkeypatch.setattr(session, "_train", _training_stand_in)
+    assert session.cds_key(home, "8g") != key
+
+
+def test_cds_key_follows_session_conf_and_warmup(tmp_path, monkeypatch):
+    """The training run starts its session with ``_session_conf`` and
+    runs ``warmup_datasource``: an edit to either builds a new archive."""
+    home = _fake_home(tmp_path, "")
+    key = session.cds_key(home, "8g")
+    conf = session._session_conf
+    monkeypatch.setattr(session, "_session_conf", lambda *a: {**conf(*a), "spark.edited": "1"})
+    assert session.cds_key(home, "8g") != key
+    monkeypatch.undo()
+    assert session.cds_key(home, "8g") == key
+    monkeypatch.setattr(datasource, "warmup_datasource", _training_stand_in)
     assert session.cds_key(home, "8g") != key
 
 
