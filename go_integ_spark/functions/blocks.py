@@ -187,7 +187,7 @@ def plan_grid_bins(
         # healthy vs 799 s degraded-window greedy) because splitting
         # the larger side multiplies the explode over its expensive
         # parse lineage on the critical-path map stage. Artifacts:
-        # SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json. Keep
+        # evidence/SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json. Keep
         # the corner greedy: it never replicates the bigger side
         # while the cap allows.
         while (n_m / nc) * (n_p / np_) > BLOCK_PAIR_CAP:

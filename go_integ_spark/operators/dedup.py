@@ -1140,7 +1140,7 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     # once. InMemoryTableScan preserves the child's outputPartitioning,
     # so each round then shuffles only the small labels side. The
     # `labels` distinct on src reuses the same exchange (1000x A/B:
-    # SMOKE_r12_1000x_cc_ab*.json).
+    # evidence/SMOKE_r12_1000x_cc_ab*.json).
     spark = edges.sparkSession
     both = (
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1158,7 +1158,8 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         .withColumn("label", F.col("node"))
         .persist()
     )
-    # Rejected (r13): delta propagation, SMOKE_r13_1000x_cc_delta.json.
+    # Rejected (r13): delta propagation,
+    # evidence/SMOKE_r13_1000x_cc_delta.json.
     # Rejected (r13): SHUFFLE_HASH hop joins, 100x 103.6/160.8 s vs 58.9/62.3 s.
     for _ in range(max_iters):
         neighbor_min = (

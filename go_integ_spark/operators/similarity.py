@@ -1130,7 +1130,7 @@ def _with_pq_best(v: DataFrame, book: list[list[float]] | None = None) -> DataFr
     loses: Spark higher-order-function lambdas are INTERPRETED (they
     sit outside whole-stage codegen), and the measured cost of the
     expression-based argmin was ~3 ms/row at 64 dims x K=16
-    (scripts/smoke_scale.py: 58 s for 20k vectors — ~800 CPU-hours
+    (58 s for a 20k-vector corpus, 10x sf0.1 — ~800 CPU-hours
     per billion vectors). The vectorized (N, M, K, D) numpy kernel
     computes the same batch in milliseconds.
 
@@ -3200,7 +3200,8 @@ def similarity_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Matryoshka (MRL) truncation depths evaluated against the full-dim
 # truth. Cross-engine rank-margin pins for these slices live in
-# tests/test_round7_ops.py (measured min adjacent top-k gap 1.4e-5
+# tests/test_round8_ops.py, the same pin class as
+# tests/test_float_margins.py (measured min adjacent top-k gap 1.4e-5
 # at 32 dims / 8.0e-5 at 16, >>1 ulp).
 MRL_EVAL_DIMS = (32, 16)
 

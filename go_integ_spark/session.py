@@ -360,7 +360,8 @@ def _session_conf(shuffle: int, driver_mem: str) -> dict[str, str]:
         # full-key exchange goes on top (tests/test_round11_ops.py).
         "spark.sql.requireAllClusterKeysForCoPartition": "false",
         # zstd over the lz4 default: -18.9% shuffle bytes and -13.1%
-        # wall at the 1000x kNN probe (SMOKE_r14_1000x_knn_codec_*.json).
+        # wall at the 1000x kNN probe
+        # (evidence/SMOKE_r14_1000x_knn_codec_*.json).
         "spark.io.compression.codec": "zstd",
         # Keep every generated class a session compiles. One 205-op
         # oracle sweep at sf0.001 compiles 2,644 distinct classes, and

@@ -108,7 +108,7 @@ class TestGridCellSizes:
 class TestCCEdgeRepartInvariance:
     def test_components_identical_both_arms(self, spark):
         """The `src`-repartitioned edge list changes only physical
-        partitioning (1000x A/B: SMOKE_r12_1000x_cc_ab*.json); the
+        partitioning (1000x A/B: evidence/SMOKE_r12_1000x_cc_ab*.json); the
         labels stay pinned to the golden components. The 30..36 chain
         needs several rounds and pointer jumps."""
         from go_integ_spark.operators.dedup import connected_components

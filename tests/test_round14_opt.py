@@ -70,7 +70,7 @@ class TestGreedySplitGeometryKept:
     the 1000x multilang probe (pair set byte-identical) and ran
     WORSE on wall because splitting the larger side multiplies its
     expensive parse lineage on the critical-path map stage
-    (SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json). This pins
+    (evidence/SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json). This pins
     the kept greedy's defining property so a future round does not
     silently re-land the rejected form: the bigger side is never
     replicated while growing the smaller side's split can still

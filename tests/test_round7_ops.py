@@ -10,7 +10,6 @@ parquet.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from go_integ_spark.registry import load_all
 
@@ -143,119 +142,3 @@ def test_probe_recall_curve_monotone_and_consistent(spark):
             f"curve point nprobe={IVF_NPROBE} disagrees with "
             f"similarity_recall_eval for query {q}"
         )
-
-
-# ---------------------------------------------------------------------------
-# Cross-engine float-margin pins (VERDICT r7 item 2 / ADVICE r7).
-#
-# similarity_hard_negatives gates on a FLOAT cosine (Spark fold vs
-# DuckDB builtin — the class that flipped dedup_semdedup's r6 driver
-# row), and similarity_ivf_probe_recall's cell assignment and rank
-# orderings are float-keyed. Safe only while every gated/ordered
-# value sits FAR from its decision boundary: the two engines' cosines
-# agree to ~1 ulp (<1e-15 relative), so a pinned margin of 1e-7 is
-# ~1e8x the worst drift. r7 documented the measured margins in prose;
-# these tests make a data refresh that shrinks them a loud failure
-# instead of a silent driver hash-red. Measured (2026-08, this
-# corpus): gate 5.0e-2 at sf0.01 / 5.8e-2 at sf0.001 / 1.6e-3 on the
-# 10x smoke corpus; adjacency 7.8e-6; IVF assignment 8.1e-6; probe
-# boundary 1.8e-4.
-# ---------------------------------------------------------------------------
-
-HARD_NEG_GATE_MARGIN = 1e-4
-RANK_ADJACENCY_MARGIN = 1e-7
-IVF_PROBE_BOUNDARY_MARGIN = 1e-5
-
-
-def _unit_vectors(sf_dir):
-    """(ids, unit-norm float64 vectors), vec_id-sorted, straight from
-    parquet — engine-free ground truth for margin measurement (numpy
-    @, DuckDB's builtin and Spark's fold all agree to ~1 ulp, dwarfed
-    by the pinned margins)."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    ids = np.asarray(t["vec_id"].to_pylist(), dtype=np.int64)
-    e = np.stack([np.asarray(x, dtype=np.float64) for x in t["embedding"].to_pylist()])
-    order = np.argsort(ids)
-    ids, e = ids[order], e[order]
-    return ids, e / np.sqrt((e * e).sum(axis=1))[:, None]
-
-
-def _gate_and_adjacency_margins(sf_dir):
-    from go_integ_spark.operators.similarity import (
-        HARD_NEG_DUP_CEILING,
-        N_QUERIES,
-        TOP_K,
-    )
-
-    ids, u = _unit_vectors(sf_dir)
-    sims = u[:N_QUERIES] @ u.T
-    mask = np.ones_like(sims, dtype=bool)
-    mask[np.arange(N_QUERIES), np.arange(N_QUERIES)] = False
-    gate = np.abs(sims[mask] - HARD_NEG_DUP_CEILING).min()
-    adjacency = np.inf
-    for q in range(N_QUERIES):
-        s = sims[q][mask[q]]
-        below = np.sort(s[s < HARD_NEG_DUP_CEILING])[::-1][: TOP_K + 1]
-        if len(below) > 1:
-            adjacency = min(adjacency, np.abs(np.diff(below)).min())
-        # the unrestricted top-k boundary feeds the recall evals' truth
-        top = np.sort(s)[::-1][: TOP_K + 1]
-        if len(top) > 1:
-            adjacency = min(adjacency, np.abs(np.diff(top)).min())
-    return gate, adjacency
-
-
-@pytest.mark.parametrize(
-    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-)
-def test_hard_negatives_float_gate_margin_pinned(sf_dir):
-    gate, adjacency = _gate_and_adjacency_margins(sf_dir)
-    assert gate > HARD_NEG_GATE_MARGIN, (
-        f"{sf_dir}: a query-corpus cosine sits {gate:.2e} from the "
-        f"HARD_NEG_DUP_CEILING gate — inside the pinned cross-engine "
-        f"margin; re-derive the ceiling or int-gate it like "
-        f"dedup_semdedup"
-    )
-    assert adjacency > RANK_ADJACENCY_MARGIN, (
-        f"{sf_dir}: two rank-adjacent top-k candidates sit "
-        f"{adjacency:.2e} apart — engines may order them differently"
-    )
-
-
-@pytest.mark.parametrize(
-    "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-)
-def test_ivf_float_orderings_margin_pinned(sf_dir):
-    """Cell assignment (argmax centroid) and the probe-rank cut
-    points of similarity_ivf_probe_recall are float-ordered on both
-    engines; pin the tie gaps clear of cross-engine drift."""
-    import hashlib
-
-    from go_integ_spark.operators.similarity import (
-        IVF_K,
-        IVF_PROBE_CURVE,
-        N_QUERIES,
-    )
-
-    ids, u = _unit_vectors(sf_dir)
-    cent_rows = sorted(
-        range(len(ids)),
-        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
-    )[:IVF_K]
-    cs = np.sort(u @ u[cent_rows].T, axis=1)[:, ::-1]
-    assign_gap = (cs[:, 0] - cs[:, 1]).min()
-    assert assign_gap > RANK_ADJACENCY_MARGIN, (
-        f"{sf_dir}: a vector's best/second-best centroid cosines sit "
-        f"{assign_gap:.2e} apart — cell assignment may flip engines"
-    )
-    probe_gap = min(
-        (cs[:N_QUERIES, p - 1] - cs[:N_QUERIES, p]).min()
-        for p in IVF_PROBE_CURVE
-        if p < IVF_K
-    )
-    assert probe_gap > IVF_PROBE_BOUNDARY_MARGIN, (
-        f"{sf_dir}: a query's probe-rank boundary gap is "
-        f"{probe_gap:.2e} — the nprobe cut may differ across engines"
-    )

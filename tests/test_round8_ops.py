@@ -134,7 +134,7 @@ def test_matryoshka_recall_matches_numpy_reference(spark):
 
 def test_matryoshka_rank_margins_pinned():
     """Truncated-dim orderings are float-keyed cross-engine too —
-    same pin class as tests/test_round7_ops.py. Measured min adjacent
+    same pin class as tests/test_float_margins.py. Measured min adjacent
     top-k gap: 1.4e-5 (32 dims), 8.0e-5 (16 dims) at sf0.001."""
     import numpy as np
     import pyarrow.parquet as pq

@@ -56,8 +56,8 @@ def fresh_session_conf():
 def test_session_io_codec_default_and_override(spark, fresh_session_conf):
     """r14 codec ship (guide §2.3/§9): zstd is the session default —
     A/B'd at the 1000x kNN probe, scoring-exchange shuffle -18.9%
-    bytes / -13.1% wall (SMOKE_r14_1000x_knn_codec_*.json) — and a
-    caller's extra_conf codec wins over it."""
+    bytes / -13.1% wall (evidence/SMOKE_r14_1000x_knn_codec_*.json) —
+    and a caller's extra_conf codec wins over it."""
     assert spark.conf.get("spark.io.compression.codec") == "zstd"
     assert fresh_session_conf["codec"] == "lz4"
 
