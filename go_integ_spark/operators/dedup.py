@@ -332,7 +332,7 @@ def lsh_band_buckets(
     # InferFiltersFromGenerate adds a `size(buckets) > 0 AND
     # isnotnull(buckets)` guard that the optimizer then pushes BELOW
     # this projection by DUPLICATING the kernel — the r13 before-plan
-    # (plans/r13/dedup_minhash_lsh_before.txt) carries two
+    # (evidence/plans/r13/dedup_minhash_lsh_before.txt) carries two
     # ArrowEvalPython nodes for _buckets, so every doc paid the
     # 64-permutation minhash twice. Marking the UDF non-deterministic
     # forbids the duplication (one eval, filter applied on its

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 import time
 import urllib.error
 import urllib.parse
@@ -138,14 +139,17 @@ class Retryer:
     @staticmethod
     def _retry_after_seconds(value: str | None) -> float | None:
         """RFC 7231 Retry-After: delta-seconds OR an HTTP-date. An
-        unparseable value falls back to exponential delay instead of
-        crashing a retryable 429/503 mid-backoff."""
+        unparseable value, or a delta that is not finite and >= 0
+        (``inf``, ``nan``, ``-5``), falls back to exponential delay
+        instead of crashing a retryable 429/503 mid-backoff."""
         if not value:
             return None
         try:
-            return max(0.0, float(value))
+            delta = float(value)
         except ValueError:
             pass
+        else:
+            return delta if math.isfinite(delta) and delta >= 0 else None
         try:
             from email.utils import parsedate_to_datetime
 

@@ -8,8 +8,13 @@
 # and the two driver-facing surfaces (the bench's one JSON line;
 # __spark_entry__ contract is exercised by tests/test_schema.py).
 #
-#   scripts/check.sh            # full check (tier-1 alone ~840 s at 4 cores)
-#   GO_INTEG_SF=/root/testdata/sf0.01 scripts/check.sh   # slow sweep
+#   scripts/check.sh            # full check (tier-1 alone ~810 s at 4 cores)
+#   GO_INTEG_SF=.../sf0.01 scripts/check.sh   # tier-1's oracle sweep at sf0.01
+#
+# Here GO_INTEG_SF moves only tier-1's oracle sweep
+# (tests/test_queries_oracle.py; scripts/audit_oracle_types.py reads it
+# too). The plan-fingerprint and bench steps read SPARK_GRAFT_SF_DIR
+# instead (default sf0.001).
 #
 # Deeper sweeps (run before a round close, not per push):
 #   python scripts/strict_sweep.py                   # bit-exact at sf0.01

@@ -170,8 +170,9 @@ def test_retry_429_backoff(server):
 
 
 def test_retry_after_http_date_and_garbage():
-    """RFC 7231 allows an HTTP-date Retry-After; garbage values fall
-    back to the exponential delay instead of crashing mid-backoff."""
+    """RFC 7231 allows an HTTP-date Retry-After; garbage values and
+    deltas that are not finite and >= 0 fall back to the exponential
+    delay instead of crashing mid-backoff (sleep(inf) overflows)."""
     import datetime as dt
     from email.utils import format_datetime
 
@@ -182,6 +183,9 @@ def test_retry_after_http_date_and_garbage():
         [
             {"retry-after": format_datetime(future)},
             {"retry-after": "not-a-date"},
+            {"retry-after": "inf"},
+            {"retry-after": "nan"},
+            {"retry-after": "-5"},
             {},
         ]
     )
@@ -189,17 +193,20 @@ def test_retry_after_http_date_and_garbage():
 
     def transport(req):
         attempts.append(req)
-        if len(attempts) < 4:
+        if len(attempts) < 7:
             return HttpResponse(status=429, headers=next(headers), body=b"{}")
         return HttpResponse(status=200, headers={}, body=b"{}")
 
     sleeps = []
-    r = Retryer(max_attempts=5, base_delay=0.5, sleep=sleeps.append)
+    r = Retryer(max_attempts=7, base_delay=0.5, sleep=sleeps.append)
     resp = r.execute(transport, HttpRequest(url="http://x/y"))
     assert resp.status == 200
     assert 30 < sleeps[0] <= 40  # HTTP-date honored (wall-clock delta)
     assert sleeps[1] == 1.0  # garbage -> exponential 0.5 * 2^1
-    assert sleeps[2] == 2.0  # absent -> exponential 0.5 * 2^2
+    assert sleeps[2] == 2.0  # inf -> exponential 0.5 * 2^2
+    assert sleeps[3] == 4.0  # nan -> exponential 0.5 * 2^3
+    assert sleeps[4] == 8.0  # negative -> exponential 0.5 * 2^4
+    assert sleeps[5] == 16.0  # absent -> exponential 0.5 * 2^5
 
 
 def test_retry_gives_up():

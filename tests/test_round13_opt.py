@@ -1,4 +1,4 @@
-"""Round-13 optimization pins (OPTIMIZATION_r13.md §4): the LSH
+"""Round-13 optimization pins (evidence/OPTIMIZATION_r13.md §4): the LSH
 kernel single-evaluation, the funnel near-dup groupBy ≡ self-join
 equivalence, and the q2 window-min ≡ join-back-min equivalence."""
 

