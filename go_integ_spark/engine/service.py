@@ -114,7 +114,14 @@ class IntegService:
                     self.send_error(404)
                     return
                 _, source = matched
-                length = int(self.headers.get("Content-Length") or 0)
+                try:
+                    length = int(self.headers.get("Content-Length") or 0)
+                except ValueError:
+                    length = -1
+                if length < 0:
+                    # rfile.read(-1) would block until the client closes
+                    self.send_error(400, "Content-Length must be an integer >= 0")
+                    return
                 body = self.rfile.read(length).decode("utf-8")
                 accept = self.headers.get("Accept-Encoding", "")
                 # reference parity: Accept-Zstd wins (proto.go:196-204);

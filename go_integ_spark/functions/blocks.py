@@ -16,11 +16,12 @@ nowhere else: ``repartition(n, *keys)`` plants a REPARTITION_BY_NUM
 shuffle that (a) AQE never coalesces, and (b) already satisfies the
 downstream ``groupBy(*keys)``/``cogroup`` ClusteredDistribution, so
 EnsureRequirements adds no second exchange (plan-pinned in
-tests/test_round11_ops.py). Sizing ``n`` to ~the block count makes
+tests/test_blocks.py). Sizing ``n`` to ~the block count makes
 expected blocks-per-task O(1) with balls-in-bins variance, so task
 skew is bounded by the largest SINGLE block — and the largest block
 is what each operator's cap (KNN_CELL_CAP, SEMDEDUP_MAX_CLUSTER,
-LSH_MAX_BUCKET, ...) already bounds.
+LSH_MAX_BUCKET, ...) already bounds. ``grid_block_cogroup`` packs
+blocks into bins and ``repartitionById`` puts bin i in partition i.
 
 Results are bit-identical by construction: block membership is
 defined by the KEYS, not by which task a block lands in, and every
@@ -69,10 +70,9 @@ def pack_bins(costs: list[float], capacity: float) -> tuple[list[int], int]:
     them bimodal (near-cap hot blocks vs tiny cold cells), and then
     max/median task time is the block-size ratio. Packing cold
     blocks together around the hot ones makes the MEDIAN task a full
-    bin while the max stays one bin (plus a hash collision or two),
-    so stage balance is bounded by small constants at any scale.
-    O(n log n); item costs above capacity are clamped (such an item
-    fills its own bin)."""
+    bin while the max stays one bin, so stage balance is bounded by
+    small constants at any scale. O(n log n); item costs above
+    capacity are clamped (such an item fills its own bin)."""
     import heapq
 
     order = sorted(range(len(costs)), key=lambda i: -costs[i])
@@ -215,69 +215,6 @@ def plan_grid_bins(
     return split_rows, bin_rows, n_bins
 
 
-def _murmur3_int(x: int, seed: int = 42) -> int:
-    """Spark's Murmur3_x86_32 hash of one IntegerType value (the
-    expression behind ``F.hash`` / HashPartitioning, seed 42) —
-    public algorithm, reimplemented so the driver can PREDICT which
-    shuffle partition an int key lands in. Returns the SIGNED 32-bit
-    result Java produces."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    k = (x & 0xFFFFFFFF) * c1 & 0xFFFFFFFF
-    k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-    k = k * c2 & 0xFFFFFFFF
-    h = (seed & 0xFFFFFFFF) ^ k
-    h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-    h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h ^= 4  # one 4-byte block
-    h ^= h >> 16
-    h = h * 0x85EBCA6B & 0xFFFFFFFF
-    h ^= h >> 13
-    h = h * 0xC2B2AE35 & 0xFFFFFFFF
-    h ^= h >> 16
-    return h - (1 << 32) if h >= 1 << 31 else h
-
-
-def alias_bin_ids(n_bins: int, n_parts: int) -> list[int] | None:
-    """Replacement ids for bins 0..n_bins-1 such that murmur3-pmod
-    places every bin in a DISTINCT shuffle partition. pack_bins
-    builds ~equal-cost bins, but ``repartition(n, bin_id)`` HASHES
-    the id — with ~n bins in ~n partitions, birthday collisions
-    stack several quadratic-cost bins into one task while other
-    partitions sit empty (the r12 1000x kNN probes read a 201 s max
-    task over a 17.6 s median from exactly this). Greedy driver-side
-    search, O(n_parts log n_parts) expected tries; returns None when
-    n_bins > n_parts (only past MAX_BLOCK_PARTITIONS — stacking is
-    then unavoidable and uniform).
-
-    The search is BOUNDED (ADVICE r12): n_bins ~ n_parts is a
-    coupon-collector search (~n_parts * H(n_parts) expected tries),
-    and an unbounded loop would turn a pathological hash/modulus
-    interaction into a driver hang. The cap is ~32x the
-    coupon-collector expectation, so hitting it means the hash is
-    behaving non-uniformly for this modulus — give up and return
-    None, degrading to the old collision behavior (stacked bins),
-    never a hang."""
-    if n_bins > n_parts:
-        return None
-    import math
-
-    budget = int(32 * n_parts * (math.log(n_parts) + 1)) + 64
-    aliases: list[int] = []
-    used: set[int] = set()
-    cand = 0
-    while len(aliases) < n_bins:
-        if cand >= budget:
-            return None
-        p = _murmur3_int(cand) % n_parts
-        if p < 0:
-            p += n_parts
-        if p not in used:
-            used.add(p)
-            aliases.append(cand)
-        cand += 1
-    return aliases
-
-
 def grid_block_cogroup(
     probes,
     members,
@@ -300,11 +237,11 @@ def grid_block_cogroup(
     fused map-side-combined count aggregate over the union of both
     sides' key columns (cells-sized driver collect; r11 ran two
     aggregates + a join here, ~13% of the 1000x kNN wall);
-    ``plan_grid_bins`` packs blocks into ~equal-cost bins and the
-    exchange hashes the BIN id with an explicit partition count
-    (REPARTITION_BY_NUM — requires
-    spark.sql.requireAllClusterKeysForCoPartition=false, set in
-    get_spark).
+    ``plan_grid_bins`` packs blocks into ~equal-cost bins and each
+    side's exchange is ``repartitionById`` on the bin id with an
+    explicit partition count: bin ``i`` goes straight to partition
+    ``i mod n_parts``, so while ``n_bins <= n_parts`` every bin has a
+    task of its own (REPARTITION_BY_NUM, which AQE never coalesces).
 
     ``slot``: single-slot cache prefix for the two input frames.
     Without it, the count aggregate executes each un-persisted input
@@ -387,15 +324,6 @@ def grid_block_cogroup(
             )
         )
     n_parts = block_partition_count(spark, n_bins)
-    # Perfect bin->partition placement: remap bin ids so murmur3-pmod
-    # (what repartition(n, col) actually applies) sends every bin to
-    # its own partition — without this, birthday collisions stack
-    # several ~equal-cost bins into one task (201 s max over a 17.6 s
-    # median at the 1000x kNN probe). Ids are opaque to scoring, so
-    # results are unchanged.
-    aliases = alias_bin_ids(n_bins, n_parts)
-    if aliases is not None:
-        bin_rows = [b[:-1] + (aliases[b[-1]],) for b in bin_rows]
     # explicit schemas: the split/bin columns must be INT on both
     # sides — positionally-paired cogroup keys of different widths
     # only work by UnsafeRow storage accident (r11 review)
@@ -430,7 +358,7 @@ def grid_block_cogroup(
         )
         .drop("n_cs", "n_ps")
         .join(F.broadcast(p_bins), list(keys) + ["csplit", "psplit"])
-        .repartition(n_parts, "bin_id")
+        .repartitionById(n_parts, "bin_id")
     )
     m = (
         members_renamed.join(F.broadcast(m_splits), m_keys)
@@ -444,7 +372,7 @@ def grid_block_cogroup(
         )
         .drop("mn_cs", "mn_ps")
         .join(F.broadcast(m_bins), m_keys + ["m_csplit", "m_psplit"])
-        .repartition(n_parts, "m_bin")
+        .repartitionById(n_parts, "m_bin")
     )
     return (
         p.groupBy("bin_id", *keys, "csplit", "psplit")

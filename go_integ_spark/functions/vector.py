@@ -140,7 +140,7 @@ def fold_cosine_block(a_vecs, a_norms, b_vecs, b_norms):
     # writing the first product equals the old zeros-init) run over
     # ~L2-sized row tiles keeps the accumulator and temporary in
     # cache: measured 6.9x on a 4096x4096x64 block, value-identical
-    # output (pinned in tests/test_round11_ops.py). One signed-zero
+    # output (pinned in tests/test_similarity.py). One signed-zero
     # exception to full bit-identity (ADVICE r11): a -0.0 d=0
     # product is written as -0.0 here, where zeros-init + add gave
     # +0.0; -0.0 == 0.0 under IEEE comparison, so every downstream

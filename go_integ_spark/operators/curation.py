@@ -998,7 +998,7 @@ def contamination_embedding_strict(spark: SparkSession, sf_dir: str) -> DataFram
     — so the value contract is EXACT at any corpus, not
     recall-dependent. On the gate corpora no eval-train pair reaches
     0.8 (both engines honestly return all-false verdicts);
-    non-vacuous correctness is pinned in tests/test_round13_ops.py on
+    non-vacuous correctness is pinned in tests/test_curation.py on
     a planted near-dup corpus.
     """
     import numpy as np

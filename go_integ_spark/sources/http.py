@@ -439,20 +439,25 @@ class PageFetcher:
     limiter: RateLimiter | None = None
 
     def pages(self, first: HttpRequest) -> Iterator[list[dict]]:
-        req: HttpRequest | None = self.auth.apply(first)
+        # The paginator and the retryer (and so HttpStatusError's
+        # message) see the request without credentials; only the copy
+        # handed to the transport is authenticated, once per request.
+        def send(r: HttpRequest) -> HttpResponse:
+            return self.transport(self.auth.apply(r))
+
+        req: HttpRequest | None = first
         n = 0
         while req is not None:
             if self.limiter is not None:
                 self.limiter.acquire()
-            resp = self.retryer.execute(self.transport, req)
+            resp = self.retryer.execute(send, req)
             body = resp.json()
             records = self.extract_records(body)
             yield records
             n += 1
             if self.max_pages is not None and n >= self.max_pages:
                 return
-            nxt = self.paginator.next(req, resp, records)
-            req = self.auth.apply(nxt) if nxt is not None else None
+            req = self.paginator.next(req, resp, records)
 
     def extract_records(self, body) -> list[dict]:
         if self.record_path:

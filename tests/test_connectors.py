@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import io
 import json
+import urllib.parse
 
 import pytest
 
@@ -29,8 +30,8 @@ def server():
         yield s
 
 
-def read_all(stream, config, state=None, clock=utc_now):
-    pages, new_state = stream.read(config, state, clock=clock)
+def read_all(stream, config, state=None, clock=utc_now, **kw):
+    pages, new_state = stream.read(config, state, clock=clock, **kw)
     return [r for p in pages for r in p], new_state
 
 
@@ -69,10 +70,28 @@ def test_auth_failure_surfaces(server):
 
 
 def test_marker_pagination(server):
+    sent = []
+    transport = urllib_transport()
+
+    def recording(req):
+        sent.append(req.full_url())
+        return transport(req)
+
     rows, _ = read_all(
-        klaviyo.streams[0], {"url": server.base, "api_key": "klav-key"}
+        klaviyo.streams[0],
+        {"url": server.base, "api_key": "klav-key"},
+        transport=recording,
     )
     assert rows == server.data["members"]  # 30 rows over 4 pages
+    # the query-parameter key goes on every page exactly once
+    assert len(sent) == 4
+    for url in sent:
+        query = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+        assert query["api_key"] == ["klav-key"], url
+    # a rejected key is not echoed into the error (and so the LOG line)
+    with pytest.raises(Exception, match="401") as err:
+        read_all(klaviyo.streams[0], {"url": server.base, "api_key": "bad-klav-key"})
+    assert "bad-klav-key" not in str(err.value)
 
 
 def test_odata_pagination(server):

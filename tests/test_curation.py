@@ -222,3 +222,69 @@ def test_gopher_rules_fire_individually(spark, tmp_path):
     ).write.parquet(path + "/documents.parquet")
     got = {r["doc_id"]: r["gopher_ok"] for r in text_gopher_quality(spark, path).collect()}
     assert got == {1: True, 2: False, 3: False, 4: False}
+
+
+def _sparse_neardup_embeddings(n=1500, dim=64, n_pairs=40, seed=11):
+    """Same planted sparse near-dup regime as test_round10_ops: an
+    isotropic bulk (random-pair cosine ~0 at dim 64) plus planted
+    partners at cos ~0.93."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    base = rng.normal(0, 1.0, size=(n, dim))
+    for i in range(n_pairs):
+        a, b = 2 * i, 2 * i + 1
+        base[b] = base[a] + rng.normal(0, 0.22, size=dim)
+    return base
+
+
+def test_contamination_embedding_strict_on_planted_corpus(spark, tmp_path):
+    """VERDICT r12 item 7: the production-shaped (>= 0.8, fixed
+    nprobe) decontamination twin must be NON-vacuously correct — on a
+    planted corpus it must (a) equal its IVF-replaying DuckDB oracle
+    exactly and (b) agree with the brute-force eval-vs-train verdict
+    for every eval item (planted partners share probe cells by
+    construction, so recall is 1.0 here)."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from go_integ_spark.operators.curation import CONTAM_EMB_STRICT
+
+    base = _sparse_neardup_embeddings()
+    n = len(base)
+    path = str(tmp_path)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(
+                    [r.astype("float32") for r in base], pa.list_(pa.float32())
+                ),
+            }
+        ),
+        f"{path}/embeddings.parquet",
+    )
+    q, o = entry.queries(), entry.oracle_sql()
+    name = "contamination_embedding_strict"
+    got = sorted(map(tuple, q[name](spark, path).collect()))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{path}/embeddings.parquet'"
+    )
+    oracle = sorted(con.execute(o[name]).fetchall())
+    assert got == oracle
+    # brute-force eval-vs-train verdicts on the float64-cast vectors
+    e = base.astype("float32").astype("float64")
+    nrm = np.sqrt((e * e).sum(axis=1))
+    sim = (e @ e.T) / np.outer(nrm, nrm)
+    ev_ids = [i for i in range(n) if i % 10 == 0]
+    tr_ids = np.array([i for i in range(n) if i % 10 != 0])
+    brute = {
+        ev: bool((sim[ev, tr_ids] >= CONTAM_EMB_STRICT).any()) for ev in ev_ids
+    }
+    got_verdicts = {int(r[0]): bool(r[1]) for r in got}
+    assert got_verdicts == brute
+    assert sum(brute.values()) >= 8, "corpus must contain contaminated evals"

@@ -513,3 +513,28 @@ def test_emb_probe_count_preserves_coverage():
         assert p >= min(k, DEDUP_EMB_PROBES_MIN)
         assert 4 * p >= k  # coverage floor
         prev = p
+
+
+class TestCCEdgeRepartInvariance:
+    def test_components_identical_both_arms(self, spark):
+        """The `src`-repartitioned edge list changes only physical
+        partitioning (1000x A/B: evidence/SMOKE_r12_1000x_cc_ab*.json); the
+        labels stay pinned to the golden components. The 30..36 chain
+        needs several rounds and pointer jumps."""
+        from go_integ_spark.operators.dedup import connected_components
+
+        rows = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
+        rows += [(i, i + 1) for i in range(30, 36)]
+        edges = spark.createDataFrame(rows, "doc_a bigint, doc_b bigint")
+        got = sorted(map(tuple, connected_components(edges).collect()))
+        assert got == [
+            (1, 1),
+            (2, 1),
+            (3, 1),
+            (10, 10),
+            (11, 10),
+            (20, 20),
+            (21, 20),
+            (22, 20),
+            (23, 20),
+        ] + [(n, 30) for n in range(30, 37)]

@@ -1,6 +1,5 @@
 """Round-14 optimization pins: the funnel near-dup de-array (VERDICT
-r13 item 2), the kept greedy split geometry, and the cached_persist
-token key (ADVICE r13)."""
+r13 item 2) and the cached_persist token key (ADVICE r13)."""
 
 from __future__ import annotations
 
@@ -62,46 +61,6 @@ class TestFunnelWindowMinEquivalence:
         )
         assert "ObjectHashAggregate" not in plan
         assert plan.count("Window") >= 1
-
-
-class TestGreedySplitGeometryKept:
-    """VERDICT r13 item 6 was measured and REJECTED: the near-square
-    minimum-replication geometry shipped only -3% map-side bytes at
-    the 1000x multilang probe (pair set byte-identical) and ran
-    WORSE on wall because splitting the larger side multiplies its
-    expensive parse lineage on the critical-path map stage
-    (evidence/SMOKE_r14_1000x_bitext_geom_{greedy,balanced}.json). This pins
-    the kept greedy's defining property so a future round does not
-    silently re-land the rejected form: the bigger side is never
-    replicated while growing the smaller side's split can still
-    satisfy the pair cap."""
-
-    def test_big_side_not_replicated_on_cap_bound_cells(self, monkeypatch):
-        from go_integ_spark.functions import blocks
-
-        monkeypatch.setattr(blocks, "ROW_COST", 650.0)
-        # the 1000x multilang probe's two hot cells: probes >> members
-        cells = [(("en",), 5673, 166515), (("de",), 7767, 83040)]
-        split_rows, _, _ = blocks.plan_grid_bins(cells, 8192, 256)
-        splits = {s[0]: (s[-2], s[-1]) for s in split_rows}
-        pair_cap = blocks.BLOCK_PAIR_CAP
-        for kv, n_m, n_p in cells:
-            nc, np_ = splits[kv[0]]
-            assert (n_m / nc) * (n_p / np_) <= pair_cap  # cap holds
-            assert nc == 1, kv  # big (probe) side ships exactly once
-
-    def test_uncapped_cells_keep_minimum_splits(self, monkeypatch):
-        from go_integ_spark.functions import blocks
-
-        monkeypatch.setattr(blocks, "ROW_COST", 650.0)
-        split_rows, _, _ = blocks.plan_grid_bins(
-            [((1,), 182, 40), ((2,), 100, 1_000_000)], 8192, 256
-        )
-        splits = {s[0]: (s[-2], s[-1]) for s in split_rows}
-        assert splits[1] == (1, 1)
-        # pair-light probe-heavy cell: dimension cap only, no member
-        # replication beyond it
-        assert splits[2] == (1, -(-1_000_000 // 8192))
 
 
 class TestCachedPersistToken:

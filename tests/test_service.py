@@ -101,6 +101,24 @@ def test_unknown_source_or_cmd_404(service):
     assert _post(f"{service}/pokeapi/frobnicate", "")[0] == 404
 
 
+def test_bad_content_length_400(service):
+    """A Content-Length that is not an integer >= 0 gets a 400 reply:
+    ``abc`` used to drop the connection, and ``-1`` to block the
+    handler reading until the client closed."""
+    import socket
+    import urllib.parse
+
+    addr = urllib.parse.urlparse(service)
+    for value in ("abc", "-1"):
+        with socket.create_connection((addr.hostname, addr.port), timeout=5) as s:
+            s.sendall(
+                b"POST /pokeapi/spec HTTP/1.1\r\nHost: x\r\n"
+                b"Content-Length: " + value.encode() + b"\r\n\r\n"
+            )
+            status_line = s.makefile("rb").readline()
+        assert status_line.split()[1:2] == [b"400"], (value, status_line)
+
+
 def test_singer_format_selectable(service, upstream):
     envelope = "\n".join(
         [

@@ -782,3 +782,73 @@ def test_mmr_prefers_diverse_over_redundant(spark, tmp_path):
     rank1 = got[(0, 1)]
     assert rank0 in (10, 11, 12), rank0  # relevance argmax is a clone
     assert rank1 == 20, rank1  # diversity pick beats the other clones
+
+
+class TestKnnSingleKernelPass:
+    def test_assignment_frame_is_cached_and_rank0(self, spark):
+        """The posexploded assignment frame must live in the
+        'knn_assign' single-slot cache (one centroid-scoring kernel
+        pass serves corpus side, probe side, and the cell-size
+        table), and its rank-0 rows must reproduce the independent
+        nearest-cell assignment."""
+        from go_integ_spark.functions import cache
+        from go_integ_spark.functions.vector import with_norm
+        from go_integ_spark.operators.similarity import (
+            IVF_K,
+            _build_knn_graph,
+            ivf_centroids,
+            nearest_cells_pd,
+        )
+        from go_integ_spark.tables import load_table
+
+        emb = load_table(spark, SF_DIR, "embeddings").select(
+            "vec_id", "embedding"
+        )
+        _build_knn_graph(spark, emb).collect()
+        assert "knn_assign" in cache._slots
+        pe = cache._slots["knn_assign"][2]
+        got = {
+            (r["vec_id"], r["cell_id"])
+            for r in pe.filter("pos = 0").select("vec_id", "cell_id").collect()
+        }
+        v = with_norm(emb)
+        (crow,) = ivf_centroids(
+            v, max(IVF_K, int(emb.count() ** 0.5))
+        ).collect()
+        want = {
+            (r["vec_id"], r["cell_id"])
+            for r in v.select(
+                "vec_id",
+                F.element_at(nearest_cells_pd(crow, 1), 1).alias("cell_id"),
+            ).collect()
+        }
+        assert got == want and len(got) > 0
+
+
+class TestTiledFoldKernel:
+    def test_bit_identity_vs_naive_fold(self):
+        """The tiled fold_cosine_block must reproduce the naive
+        per-dim accumulate BIT-FOR-BIT on awkward shapes (tile
+        boundaries, singleton rows, non-multiple-of-tile sizes) —
+        the whole oracle contract of every cogrouped scorer rides on
+        this float sequence."""
+        import numpy as np
+        import pandas as pd
+
+        from go_integ_spark.functions.vector import fold_cosine_block
+
+        rng = np.random.RandomState(42)
+        for m, n, d in [(1, 1, 1), (3, 7, 5), (9, 4097, 64), (257, 33, 64)]:
+            a = rng.randn(m, d)
+            b = rng.randn(n, d)
+            an = np.sqrt((a * a).sum(1))
+            bn = np.sqrt((b * b).sum(1))
+            naive = np.zeros((m, n))
+            for k in range(d):
+                naive += a[:, k : k + 1] * b[:, k][None, :]
+            naive /= an[:, None] * bn[None, :]
+            got = fold_cosine_block(
+                pd.Series(list(a)), pd.Series(an),
+                pd.Series(list(b)), pd.Series(bn),
+            )
+            assert np.array_equal(got, naive), (m, n, d)
