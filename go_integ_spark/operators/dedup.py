@@ -13,11 +13,12 @@ Scale design (the part that matters at 100 TB):
   costs zero shuffles; only bucket aggregation and pair counting ever
   exchange data. Shingles travel as 64-bit xxhash64 IDs (8-byte
   shuffle keys, not strings).
-- MinHash signatures are also row-local — an Arrow-batched numpy
+- MinHash band buckets are also row-local — an Arrow-batched numpy
   kernel emitting the exact bits of ``array_min(transform(...))`` per
-  permutation (functions/xxh.py reproduces Spark's XXH64), with no
-  per-shingle aggregation shuffle at all. The only LSH shuffles are
-  the band-bucket groupBy and the verification join-back.
+  permutation, folded per band (functions/xxh.py reproduces Spark's
+  XXH64), with no per-shingle aggregation shuffle at all. The only
+  LSH shuffles are the band-bucket groupBy and the verification
+  join-back.
 - Pair generation is bucket-and-enumerate: group rows by bucket key,
   enumerate each bucket's pairs JVM-side — one shuffle, versus two
   for the classic self-join; pair enumeration never crosses a
@@ -216,80 +217,23 @@ def exact_jaccard_pairs(
     return _jaccard_select(cooccurrence_counts(sh), threshold)
 
 
-def minhash_signatures(doc_sets: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, sids, n, h0..h{n-1}): min over xxhash64(perm_id, sid),
-    computed ROW-LOCALLY from the shingle-set array — zero shuffles;
-    nothing exchanges until LSH banding groups by bucket.
-
-    The per-permutation min is an Arrow-batched numpy kernel emitting
-    EXACTLY the values the JVM expression
-    ``array_min(transform(sids, s -> xxhash64(lit(i), s)))`` would:
-    ``functions/xxh.py`` reproduces Spark's XXH64 fold bit-for-bit in
-    uint64 arithmetic (pure integers — no rounding to diverge), and
-    ``tests/test_dedup.py`` pins kernel == expression on a real
-    corpus. The expression form ran ``num_perm`` interpreted
-    higher-order traversals per document (~num_perm * |sids| lambda
-    invocations per row — HOFs evaluate outside codegen); the kernel
-    is one vectorized pass per permutation over the batch's flattened
-    shingle array, measured ~10x at sf0.1.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from go_integ_spark.functions.xxh import (
-        SPARK_SEED,
-        as_signed,
-        xxh64_int,
-        xxh64_long,
-    )
-
-    # xxhash64(lit(i), sid) folds the IntegerType literal first, so
-    # each permutation is just a different 64-bit seed for the sid
-    # fold — precomputable once, outside the batch loop.
-    seeds = xxh64_int(np.arange(num_perm, dtype=np.uint64), SPARK_SEED)
-
-    def _mins(col):  # pd.Series[list[int]] -> pd.Series[np.ndarray]
-        n = len(col)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        arrs = [np.asarray(x, dtype=np.int64) for x in col]
-        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=n)
-        # doc_shingle_sets guarantees >= 1 shingle per row (docs with
-        # fewer than k words are filtered out), which reduceat needs.
-        flat = np.concatenate(arrs).view(np.uint64)
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        out = np.empty((n, num_perm), dtype=np.int64)
-        for i in range(num_perm):
-            h = as_signed(xxh64_long(flat, seeds[i]))
-            out[:, i] = np.minimum.reduceat(h, offs)
-        return pd.Series(list(out))
-
-    mins_udf = F.pandas_udf(_mins, "array<bigint>")
-    # One ArrowEvalPython node computes the array; the h{i} columns
-    # are codegen'd getItems over its single output (plan-pinned in
-    # tests/test_plans.py).
-    return doc_sets.withColumn("_hs", mins_udf(F.col("sids"))).select(
-        "doc_id",
-        "sids",
-        "n",
-        *[F.col("_hs")[i].alias(f"h{i}") for i in range(num_perm)],
-    )
-
-
 def lsh_band_buckets(
     doc_sets: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> DataFrame:
     """(doc_id, buckets): the ``bands`` LSH bucket keys per doc,
     computed in ONE Arrow-batched kernel pass — the per-permutation
     minhashes never materialize as plan columns. Emits EXACTLY the
-    values of ``xxhash64(lit(b), h[b*rows], ...)`` over
-    :func:`minhash_signatures` output (the band fold is the same
-    XXH64 chain: hashInt(band) then hashLong per row hash —
-    ``tests/test_dedup.py`` pins kernel == expression). Replacing the
-    64-wide h{i} projection + 32 band-hash expressions with a single
-    small array column cut the cold plan/codegen cost the bench was
-    billing to dedup_minhash_lsh.
+    values of the JVM expressions ``h_i = array_min(transform(sids,
+    s -> xxhash64(lit(i), s)))`` (min over xxhash64(perm_id, sid))
+    folded per band as ``xxhash64(lit(b), h[b*rows], ...)``:
+    ``functions/xxh.py`` reproduces Spark's XXH64 bit-for-bit in
+    uint64 arithmetic (pure integers — no rounding to diverge), and
+    ``tests/test_dedup.py`` pins kernel == expression on a real
+    corpus. The expression form ran ``bands * rows`` interpreted
+    higher-order traversals per document (HOFs evaluate outside
+    codegen) and then a 64-wide h{i} projection + 32 band-hash
+    expressions; the kernel is one vectorized pass per permutation
+    over the batch's flattened shingle array.
     """
     import numpy as np
     import pandas as pd
@@ -302,6 +246,9 @@ def lsh_band_buckets(
     )
 
     num_perm = bands * rows
+    # xxhash64(lit(i), sid) folds the IntegerType literal first, so
+    # each permutation is just a different 64-bit seed for the sid
+    # fold — precomputable once, outside the batch loop.
     seeds = xxh64_int(np.arange(num_perm, dtype=np.uint64), SPARK_SEED)
     band_seeds = xxh64_int(np.arange(bands, dtype=np.uint64), SPARK_SEED)
 
@@ -311,6 +258,8 @@ def lsh_band_buckets(
             return pd.Series([], dtype=object)
         arrs = [np.asarray(x, dtype=np.int64) for x in col]
         lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=n)
+        # doc_shingle_sets guarantees >= 1 shingle per row (docs with
+        # fewer than k words are filtered out), which reduceat needs.
         flat = np.concatenate(arrs).view(np.uint64)
         offs = np.zeros(n, dtype=np.int64)
         np.cumsum(lens[:-1], out=offs[1:])
@@ -360,13 +309,6 @@ def _pairs_from_buckets(
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
     )
-
-
-# (The former lsh_candidate_pairs — banding as 32 JVM band-hash
-# expressions over the h{i} signature columns — was removed in round
-# 6 once both LSH queries moved to lsh_band_buckets; the JVM
-# expression form survives only as the bit-identity pin in
-# tests/test_dedup.py::test_band_bucket_kernel_matches_jvm_expression.)
 
 
 # --------------------------------------------------------------------------

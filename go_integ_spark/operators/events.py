@@ -1,13 +1,13 @@
 """Event-stream operators: semi-structured JSON extraction, pivot,
-sessionization, and the batch analogue of the reference's cursor-based
-incremental sync.
+sessionization, rolling windows and time series.
 
-The incremental query mirrors the reference's cursor-predicate
-pushdown (shopify.go:46-53: ``updated_at_min = state.To``): the same
-"WHERE cursor > checkpoint" predicate, here pushed into the parquet
-scan by Catalyst instead of into an HTTP query string. The streaming
-module (go_integ_spark.streaming) carries the same semantics in
-Structured Streaming form.
+The batch cursor-incremental read of events is
+``connector_file_incremental_read`` (operators/advanced.py): the
+reference's cursor-predicate pushdown (shopify.go:46-53:
+``updated_at_min = state.To``) as a "WHERE cursor > checkpoint"
+predicate pushed into the parquet scan by Catalyst instead of into an
+HTTP query string. The streaming module (go_integ_spark.streaming)
+carries the same semantics in Structured Streaming form.
 """
 
 from __future__ import annotations
@@ -19,31 +19,6 @@ from go_integ_spark.registry import register
 from go_integ_spark.tables import load_table
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-# Fixed demo cursor for the oracle-checked incremental read; the
-# engine-level API takes the cursor from a state document.
-DEMO_CURSOR = "2024-01-25 00:00:00"
-
-
-@register(
-    "incremental_cursor_read",
-    tags=("incremental", "scan", "pushdown"),
-    oracle=f"""
-SELECT event_id, ts, user_id, event_type
-FROM events
-WHERE ts > TIMESTAMP '{DEMO_CURSOR}'
-""",
-)
-def incremental_cursor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cursor-incremental batch read (reference P3, shopify.go:46-53)
-    with projection pushdown (reference P1): the filter and the
-    4-column projection both reach the parquet scan — check
-    PushedFilters: [GreaterThan(ts, ...)] and a 4-field ReadSchema.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return ev.filter(F.col("ts") > F.lit(DEMO_CURSOR).cast("timestamp")).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
 
 
 @register(
@@ -321,39 +296,15 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_hourly_gapfill",
-    tags=("events", "time", "gapfill"),
-    oracle=f"""
-WITH bounds AS (
-    SELECT date_trunc('hour', min(ts)) AS lo,
-           date_trunc('hour', max(ts)) AS hi
-    FROM events
-), spine AS (
-    SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour_start
-    FROM bounds
-), types AS (
-    SELECT unnest({list(EVENT_TYPES)}) AS event_type
-), counts AS (
-    SELECT date_trunc('hour', ts) AS hour_start, event_type,
-           count(*) AS c
-    FROM events GROUP BY 1, 2
-)
-SELECT s.hour_start, t.event_type,
-       CAST(coalesce(c.c, 0) AS BIGINT) AS n
-FROM spine s
-CROSS JOIN types t
-LEFT JOIN counts c
-  ON c.hour_start = s.hour_start AND c.event_type = t.event_type
-""",
-)
-def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled hourly counts: a generated calendar spine (every
-    hour between the corpus bounds x every event type) left-joined to
-    the observed counts, zeros where nothing happened — the shape
-    every time-series consumer (charting, anomaly detection, forecast
-    features) needs, and the step people get wrong by grouping only
-    observed rows.
+def hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-filled hourly counts (hour_start, event_type, n): a
+    generated calendar spine (every hour between the corpus bounds x
+    every event type) left-joined to the observed counts, zeros where
+    nothing happened — the shape every time-series consumer
+    (charting, anomaly detection, forecast features) needs, and the
+    step people get wrong by grouping only observed rows. The frame
+    under ``events_changepoint_cusum`` and ``events_forecast_eval``;
+    the spine/types/counts CTEs of their oracles check it by value.
 
     Scale: the corpus is touched exactly twice (bounds aggregate,
     counts aggregate — both map-side combined); the spine is
@@ -677,8 +628,19 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WAU_WINDOW_DAYS = 7
 
-# Shared by the exact and HLL forms: the contribution-explode CTEs.
-_ROLLING_DU_CTE = f"""
+# Sketch envelope for the HLL rolling-distinct form: HLL++ at
+# rsd=0.01 sits well inside 2% on the gate corpora (small daily
+# cardinalities are served by the exact sparse encoding); the
+# boolean column makes the driver gate VERIFY the envelope, the
+# agg_sketch_accuracy pattern.
+HLL_WAU_RSD = 0.01
+HLL_WAU_ENVELOPE = 0.02
+
+
+@register(
+    "window_rolling_distinct_hll",
+    tags=("window", "events", "distinct", "sketch", "approx"),
+    oracle=f"""
 WITH du AS (
     SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
     FROM events
@@ -695,19 +657,11 @@ WITH du AS (
     SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
     FROM du GROUP BY 1
 )
-"""
-
-
-@register(
-    "window_rolling_distinct_users",
-    tags=("window", "events", "distinct"),
-    oracle=_ROLLING_DU_CTE
-    + """
-SELECT d.day, d.dau, w.wau
+SELECT d.day, d.dau, w.wau, TRUE AS wau_hll_ok
 FROM dau d JOIN wau w ON w.day = d.day
 """,
 )
-def window_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+def window_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-window distinct counting — DAU and trailing-7-day WAU
     per day, the engagement denominator every product-metrics stack
     computes. Distinct-over-a-sliding-window does NOT decompose like
@@ -716,32 +670,23 @@ def window_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: the CONTRIBUTION-EXPLODE formulation — each distinct
     (day, user) row is exploded to the {WAU_WINDOW_DAYS} window-end days it
-    contributes to, then one count-distinct per day — instead of a
+    contributes to, then one distinct count per day — instead of a
     day-to-range join: the range join's build side is all of du for
     every day (quadratic in the window when expressed as a
     BroadcastNestedLoopJoin), while the explode is row-local with a
     fixed x{WAU_WINDOW_DAYS} fanout and shuffles only (day, user_id) pairs.
     The trailing semi-join against observed days (broadcast — one row
     per calendar day) trims phantom window-ends past the data's edge.
-    At 100 TB the count-distincts become per-day HLL sketches (see
-    agg_sketch_accuracy) and the explode shape is unchanged — sketch
-    state merges across the same shuffle.
-    """
-    du, days, contrib = _rolling_du_frames(spark, sf_dir)
-    wau = (
-        contrib.join(F.broadcast(days), "day", "left_semi")
-        .groupBy("day")
-        .agg(F.count_distinct("user_id").alias("wau"))
-    )
-    dau = du.groupBy("day").agg(F.count_distinct("user_id").alias("dau"))
-    return dau.join(wau, "day").select("day", "dau", "wau")
 
-
-def _rolling_du_frames(spark: SparkSession, sf_dir: str):
-    """(du, days, contrib): the contribution-explode frames BOTH
-    rolling-distinct forms build on — one definition, like their
-    shared ``_ROLLING_DU_CTE``, so an edit to the explode/semi-join
-    can never diverge the exact twin from the HLL twin."""
+    The 100 TB form of the per-day distinct is a HyperLogLog++ sketch
+    (``approx_count_distinct``), whose fixed-size registers merge
+    across the map-side partial aggregation — no per-day hash table
+    of distinct user ids at any scale. The exact count rides the same
+    single aggregation pass, is returned as ``wau``, and measures the
+    sketch: the returned boolean asserts the estimate landed inside
+    the 2% envelope — so the driver's value gate verifies the error
+    bound itself (the ``agg_sketch_accuracy`` pattern; a property
+    test additionally sweeps the envelope at both gate SFs)."""
     ev = load_table(spark, sf_dir, "events")
     du = (
         ev.select(F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id")
@@ -754,41 +699,6 @@ def _rolling_du_frames(spark: SparkSession, sf_dir: str):
             F.expr(f"sequence(day, date_add(day, {WAU_WINDOW_DAYS - 1}))")
         ).alias("day"),
     )
-    return du, days, contrib
-
-
-# Sketch envelope for the HLL rolling-distinct form: HLL++ at
-# rsd=0.01 sits well inside 2% on the gate corpora (small daily
-# cardinalities are served by the exact sparse encoding); the
-# boolean column makes the driver gate VERIFY the envelope, the
-# agg_sketch_accuracy pattern.
-HLL_WAU_RSD = 0.01
-HLL_WAU_ENVELOPE = 0.02
-
-
-@register(
-    "window_rolling_distinct_hll",
-    tags=("window", "events", "distinct", "sketch", "approx"),
-    oracle=_ROLLING_DU_CTE
-    + """
-SELECT d.day, d.dau, w.wau, TRUE AS wau_hll_ok
-FROM dau d JOIN wau w ON w.day = d.day
-""",
-)
-def window_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB form of ``window_rolling_distinct_users`` (VERDICT
-    r8 #4 — COVERAGE.md's "HLL swap-in" claim made registered): the
-    SAME contribution-explode, but the per-day distinct becomes a
-    HyperLogLog++ sketch (``approx_count_distinct``), whose
-    fixed-size registers merge across the map-side partial
-    aggregation — no per-day hash table of distinct user ids at any
-    scale. The exact count rides the same single aggregation pass
-    purely to measure the sketch, and the returned boolean asserts
-    the estimate landed inside the 2% envelope — so the driver's
-    value gate verifies the error bound itself (the
-    ``agg_sketch_accuracy`` pattern; a property test additionally
-    sweeps the envelope at both gate SFs)."""
-    du, days, contrib = _rolling_du_frames(spark, sf_dir)
     wau = (
         contrib.join(F.broadcast(days), "day", "left_semi")
         .groupBy("day")
@@ -1501,7 +1411,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist each lineage re-runs the corpus scan + rollup (the
     # anomaly_hourly precedent — the persisted frame is hours x types)
     hourly = cached_persist(
-        "cusum_hourly", ev, lambda: events_hourly_gapfill(spark, sf_dir)
+        "cusum_hourly", ev, lambda: hourly_gapfill(spark, sf_dir)
     )
     return cusum_from_hourly(hourly)
 
@@ -1660,7 +1570,7 @@ def events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     hourly = cached_persist(
-        "cusum_hourly", ev, lambda: events_hourly_gapfill(spark, sf_dir)
+        "cusum_hourly", ev, lambda: hourly_gapfill(spark, sf_dir)
     )
     w = Window.partitionBy("event_type").orderBy("hour_start")
     lagged = hourly.withColumn("n_lag1", F.lag("n", 1).over(w)).withColumn(

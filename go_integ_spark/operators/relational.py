@@ -553,6 +553,10 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """,
 )
 def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE(status, priority): all four grouping sets — per pair,
+    per status, per priority and the grand total — in ONE pass over
+    orders (Expand + single aggregation, not four scans unioned).
+    """
     c = load_table(spark, sf_dir, "orders")
     return c.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -773,37 +777,6 @@ def window_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.expr("count(1)" + over_30d)
             / 100.0
         ).alias("avg_price_30d"),
-    )
-
-
-@register(
-    "agg_grouping_sets",
-    tags=("agg", "groupingsets"),
-    oracle="""
-SELECT o_orderstatus, o_orderpriority,
-       round(sum(o_totalprice), 2) AS total,
-       CAST(count(*) AS BIGINT) AS n
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-""",
-)
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS: per-status totals, per-priority totals, and the
-    grand total in ONE pass over orders (Expand + single aggregation
-    — not three scans unioned).
-    """
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupingSets(
-            [["o_orderstatus"], ["o_orderpriority"], []],
-            "o_orderstatus",
-            "o_orderpriority",
-        )
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "total", "n")
     )
 
 

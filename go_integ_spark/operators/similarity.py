@@ -627,79 +627,6 @@ KMEANS_K = 10  # matches the synthetic label cardinality
 # cut cold gate latency.
 KMEANS_ITERS = 3
 
-
-def kmeans_assign(vectors: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, embedding, cid, dist2): nearest centroid per vector.
-
-    Centroids ride into the plan as a broadcast-sized literal array
-    (K x dim floats); the argmin is one JVM ``array_min`` over
-    per-centroid squared distances — row-local, zero shuffles. This is
-    the assign step's 100 TB shape: the corpus never moves, only the
-    tiny centroid set does.
-    """
-    import numpy as np
-    import pandas as pd
-
-    assert [c for c, _ in centroids] == sorted(c for c, _ in centroids)
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    cmat = np.array([v for _, v in centroids], dtype=np.float64)
-
-    # Arrow-batched argmin, bit-identical to the former
-    # array_min(transform(...)) expression (K * dim interpreted
-    # lambdas per row): per dimension one rounded subtract, multiply,
-    # add — numpy never fuses — and np.argmin's first-occurrence tie
-    # rule equals the (dist2, cid) struct ordering because cids
-    # ascend. tests/test_kmeans.py pins kernel == expression.
-    def _best(col):
-        n = len(col)
-        if n == 0:
-            return pd.DataFrame(
-                {
-                    "cid": pd.Series([], dtype="int32"),
-                    "dist2": pd.Series([], dtype="float64"),
-                }
-            )
-        e = np.stack([np.asarray(x, dtype=np.float64) for x in col])
-        acc = np.zeros((n, cmat.shape[0]), dtype=np.float64)
-        for d in range(cmat.shape[1]):
-            diff = e[:, d : d + 1] - cmat[:, d][None, :]
-            acc += diff * diff
-        idx = np.argmin(acc, axis=1)
-        return pd.DataFrame(
-            {
-                "cid": cids[idx].astype("int32"),
-                "dist2": acc[np.arange(n), idx],
-            }
-        )
-
-    best_udf = F.pandas_udf(_best, "cid int, dist2 double")
-    return vectors.withColumn("_b", best_udf(F.col("embedding"))).select(
-        "vec_id",
-        "embedding",
-        F.col("_b.cid").alias("cid"),
-        F.col("_b.dist2").alias("dist2"),
-    )
-
-
-def kmeans_update(assigned: DataFrame) -> list[tuple[int, list[float]]]:
-    """New centroids: element-wise mean per cluster via posexplode +
-    (cid, pos) grouping — one shuffle of (8B, 8B, 8B) rows, dimension-
-    parallel, no array ever materializes per-group on one task.
-    Collects only K x dim floats to the driver (Lloyd's iteration
-    state, inherently driver-sized).
-    """
-    rows = (
-        assigned.select("cid", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.col("pm.m").alias("c"))
-        .collect()
-    )
-    return sorted((r["cid"], list(r["c"])) for r in rows)
-
-
 # Fixed-point micro-unit scale for the gate k-means (the ADC/RP
 # contract: one IEEE multiply quantizes, then everything is exact
 # int64, so every iteration is bit-identical across engines).
@@ -724,9 +651,12 @@ def kmeans_assign_u(
     vectors: DataFrame, centroids: list[tuple[int, list[int]]]
 ) -> DataFrame:
     """(vec_id, q, cid, dist2_u): nearest centroid in exact int64
-    micro-unit^2 distance. Same broadcast-literal row-local shape as
-    the float :func:`kmeans_assign`; ties break to the lowest cid
-    (np.argmin first occurrence; cids ascend)."""
+    micro-unit^2 distance, as an Arrow-batched argmin over the
+    centroids. They ride into the plan as a broadcast-sized literal
+    (K x dim integers), so the assign step is row-local with zero
+    shuffles: the corpus never moves, only the tiny centroid set does.
+    Ties break to the lowest cid (np.argmin first occurrence; cids
+    ascend), the (d2, cid) order of :func:`lloyd_assign_cte`."""
     import numpy as np
     import pandas as pd
 
@@ -774,9 +704,11 @@ def kmeans_update_u(assigned: DataFrame) -> list[tuple[int, list[int]]]:
     1/(2n) from any integer it doesn't hit, and exact operands make
     the quotient correctly rounded) — that covers clusters up to
     ~4e9 vectors at unit-scale coordinates; past it, swap the
-    division for exact integer divmod (same value, no float). Same
-    dimension-parallel (cid, pos) shuffle shape as the float
-    :func:`kmeans_update`."""
+    division for exact integer divmod (same value, no float).
+    Dimension-parallel: posexplode + (cid, pos) grouping, one shuffle
+    of narrow rows, no array ever materializes per group on one task;
+    only K x dim integers reach the driver (Lloyd's iteration state,
+    inherently driver-sized)."""
     rows = (
         assigned.select("cid", F.posexplode("q").alias("pos", "v"))
         .groupBy("cid", "pos")
@@ -899,9 +831,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     means), which makes every Lloyd iteration bit-identical across
     Spark / numpy / DuckDB — so the fixed iteration count statically
     unrolls into a full DuckDB value oracle (``_kmeans_oracle``)
-    instead of the rows-only check iterative queries usually get. The
-    float :func:`kmeans_assign`/:func:`kmeans_update` pair remains the
-    library API for callers that want unquantized Lloyd.
+    instead of the rows-only check iterative queries usually get.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qv = _kmeans_u_quantize(emb)
@@ -3101,8 +3031,11 @@ def sq_code_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_oracle() -> str:
-    return f"""
+# The DuckDB twin of ann_ivf_topk's probe stage, the head of
+# _ndcg_oracle: centroids, cell assignment, and the IVF_NPROBE cells
+# each of the N_QUERIES queries probes (CTEs v, cent, assigned,
+# probes, q).
+_IVF_PROBE_PREFIX = f"""
 WITH v AS (
     SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
 ), cent AS (
@@ -3130,72 +3063,7 @@ WITH v AS (
     ) WHERE prn <= {IVF_NPROBE}
 ), q AS (
     SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < {N_QUERIES}
-), ivf_k AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               row_number() OVER (
-                   PARTITION BY p.query_id
-                   ORDER BY list_cosine_similarity(q.qe, a.e) DESC, a.vec_id
-               ) AS rn
-        FROM probes p
-        JOIN assigned a ON a.cell_id = p.cell_id
-        JOIN q ON q.query_id = p.query_id
-        WHERE a.vec_id <> p.query_id
-    ) WHERE rn <= {TOP_K}
-), bf_k AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (
-                   PARTITION BY qq.vec_id
-                   ORDER BY list_cosine_similarity(qq.e, c.e) DESC, c.vec_id
-               ) AS rn
-        FROM v qq JOIN v c ON qq.vec_id < {N_QUERIES} AND c.vec_id <> qq.vec_id
-    ) WHERE rn <= {TOP_K}
-)
-SELECT i.query_id,
-       CAST(count(b.neighbor_id) AS BIGINT) AS hits,
-       CAST((count(b.neighbor_id) * 10000) // {TOP_K} AS BIGINT) AS recall_bp
-FROM ivf_k i
-LEFT JOIN bf_k b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-GROUP BY i.query_id
-"""
-
-
-@register(
-    "similarity_recall_eval",
-    tags=("similarity", "evaluation", "vector", "llm_pipeline"),
-    oracle=_recall_oracle(),
-)
-def similarity_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k self-evaluation: score the IVF index against the
-    exact brute-force ground truth on the same query set — the
-    accuracy dial every ANN deployment reports before trading probe
-    count against latency. recall_bp is hits per query in integer
-    basis points of TOP_K (exact int division, engine-identical).
-
-    Scale shape: both arms are the registered pipelines reused
-    verbatim (brute force stays scan-bound; IVF touches only probed
-    cells), and the comparison itself joins two k-row-per-query id
-    sets — |queries| x k rows, negligible against either arm. At
-    100 TB you run this on a sampled query set to calibrate nprobe,
-    never on the full corpus.
-    """
-    truth = ann_bruteforce_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = ann_ivf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    hit = approx.join(
-        truth.withColumn("hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return hit.groupBy("query_id").agg(
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("hits"),
-        F.expr(
-            f"cast(sum(coalesce(hit, 0)) * 10000 div {TOP_K} as bigint)"
-        ).alias("recall_bp"),
-    )
+)"""
 
 
 # Matryoshka (MRL) truncation depths evaluated against the full-dim
@@ -3411,8 +3279,11 @@ def similarity_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at probe depths 1/2/4/8 against the exact brute-force truth, per
     query. This is THE tuning artifact an ANN deployment reads before
     fixing nprobe (latency grows ~linearly in probes, recall
-    saturates); `similarity_recall_eval` reports the single operating
-    point, this measures the whole dial.
+    saturates). The nprobe = IVF_NPROBE rows are the recall@k of the
+    registered ``ann_ivf_topk`` operating point; the other rows
+    measure the rest of the dial. recall_bp is hits per query in
+    integer basis points of TOP_K (exact int division,
+    engine-identical).
 
     Scale shape: ONE cell enumeration feeds every curve point — the
     corpus is scored once against the max(IVF_PROBE_CURVE)-cell probe
@@ -3664,8 +3535,7 @@ _NDCG_IDCG = sum(_NDCG_W)  # ideal DCG: every position a hit
 
 def _ndcg_oracle() -> str:
     w_list = ", ".join(str(w) for w in _NDCG_W)
-    prefix = _recall_oracle().split(", ivf_k AS (")[0].rstrip()
-    return f"""{prefix}, ivf_k AS (
+    return f"""{_IVF_PROBE_PREFIX}, ivf_k AS (
     SELECT query_id, neighbor_id, CAST(rn AS INT) AS rank FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
                row_number() OVER (
@@ -3709,18 +3579,19 @@ GROUP BY i.query_id
 )
 def similarity_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@k of the IVF index against the exact brute-force ground
-    truth — the position-sensitive companion to
-    ``similarity_recall_eval``: a hit at rank 1 is worth the full
-    discount weight, a hit at rank k only w_k, so an index that finds
-    the right neighbors but shuffles their order scores below one
-    that preserves it. Binary relevance (membership in the true
-    top-k); dcg_micro is the discounted sum in micro-units, ndcg_bp
-    normalizes by the ideal DCG in basis points.
+    truth — the position-sensitive companion to the recall@k of
+    ``similarity_ivf_probe_recall`` at nprobe = IVF_NPROBE: a hit at
+    rank 1 is worth the full discount weight, a hit at rank k only
+    w_k, so an index that finds the right neighbors but shuffles
+    their order scores below one that preserves it. Binary relevance
+    (membership in the true top-k); dcg_micro is the discounted sum
+    in micro-units, ndcg_bp normalizes by the ideal DCG in basis
+    points.
 
-    Scale shape: identical to the recall eval — both arms are the
-    registered pipelines reused verbatim; the metric join touches
-    |queries| x k id rows, and the rank→weight mapping is an inlined
-    k-element array lookup (pure map-side codegen).
+    Scale shape: both arms are the registered pipelines reused
+    verbatim; the metric join touches |queries| x k id rows, and the
+    rank→weight mapping is an inlined k-element array lookup (pure
+    map-side codegen).
     """
     wlit = F.array(*[F.lit(w) for w in _NDCG_W])
     truth = ann_bruteforce_topk(spark, sf_dir).select(
@@ -4034,12 +3905,13 @@ def similarity_pq_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed ADC top-k and the exact full-precision index on the
     same queries, in exact basis points — the user-visible
     discrepancy a deployment monitors when it swaps the float index
-    for codes (alongside similarity_recall_eval's IVF pruning loss
-    and similarity_ndcg_eval's position-weighted view; this completes
-    the eval matrix with the QUANTIZATION axis). Stated honestly: the
-    exact arm ranks by cosine and the PQ arm by ADC squared-L2, so on
-    non-normalized corpora the number bundles quantization AND metric
-    effects — exactly what the deployed swap changes.
+    for codes (alongside similarity_ivf_probe_recall's IVF pruning
+    loss and similarity_ndcg_eval's position-weighted view; this
+    completes the eval matrix with the QUANTIZATION axis). Stated
+    honestly: the exact arm ranks by cosine and the PQ arm by ADC
+    squared-L2, so on non-normalized corpora the number bundles
+    quantization AND metric effects — exactly what the deployed swap
+    changes.
 
     Scale shape: both arms are the registered pipelines reused
     verbatim; the comparison joins two k-row-per-query id sets.

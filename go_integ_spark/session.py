@@ -355,13 +355,12 @@ def _session_conf(shuffle: int, driver_mem: str) -> dict[str, str]:
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Accept subset-key hash partitioning for co-partitioned
-        # binary ops. The subset-key joins of similarity_recall_eval,
-        # similarity_hybrid_rrf, similarity_ivf_probe_recall,
-        # similarity_matryoshka_recall, similarity_ndcg_eval and
-        # similarity_pq_agreement would each get a full-key exchange
-        # on top without it. (The grid scorers in functions/blocks.py
-        # exchange with repartitionById and need no conf;
-        # tests/test_blocks.py pins their plans.)
+        # binary ops. The subset-key joins of similarity_hybrid_rrf,
+        # similarity_ivf_probe_recall, similarity_matryoshka_recall,
+        # similarity_ndcg_eval and similarity_pq_agreement would
+        # each get a full-key exchange on top without it. (The grid
+        # scorers in functions/blocks.py exchange with repartitionById
+        # and need no conf; tests/test_blocks.py pins their plans.)
         "spark.sql.requireAllClusterKeysForCoPartition": "false",
         # zstd over the lz4 default: -18.9% shuffle bytes and -13.1%
         # wall at the 1000x kNN probe

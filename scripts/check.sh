@@ -8,7 +8,7 @@
 # and the two driver-facing surfaces (the bench's one JSON line;
 # __spark_entry__ contract is exercised by tests/test_schema.py).
 #
-#   scripts/check.sh            # full check (tier-1 alone ~800-950 s at 4 cores)
+#   scripts/check.sh            # full check (tier-1 alone ~580 s on a 4-core host)
 #   GO_INTEG_SF=.../sf0.01 scripts/check.sh   # tier-1's oracle sweep at sf0.01
 #
 # Here GO_INTEG_SF moves only tier-1's oracle sweep

@@ -214,36 +214,6 @@ def test_numpy_xxh64_matches_spark(spark):
     assert np.array_equal(exp[:, 2], as_signed(spark_xxhash64_longs(vals, pair)))
 
 
-def test_minhash_kernel_matches_jvm_expression(spark):
-    """The Arrow-batched minhash kernel must emit EXACTLY the values
-    of the JVM expression it replaced
-    (array_min(transform(sids, s -> xxhash64(lit(i), s)))) — the
-    bit-identity that keeps LSH bands, incremental dedup, and the
-    LSH == exact pin unchanged across the rewrite."""
-    from pyspark.sql import functions as F
-
-    from go_integ_spark.operators.dedup import (
-        NUM_PERM,
-        doc_shingle_sets,
-        minhash_signatures,
-    )
-
-    sets_ = doc_shingle_sets(load_table(spark, SF_DIR, "documents"))
-    cols = [f"h{i}" for i in range(NUM_PERM)]
-    new = minhash_signatures(sets_).select("doc_id", *cols)
-    old = sets_.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(F.col("sids"), (lambda i: lambda s: F.xxhash64(F.lit(i), s))(i))
-            ).alias(f"h{i}")
-            for i in range(NUM_PERM)
-        ],
-    )
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
-
-
 def test_containment_catches_asymmetric_duplication(spark, tmp_path):
     """A short doc quoted wholesale inside a long one must be flagged
     by containment (cont = 1.0) even though its Jaccard is far below
@@ -325,11 +295,12 @@ def test_winnow_kernel_matches_jvm_expression(spark):
 
 
 def test_band_bucket_kernel_matches_jvm_expression(spark):
-    """lsh_band_buckets must emit EXACTLY the bucket values of the
-    banding expression over minhash_signatures output
-    (xxhash64(lit(b), h[b*rows], h[b*rows+1])) — the bit-identity
-    that lets the hot path skip the 64-wide h{i} projection without
-    changing a single candidate pair."""
+    """lsh_band_buckets must emit EXACTLY the bucket values of the JVM
+    expressions it replaced: the minhashes
+    h_i = array_min(transform(sids, s -> xxhash64(lit(i), s))), then
+    per band xxhash64(lit(b), h[b*rows], h[b*rows+1]) — the
+    bit-identity that keeps LSH bands, incremental dedup, and the
+    LSH == exact pin unchanged without a 64-wide h{i} projection."""
     from pyspark.sql import functions as F
 
     from go_integ_spark.operators.dedup import (
@@ -337,24 +308,27 @@ def test_band_bucket_kernel_matches_jvm_expression(spark):
         LSH_ROWS,
         doc_shingle_sets,
         lsh_band_buckets,
-        minhash_signatures,
     )
 
     sets_ = doc_shingle_sets(load_table(spark, SF_DIR, "documents"))
     new = lsh_band_buckets(sets_).select(
         "doc_id", F.explode("buckets").alias("bucket")
     )
-    sig = minhash_signatures(sets_)
+
+    def minhash(i):
+        return F.array_min(
+            F.transform(F.col("sids"), lambda s: F.xxhash64(F.lit(i), s))
+        )
+
     band_hashes = F.array(
         *[
             F.xxhash64(
-                F.lit(b),
-                *[F.col(f"h{b * LSH_ROWS + r}") for r in range(LSH_ROWS)],
+                F.lit(b), *[minhash(b * LSH_ROWS + r) for r in range(LSH_ROWS)]
             )
             for b in range(LSH_BANDS)
         ]
     )
-    old = sig.select("doc_id", F.explode(band_hashes).alias("bucket"))
+    old = sets_.select("doc_id", F.explode(band_hashes).alias("bucket"))
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
 

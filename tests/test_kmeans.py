@@ -1,31 +1,38 @@
 """k-means invariants the rows-only gate can't see: determinism,
 assignment optimality (each vector sits with its nearest centroid),
-monotone WCSS across iterations, and label recovery on the synthetic
-corpus (embeddings were generated around label centroids).
+monotone WCSS across iterations, and a WCSS below the label
+partition's on the synthetic corpus (embeddings were generated around
+label centroids).
+
+The tests drive the integer Lloyd pair (``kmeans_assign_u`` /
+``kmeans_update_u``) that ``embedding_kmeans``,
+``similarity_cluster_purity`` and ``dedup_semdedup`` run; those ops'
+unrolled-Lloyd DuckDB oracles pin the pair by value.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from go_integ_spark.operators.similarity import (
     KMEANS_ITERS,
     KMEANS_K,
+    KMEANS_SCALE,
+    _kmeans_u_quantize,
     embedding_kmeans,
-    kmeans_assign,
-    kmeans_update,
+    first_k_centroids_u,
+    kmeans_assign_u,
+    kmeans_update_u,
 )
 from go_integ_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def _init(emb):
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < KMEANS_K).collect()
-    ]
-    return [(i, v) for i, (_, v) in enumerate(sorted(cents))]
+def _quantized(spark):
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    return _kmeans_u_quantize(emb)
 
 
 def test_kmeans_deterministic(spark):
@@ -36,23 +43,25 @@ def test_kmeans_deterministic(spark):
 
 
 def test_kmeans_wcss_monotone_and_assignment_optimal(spark):
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    cents = _init(emb)
+    qv = _quantized(spark)
+    cents = first_k_centroids_u(qv, KMEANS_K)
     wcss = []
     for _ in range(KMEANS_ITERS):
-        assigned = kmeans_assign(emb, cents)
-        wcss.append(assigned.agg(F.sum("dist2")).first()[0])
-        cents = kmeans_update(assigned)
-    assert all(wcss[i + 1] <= wcss[i] + 1e-6 for i in range(len(wcss) - 1))
+        assigned = kmeans_assign_u(qv, cents)
+        wcss.append(assigned.agg(F.sum("dist2_u")).first()[0])
+        cents = kmeans_update_u(assigned)
+    # Exact integers: the nearest-integer mean minimizes each
+    # dimension's squared distance, so no round may raise the WCSS.
+    assert all(wcss[i + 1] <= wcss[i] for i in range(len(wcss) - 1)), wcss
 
     # optimality: recomputing dist to every centroid finds none closer
-    final = kmeans_assign(emb, cents)
-    import numpy as np
-
-    c = np.array([v for _, v in cents])
+    final = kmeans_assign_u(qv, cents)
+    cids = [cid for cid, _ in cents]
+    c = np.array([v for _, v in cents], dtype=np.int64)
     for r in final.limit(50).collect():
-        d = ((np.array(r["embedding"]) - c) ** 2).sum(axis=1)
-        assert abs(d.min() - r["dist2"]) < 1e-4
+        d = ((np.array(r["q"], dtype=np.int64) - c) ** 2).sum(axis=1)
+        assert d.min() == r["dist2_u"]
+        assert cids[d.argmin()] == r["cid"]  # ties go to the lowest cid
 
 
 def test_kmeans_beats_label_partition_wcss(spark):
@@ -62,68 +71,17 @@ def test_kmeans_beats_label_partition_wcss(spark):
     WCSS — so its converged WCSS must beat the WCSS of partitioning
     by the ground-truth labels.
     """
-    import numpy as np
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    rows = emb.collect()
+    rows = load_table(spark, SF_DIR, "embeddings").collect()
     X = np.array([r["embedding"] for r in rows])
     y = np.array([r["label"] for r in rows])
     label_wcss = sum(
         ((X[y == l] - X[y == l].mean(0)) ** 2).sum() for l in np.unique(y)
     )
 
-    cents = _init(emb.select("vec_id", "embedding"))
+    qv = _quantized(spark)
+    cents = first_k_centroids_u(qv, KMEANS_K)
     for _ in range(KMEANS_ITERS):
-        cents = kmeans_update(kmeans_assign(emb.select("vec_id", "embedding"), cents))
-    final = kmeans_assign(emb.select("vec_id", "embedding"), cents)
-    kmeans_wcss = final.agg(F.sum("dist2")).first()[0]
+        cents = kmeans_update_u(kmeans_assign_u(qv, cents))
+    final = kmeans_assign_u(qv, cents)
+    kmeans_wcss = final.agg(F.sum("dist2_u")).first()[0] / float(KMEANS_SCALE) ** 2
     assert kmeans_wcss < label_wcss, (kmeans_wcss, label_wcss)
-
-
-def test_assign_kernel_matches_jvm_expression(spark):
-    """The Arrow-batched assign kernel must emit exactly the (cid,
-    dist2) the former array_min(transform(...)) expression produced —
-    same fold floats, same lowest-cid tie rule."""
-    from pyspark.sql import functions as F
-
-    from go_integ_spark.operators.similarity import KMEANS_K, kmeans_assign
-    from go_integ_spark.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    centroids = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < KMEANS_K).collect()
-    )
-    centroids = [(i, vec) for i, (_, vec) in enumerate(centroids)]
-
-    cent = F.array(
-        *[
-            F.struct(
-                F.lit(cid).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("c"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-    dists = F.transform(
-        cent,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), s["c"], lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist2"),
-            s["cid"].alias("cid"),
-        ),
-    )
-    best = F.array_min(dists)
-    expr = emb.select(
-        "vec_id", best["cid"].alias("cid"), best["dist2"].alias("dist2")
-    )
-    kern = kmeans_assign(emb, centroids).select("vec_id", "cid", "dist2")
-    assert kern.exceptAll(expr).count() == 0
-    assert expr.exceptAll(kern).count() == 0

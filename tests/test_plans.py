@@ -98,9 +98,15 @@ def test_exact_dedup_partial_aggregates(registry, spark):
 def test_incremental_cursor_pushdown(registry, spark):
     """The incremental read's cursor predicate must reach the scan —
     this is the Spark analogue of the reference's cursor-window
-    pushdown (shopify.go:46-53)."""
-    df = _df(registry, spark, "incremental_cursor_read")
-    assert pushed_filters(df), "cursor predicate not pushed to scan"
+    pushdown (shopify.go:46-53) — and so must its projection: the 5
+    stream columns, not all of events.parquet."""
+    df = _df(registry, spark, "connector_file_incremental_read")
+    assert "GreaterThan(ts" in pushed_filters(df), "cursor predicate not pushed to scan"
+    (schema,) = read_schemas(df)
+    fields = schema.removeprefix("struct<").removesuffix(">").split(",")
+    assert [f.split(":")[0] for f in fields] == [
+        "event_id", "ts", "user_id", "event_type", "value"
+    ], schema
 
 
 def test_range_join_is_hash_not_nested_loop(registry, spark):
@@ -123,10 +129,12 @@ def test_incremental_lsh_never_joins_corpus_to_itself(registry, spark):
     assert plan.count("% 10") >= 2
 
 
-def test_gapfill_touches_corpus_exactly_twice(registry, spark):
+def test_gapfill_touches_corpus_exactly_twice(spark):
     """Bounds + counts: exactly two events scans; the spine side must
     never scale with the corpus."""
-    df = _df(registry, spark, "events_hourly_gapfill")
+    from go_integ_spark.operators.events import hourly_gapfill
+
+    df = hourly_gapfill(spark, SF_DIR)
     schemas = read_schemas(df)
     assert len(schemas) == 2  # two scans of events.parquet, nothing else
 
@@ -422,7 +430,7 @@ def test_rolling_distinct_users_avoids_range_join(registry, spark):
     # Contribution-explode + broadcast semi-join on observed days —
     # a day-to-range formulation would plan a BroadcastNestedLoopJoin
     # whose build side is the whole (day, user) set.
-    df = _df(registry, spark, "window_rolling_distinct_users")
+    df = _df(registry, spark, "window_rolling_distinct_hll")
     plan = executed_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftSemi" in plan

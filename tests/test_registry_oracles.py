@@ -23,3 +23,24 @@ def test_no_two_ops_share_an_oracle_unless_listed():
             by_sql.setdefault(" ".join(spec.oracle.split()), []).append(name)
     shared = {tuple(names) for names in by_sql.values() if len(names) > 1}
     assert shared == set(SHARED_ORACLE), shared ^ set(SHARED_ORACLE)
+
+
+def test_coverage_index_lists_the_registry():
+    """COVERAGE.md's appendix table (``| `name` | tags | oracle |``)
+    lists exactly the registered ops, each with its registered tags."""
+    import pathlib
+
+    text = (pathlib.Path(__file__).parents[1] / "COVERAGE.md").read_text()
+    appendix = text.split("## Appendix: full registry index", 1)[1]
+    listed = {}
+    for line in appendix.splitlines():
+        if line.startswith("| `"):
+            name, tags = (c.strip() for c in line.strip("|").split("|")[:2])
+            listed[name.strip("`")] = tags
+    registered = {name: ", ".join(spec.tags) for name, spec in load_all().items()}
+    missing = sorted(registered.keys() - listed.keys())
+    stale = sorted(listed.keys() - registered.keys())
+    wrong_tags = sorted(
+        n for n in registered.keys() & listed.keys() if registered[n] != listed[n]
+    )
+    assert (missing, stale, wrong_tags) == ([], [], [])

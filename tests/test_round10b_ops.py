@@ -19,7 +19,7 @@ from go_integ_spark.operators.events import (
     SEASONAL_LAG_H,
     events_changepoint_cusum,
     events_forecast_eval,
-    events_hourly_gapfill,
+    hourly_gapfill,
 )
 from go_integ_spark.registry import load_all
 
@@ -137,7 +137,7 @@ class TestForecastEval:
         from collections import defaultdict
 
         by_type = defaultdict(list)
-        for r in events_hourly_gapfill(spark, SF).collect():
+        for r in hourly_gapfill(spark, SF).collect():
             by_type[r.event_type].append((r.hour_start, r.n))
         expect = {}
         for et, series in by_type.items():
@@ -205,7 +205,7 @@ class TestCusumChangepoint:
 
         hourly = {
             (r.event_type, r.hour_start): r.n
-            for r in events_hourly_gapfill(spark, SF).collect()
+            for r in hourly_gapfill(spark, SF).collect()
         }
         by_type = defaultdict(list)
         for (et, h), n in hourly.items():

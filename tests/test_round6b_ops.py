@@ -105,13 +105,22 @@ def test_sq_encode_reconstruction_beats_midpoint_bound(spark):
 
 
 def test_recall_eval_matches_direct_set_compare(spark):
+    """The probe curve's nprobe = IVF_NPROBE point is the recall@k of
+    the registered IVF index (ann_ivf_topk) against brute force: a
+    direct set compare of the two registered arms must give its hits
+    and recall_bp query by query."""
     from go_integ_spark.operators.similarity import (
+        IVF_NPROBE,
         TOP_K,
         ann_bruteforce_topk,
         ann_ivf_topk,
     )
 
-    rows = {r["query_id"]: r for r in REG["similarity_recall_eval"].fn(spark, SF_DIR).collect()}
+    rows = {
+        r["query_id"]: r
+        for r in REG["similarity_ivf_probe_recall"].fn(spark, SF_DIR).collect()
+        if r["nprobe"] == IVF_NPROBE
+    }
     truth: dict[int, set] = {}
     for r in ann_bruteforce_topk(spark, SF_DIR).collect():
         truth.setdefault(r["query_id"], set()).add(r["neighbor_id"])

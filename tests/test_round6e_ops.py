@@ -10,6 +10,7 @@ import math
 
 from go_integ_spark.operators.dedup import TRI_CC_SCALE
 from go_integ_spark.operators.similarity import (
+    IVF_NPROBE,
     N_QUERIES,
     RRF_DEPTH,
     RRF_K,
@@ -182,7 +183,8 @@ def test_ndcg_matches_recall_and_recompute(spark):
     rows = REG["similarity_ndcg_eval"].fn(spark, SF_DIR).collect()
     recall = {
         r["query_id"]: r["hits"]
-        for r in REG["similarity_recall_eval"].fn(spark, SF_DIR).collect()
+        for r in REG["similarity_ivf_probe_recall"].fn(spark, SF_DIR).collect()
+        if r["nprobe"] == IVF_NPROBE
     }
     assert {r["query_id"] for r in rows} == set(range(N_QUERIES))
     for r in rows:

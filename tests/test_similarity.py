@@ -4,11 +4,16 @@
   brute force; IVF is approximate by construction, so its contract
   is a recall floor, deterministic on this fixed corpus);
 - salted top-k equals a naive single-window top-k (the salting is a
-  pure execution-strategy change, never a result change).
+  pure execution-strategy change, never a result change);
+- hard negatives, the probe-recall curve and mined bitext pairs
+  against oracle-independent references: when the Spark query and
+  its DuckDB oracle come from one mental model, a shared flaw is
+  invisible to the value gate.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import Window
@@ -20,8 +25,11 @@ from go_integ_spark.operators.similarity import (
     ann_ivf_topk,
     salted_topk,
 )
+from go_integ_spark.registry import load_all
 
 SF_DIR = "/root/testdata/sf0.001"
+
+REG = load_all()
 
 
 @pytest.fixture(scope="module")
@@ -852,3 +860,129 @@ class TestTiledFoldKernel:
                 pd.Series(list(b)), pd.Series(bn),
             )
             assert np.array_equal(got, naive), (m, n, d)
+
+
+def test_bitext_pairs_shape(spark):
+    from go_integ_spark.operators.similarity import (
+        BITEXT_COS_FLOOR_U,
+        BITEXT_MARGIN_MIN_U,
+    )
+
+    rows = REG["similarity_bitext_pairs"].fn(spark, SF_DIR).collect()
+    assert rows, "the clustered corpus must yield mined pairs"
+    seen = set()
+    for r in rows:
+        assert r["tgt_lang"] != "en"
+        assert r["margin_u"] >= BITEXT_MARGIN_MIN_U
+        assert r["cos_u"] >= BITEXT_COS_FLOOR_U
+        key = (r["src_id"], r["tgt_lang"])
+        assert key not in seen, f"duplicate best-match for {key}"
+        seen.add(key)
+
+
+def _sims(spark):
+    emb = (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    ids = np.array([r["vec_id"] for r in emb], dtype=np.int64)
+    e = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in emb])
+    order = np.argsort(ids)
+    ids, e = ids[order], e[order]
+    norms = np.sqrt((e * e).sum(axis=1))
+    # fold-order cosine, same accumulation as fold_cosine_block
+    acc = np.zeros((len(ids), len(ids)))
+    for d in range(e.shape[1]):
+        acc += e[:, d : d + 1] * e[:, d][None, :]
+    return ids, acc / (norms[:, None] * norms[None, :])
+
+
+def test_hard_negatives_ceiling_is_the_dedup_bar():
+    """The operator's contract is 'the same corpus-wide near-dup bar
+    the dedup family uses' — pin the literal to the source constant
+    so a retune of either fails loudly (the modules can't share it
+    at module level without an import cycle)."""
+    from go_integ_spark.operators.dedup import EMB_COS_THRESHOLD
+    from go_integ_spark.operators.similarity import HARD_NEG_DUP_CEILING
+
+    assert HARD_NEG_DUP_CEILING == EMB_COS_THRESHOLD
+
+
+def test_hard_negatives_matches_numpy_reference(spark):
+    from go_integ_spark.operators.similarity import (
+        HARD_NEG_DUP_CEILING,
+        N_QUERIES,
+    )
+
+    rows = REG["similarity_hard_negatives"].fn(spark, SF_DIR).collect()
+    assert all(r["cos_sim"] < HARD_NEG_DUP_CEILING for r in rows)
+    ids, sim = _sims(spark)
+    idx = {int(v): i for i, v in enumerate(ids)}
+    want = set()
+    for q in range(N_QUERIES):
+        cands = [
+            (-sim[idx[q], idx[c]], int(c))
+            for c in ids
+            if c != q and sim[idx[q], idx[c]] < HARD_NEG_DUP_CEILING
+        ]
+        cands.sort()
+        for rank, (_, c) in enumerate(cands[:TOP_K], start=1):
+            want.add((q, c, rank))
+    got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in rows}
+    assert got == want and len(got) > 0
+
+
+def test_hard_negatives_leave_out_a_planted_near_copy(spark, tmp_path):
+    """No top-k neighbour of the gate corpora's queries reaches the
+    near-dup ceiling, so there the op returns exactly brute force's
+    rows. Planted corpus: query 0 gets a near-copy (cos ~0.9) that
+    brute force ranks first; hard negatives must leave it out and
+    move every other neighbour up one rank."""
+    from go_integ_spark.operators.similarity import (
+        HARD_NEG_DUP_CEILING,
+        similarity_hard_negatives,
+    )
+
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((40, 64))
+    vecs[5] = vecs[0] + 0.5 * rng.standard_normal(64)
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<float>, label bigint",
+    ).write.parquet(path + "/embeddings.parquet")
+
+    def ranked(df, q):
+        return [
+            (r["neighbor_id"], r["cos_sim"])
+            for r in sorted(
+                df.filter(F.col("query_id") == q).collect(),
+                key=lambda r: r["rank"],
+            )
+        ]
+
+    brute = ranked(ann_bruteforce_topk(spark, path), 0)
+    hard = ranked(similarity_hard_negatives(spark, path), 0)
+    assert brute[0][0] == 5 and brute[0][1] >= HARD_NEG_DUP_CEILING, brute
+    assert all(s < HARD_NEG_DUP_CEILING for _, s in brute[1:]), brute
+    assert len(hard) == TOP_K
+    assert 5 not in [n for n, _ in hard]
+    assert hard[: TOP_K - 1] == brute[1:], (hard, brute)
+
+
+def test_probe_recall_curve_monotone(spark):
+    """Recall@k must be non-decreasing in nprobe: a candidate set only
+    grows. (The nprobe = IVF_NPROBE point is pinned against a direct
+    set compare of the registered arms in
+    test_round6b_ops.py::test_recall_eval_matches_direct_set_compare.)"""
+    from go_integ_spark.operators.similarity import IVF_PROBE_CURVE
+
+    rows = REG["similarity_ivf_probe_recall"].fn(spark, SF_DIR).collect()
+    by_q: dict[int, dict[int, int]] = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], {})[r["nprobe"]] = r["recall_bp"]
+    assert by_q, "empty curve"
+    for q, pts in by_q.items():
+        seq = [pts[p] for p in IVF_PROBE_CURVE if p in pts]
+        assert seq == sorted(seq), f"recall not monotone for query {q}: {pts}"

@@ -1,6 +1,7 @@
-"""Bigram language-model scoring invariants (the oracle sweep covers
-value-exactness; these pin the MODEL semantics on a controlled
-micro-corpus)."""
+"""Language-model scoring invariants (the oracle sweep covers
+value-exactness; these pin the MODEL semantics on controlled
+micro-corpora, and the perplexity buckets' geometry on the gate
+corpus)."""
 
 from __future__ import annotations
 
@@ -170,3 +171,37 @@ def test_bpe_oracle_survives_early_merge_exhaustion(spark, tmp_path):
         want = sorted(map(tuple, con.execute(REGISTRY[name].oracle).fetchall()))
         assert got == want, name
         assert got, f"{name}: empty result on the exhausted corpus"
+
+
+def test_perplexity_buckets_geometry(spark):
+    from go_integ_spark.registry import load_all
+
+    rows = load_all()["text_perplexity_buckets"].fn(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    by_lang: dict[str, list] = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append(r)
+    assert len(by_lang) >= 2
+    for lang, rs in by_lang.items():
+        n = len(rs)
+        counts = {"head": 0, "middle": 0, "tail": 0}
+        for r in rs:
+            counts[r["ppl_bucket"]] += 1
+        # Value thresholds put ties in the better bucket, so head and
+        # head+middle can only EXCEED their rank targets, never fall
+        # short; all three cover the scored set exactly.
+        assert counts["head"] >= math.ceil(n / 3), (lang, counts)
+        assert counts["head"] + counts["middle"] >= math.ceil(2 * n / 3)
+        assert sum(counts.values()) == n
+        # Score ordering respects bucket ordering: every head score >=
+        # every middle score >= every tail score.
+        worst = {}
+        best = {}
+        for r in rs:
+            b = r["ppl_bucket"]
+            worst[b] = min(worst.get(b, r["avg_logp"]), r["avg_logp"])
+            best[b] = max(best.get(b, r["avg_logp"]), r["avg_logp"])
+        for hi, lo in (("head", "middle"), ("middle", "tail")):
+            if hi in worst and lo in best:
+                assert worst[hi] >= best[lo], (lang, worst, best)
