@@ -214,6 +214,41 @@ def test_numpy_xxh64_matches_spark(spark):
     assert np.array_equal(exp[:, 2], as_signed(spark_xxhash64_longs(vals, pair)))
 
 
+def test_minhash_kernel_matches_jvm_expression(spark):
+    """Every per-permutation minhash of the band-bucket kernel must be
+    EXACTLY the JVM expression
+    h_i = array_min(transform(sids, s -> xxhash64(lit(i), s))).
+    With one row per band each bucket folds a single minhash
+    (xxhash64(lit(i), h_i)), so all NUM_PERM minima are pinned one by
+    one, at their own position, rather than in pairs."""
+    from pyspark.sql import functions as F
+
+    from go_integ_spark.operators.dedup import NUM_PERM, lsh_band_buckets
+
+    sets_ = doc_shingle_sets(load_table(spark, SF_DIR, "documents"))
+    new = lsh_band_buckets(sets_, bands=NUM_PERM, rows=1).select(
+        "doc_id", F.posexplode("buckets").alias("i", "bucket")
+    )
+    per_perm = F.array(
+        *[
+            F.xxhash64(
+                F.lit(i),
+                F.array_min(
+                    F.transform(
+                        F.col("sids"),
+                        (lambda i: lambda s: F.xxhash64(F.lit(i), s))(i),
+                    )
+                ),
+            )
+            for i in range(NUM_PERM)
+        ]
+    )
+    old = sets_.select("doc_id", F.posexplode(per_perm).alias("i", "bucket"))
+    assert new.count() == old.count() > 0
+    assert new.exceptAll(old).count() == 0
+    assert old.exceptAll(new).count() == 0
+
+
 def test_containment_catches_asymmetric_duplication(spark, tmp_path):
     """A short doc quoted wholesale inside a long one must be flagged
     by containment (cont = 1.0) even though its Jaccard is far below
